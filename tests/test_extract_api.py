@@ -105,3 +105,23 @@ def test_landmarking_sanity():
     s_seas = LM.landmark_scores(per, "model_naive_seasonal", period=12)
     s_naive = LM.landmark_scores(per, "model_naive")
     assert np.nanmean(s_seas) < np.nanmean(s_naive)
+
+
+def test_fused_extract_emits_no_rows_for_empty_feature(spark):
+    """A feature whose value array is empty (acf of a 2-point series
+    asks for 0 lags) has no rows to summarize: the fused summary path
+    emits none for it, as the separate summarize() stage did, instead
+    of NaN summary rows."""
+    assert K.acf(np.array([1.0, 3.0]), nlags=0).size == 0
+    rows = [("c2", i, v) for i, v in enumerate([1.0, 3.0])] + [
+        ("c9", i, float(v)) for i, v in enumerate([4, 1, 7, 2, 8, 3, 9, 5, 6])
+    ]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, value double")
+    eng = TSMFESpark(features=["acf", "dw"], summaries=("mean", "sd"))
+    res = eng.extract(df).toPandas()
+    short = res[res.conv_id == "c2"]
+    assert not short.name.str.startswith("acf").any()
+    assert list(short.name) == ["dw"]
+    long_ = res[res.conv_id == "c9"].set_index("name")["value"]
+    assert {"acf.mean", "acf.sd", "dw"} <= set(long_.index)
+    assert not np.isnan(long_["acf.mean"])

@@ -27,7 +27,7 @@ def main() -> None:
     from ts_pymfe_spark.operators.derive import series_of
     from ts_pymfe_spark.session import get_spark
 
-    spark = get_spark("kernel_ranking", cpus=32, shuffle_partitions=32)
+    spark = get_spark("kernel_ranking")
     turns = spark.read.parquet(f"{sf_dir}/events.parquet")
     # events.parquet lacks turn semantics in some SFs; fall back to the
     # synthetic generator shape if the driver table is absent

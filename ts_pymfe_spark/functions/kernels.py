@@ -156,25 +156,26 @@ def first_local_min(arr: np.ndarray) -> float:
 # statsmodels/supersmoother are unavailable in this environment)
 # ---------------------------------------------------------------------------
 
-def _loess(y: np.ndarray, q: int, degree: int = 1,
-           xeval: np.ndarray | None = None) -> np.ndarray:
-    """1-D loess at integer design points (Cleveland 1979 as used inside
-    STL): for each evaluation point take the ``q`` nearest neighbours,
-    tricube weights, weighted degree-1 fit.  For q > n the
-    neighbourhood radius is inflated by q/n (STL paper §2).
+def _loess_plan(n: int, q: int, xeval: np.ndarray | None = None):
+    """Weights of a 1-D loess at integer design points (Cleveland 1979
+    as used inside STL): for each evaluation point take the ``q``
+    nearest neighbours, tricube weights, weighted degree-1 fit.  For
+    q > n the neighbourhood radius is inflated by q/n (STL paper §2).
 
-    Fully vectorized: on the regular integer grid the q-nearest
-    neighbourhood is a CONTIGUOUS window, so all evaluation points
-    batch into one (n_eval × q) weighted-regression einsum instead of a
-    Python loop (the loop form measured ~110 ms per 512-pt series —
-    ~20× this)."""
-    y = np.asarray(y, dtype=float)
-    n = y.size
-    if xeval is None:
-        xeval = np.arange(n, dtype=float)
-    xe = np.asarray(xeval, dtype=float)
+    On the regular integer grid the q-nearest neighbourhood is a
+    CONTIGUOUS window, so all evaluation points batch into one
+    (n_eval × q) gather.  Everything that depends only on (n, q, xeval)
+    — the window indices, the weights and the weight moments sw, swx,
+    swxx, the determinant and the degenerate mask — is computed here
+    once; ``_loess_apply`` then costs one gather and two weighted sums
+    per call, whatever the number of series smoothed together.
+
+    A length-1 series plans as a plain gather of y[0]: the general
+    formula gives (w·y)/w there, which can be 1 ulp off y[0]."""
+    xe = (np.arange(n, dtype=float) if xeval is None
+          else np.asarray(xeval, dtype=float))
     if n == 1:
-        return np.full(xe.size, y[0])
+        return np.zeros(xe.size, dtype=int), None
     qe = min(q, n)
     half = (qe - 1) // 2
     s = np.clip(np.rint(xe).astype(int) - half, 0, n - qe)
@@ -185,20 +186,38 @@ def _loess(y: np.ndarray, q: int, degree: int = 1,
         lam = lam * (q / n)
     lam = np.maximum(lam, 1e-300)
     w = np.clip(1.0 - (np.abs(xc) / lam[:, None]) ** 3, 0.0, None) ** 3
-    Y = y[idx]
+    wxc = w * xc
     sw = w.sum(axis=1)
-    swx = (w * xc).sum(axis=1)
-    swxx = (w * xc * xc).sum(axis=1)
-    swy = (w * Y).sum(axis=1)
-    swxy = (w * xc * Y).sum(axis=1)
-    if degree == 0:
-        return swy / sw
+    swx = wxc.sum(axis=1)
+    swxx = (wxc * xc).sum(axis=1)
     det = sw * swxx - swx * swx
+    # degenerate neighbourhood (all weight on one point): weighted mean
+    ok = det > 1e-12 * np.maximum(sw * swxx, 1e-300)
+    return idx, (w, wxc, swx, swxx, det, ok, np.maximum(sw, 1e-300))
+
+
+def _loess_apply(plan, Y: np.ndarray) -> np.ndarray:
+    """Apply a ``_loess_plan`` to ``Y`` of shape (..., n): every row
+    along the last axis is smoothed with the same weights, giving
+    (..., n_eval).  Sums run along the last, contiguous axis in the
+    same association order as a one-series fit, so a batched row is
+    bit-identical to smoothing that row alone."""
+    idx, wts = plan
+    G = np.asarray(Y, dtype=float)[..., idx]
+    if wts is None:
+        return G
+    w, wxc, swx, swxx, det, ok, sw_safe = wts
+    swy = (w * G).sum(axis=-1)
+    swxy = (wxc * G).sum(axis=-1)
     with np.errstate(divide="ignore", invalid="ignore"):
         fit = (swxx * swy - swx * swxy) / det
-    # degenerate neighbourhood (all weight on one point): weighted mean
-    return np.where(det > 1e-12 * np.maximum(sw * swxx, 1e-300),
-                    fit, swy / np.maximum(sw, 1e-300))
+    return np.where(ok, fit, swy / sw_safe)
+
+
+def _loess(y: np.ndarray, q: int, xeval: np.ndarray | None = None) -> np.ndarray:
+    """One-series degree-1 loess (see ``_loess_plan``)."""
+    y = np.asarray(y, dtype=float)
+    return _loess_apply(_loess_plan(y.size, q, xeval), y)
 
 
 def _ma_valid(x: np.ndarray, w: int) -> np.ndarray:
@@ -226,33 +245,48 @@ def stl_decompose(ts: np.ndarray, period: int, seasonal: int = 7,
     Non-robust inner count 5, matching statsmodels STL.fit's
     inner_iter default when robust=False (it is 2 only when
     robust=True), since the reference calls STL(ts, period).fit()
-    non-robust (``_detrend.py:100-115``)."""
+    non-robust (``_detrend.py:100-115``).
+
+    Step 2 is batched: D, viewed as a (period, M) grid with
+    M = ceil(n / period), holds phase p's subseries in row p.  The
+    first r = n − (M−1)·period rows have M points, the rest M−1, so
+    all subseries are smoothed by at most two ``_loess_apply`` calls.
+    Their fits land in a (period, M+2) grid whose flattened transpose
+    is C: evaluation point j of phase p is time p + (j−1)·period, i.e.
+    C[p + j·period].  The loess weights depend only on (n, q, xeval),
+    so the subseries, low-pass and trend plans are built once per call,
+    not once per inner iteration.  A length-1 subseries (period > n/2)
+    is fitted and extended as its single value exactly, as the
+    per-phase loop did; the output is bit-identical to that loop."""
     x = np.asarray(ts, dtype=float)
     n = x.size
     period = int(period)
     tl = int(math.ceil(1.5 * period / (1 - 1.5 / seasonal)))
     tl += 1 - tl % 2          # force odd
     lp = period + 1 + (period % 2)  # smallest odd > period
+    M = -(-n // period)
+    r = n - (M - 1) * period
+    groups = [(slice(0, r), M)] + ([(slice(r, period), M - 1)] if r < period else [])
+    sub_plans = [
+        (rows, m, _loess_plan(m, seasonal, np.arange(-1, m + 1, dtype=float)))
+        for rows, m in groups
+    ]
+    lp_plan = _loess_plan(n, lp)
+    tl_plan = _loess_plan(n, tl)
+    Dpad = np.zeros(M * period)
+    G = np.empty((period, M + 2))
     T = np.zeros(n)
     S = np.zeros(n)
     for _ in range(inner):
-        D = x - T
-        C = np.empty(n + 2 * period)
-        for p in range(period):
-            sub = D[p::period]
-            m = sub.size
-            ev = np.arange(-1, m + 1, dtype=float)
-            sm = _loess(sub, q=seasonal, degree=1, xeval=ev)
-            # time of ev j is p + j*period; C index = time + period,
-            # so ev j lands at C[p + (j+1)*period]; ev=-1 at C[p]
-            idx = p + period + np.arange(m) * period
-            C[idx] = sm[1:-1]
-            C[p] = sm[0]
-            C[p + (m + 1) * period] = sm[-1]
+        Dpad[:n] = x - T
+        grid = Dpad.reshape(M, period).T
+        for rows, m, plan in sub_plans:
+            G[rows, : m + 2] = _loess_apply(plan, grid[rows, :m])
+        C = G.T.ravel()[: n + 2 * period]
         L = _ma_valid(_ma_valid(_ma_valid(C, period), period), 3)
-        L = _loess(L, q=lp, degree=1)
+        L = _loess_apply(lp_plan, L)
         S = C[period: period + n] - L
-        T = _loess(x - S, q=tl, degree=1)
+        T = _loess_apply(tl_plan, x - S)
     return T, S, x - T - S
 
 

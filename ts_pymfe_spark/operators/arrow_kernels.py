@@ -119,11 +119,6 @@ FEATURE_KERNELS.update(
 )
 
 # stat tests, model-based, embedding, chaos, remaining local/info ops
-def _decomp_part(x, part):
-    trend, season, resid = K.decompose(x)
-    return {"trend": trend, "season": season, "resid": resid}[part]
-
-
 FEATURE_KERNELS.update(
     {
         # stat tests (reference stat_tests.py)
@@ -552,8 +547,11 @@ def series_features(
             arr = np.atleast_1d(np.asarray(res, dtype=float))
             if summarized:
                 # exactly summarize()'s convention: single rows pass
-                # through with summary '', arrays reduce
-                if arr.size == 1:
+                # through with summary '', arrays reduce, and an empty
+                # array has no feature rows to summarize, so no rows
+                if arr.size == 0:
+                    rows = []
+                elif arr.size == 1:
                     rows = [("", float(arr[0]))]
                 else:
                     rows = summarize_array(arr, summ_names)

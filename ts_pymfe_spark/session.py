@@ -15,7 +15,26 @@ from pyspark.sql import SparkSession
 # Number of shuffle partitions is sized to cores locally; on a real
 # cluster you would size it to 2-3x total executor cores and let AQE
 # coalesce (spark.sql.adaptive.coalescePartitions.enabled) shrink it.
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Defaults fit the host; SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM
+# override them.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def default_driver_memory() -> str:
+    """$SPARK_GRAFT_DRIVER_MEM, else min(16g, half of physical memory):
+    a flat 16g driver heap would overcommit a host with 16 GB of RAM
+    or less."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(16384, int(line.split()[1]) // 2048)}m"
+    except OSError:
+        pass
+    return "16g"
 
 
 def get_spark(
@@ -64,7 +83,7 @@ def get_spark(
         # retention) cannot see batch time ranges.  Micros is also
         # what Iceberg mandates, keeping the stand-in swap-compatible.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
