@@ -4638,6 +4638,26 @@ def _last_green_round() -> dict[str, int]:
     return out
 
 
+def _driver_window_key(green: dict[str, int] | None = None):
+    """Sort key of the driver correctness window: (last-green round,
+    _DRIVER_PRIORITY rank, registration order).  ``green`` defaults to
+    the committed artifacts (``_last_green_round()``).
+
+    VERDICT r5 item #1's literal done-criterion: the six r4-greens
+    rotated out of the r5 window must land in the r06 window (union of
+    r05+r06 green for every query registered then).  They are forced
+    window-ward until a round-6 artifact exists — the force expires by
+    itself once they pick up their r06 row."""
+    green = dict(_last_green_round() if green is None else green)
+    if not green or max(green.values()) <= 5:
+        for n in ("ann_ivf", "emb_label_stats", "emb_neardup",
+                  "moving_acf", "rescale_minmax", "rescale_robust"):
+            green.pop(n, None)
+    rank = {n: i for i, n in enumerate(_DRIVER_PRIORITY)}
+    reg = {n: i for i, n in enumerate(_REG)}
+    return lambda n: (green.get(n, 0), rank.get(n, -1), reg[n])
+
+
 def _reorder_registry() -> None:
     """Auto-rotate the driver correctness window (round 6): the driver
     compares roughly the FIRST 50 registered queries each round, so
@@ -4647,22 +4667,7 @@ def _reorder_registry() -> None:
     and a freshly added query leads the NEXT round's window without
     manual list surgery.  _DRIVER_PRIORITY stays the deterministic
     tiebreak (and the full-name inventory the pin test checks)."""
-    green = _last_green_round()
-    # VERDICT r5 item #1's literal done-criterion: the six r4-greens
-    # rotated out of the r5 window must land in the r06 window (union
-    # of r05+r06 green for every query registered then).  Force them
-    # window-ward until a round-6 artifact exists — the force expires
-    # by itself once they pick up their r06 row.
-    if not green or max(green.values()) <= 5:
-        for n in ("ann_ivf", "emb_label_stats", "emb_neardup",
-                  "moving_acf", "rescale_minmax", "rescale_robust"):
-            green.pop(n, None)
-    rank = {n: i for i, n in enumerate(_DRIVER_PRIORITY)}
-    order = sorted(
-        _REG,
-        key=lambda n: (green.get(n, 0), rank.get(n, -1),
-                       list(_REG).index(n)),
-    )
+    order = sorted(_REG, key=_driver_window_key())
     items = {n: _REG[n] for n in order}
     _REG.clear()
     _REG.update(items)

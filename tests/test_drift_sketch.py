@@ -604,11 +604,21 @@ def test_driver_window_is_the_planned_set():
     assert outside == [], f"never-green queries outside the window: {outside}"
 
     # And the full order must be exactly what the rotation computes
-    # from its inputs — ascending last-green round, _DRIVER_PRIORITY
-    # as the deterministic tiebreak.
-    rank = {n: i for i, n in enumerate(e._DRIVER_PRIORITY)}
-    expected = sorted(names, key=lambda n: (green.get(n, 0), rank.get(n, -1)))
-    assert names == expected
+    # from its inputs, with the production sort key (force-expire pop,
+    # ascending last-green round, _DRIVER_PRIORITY, registration order).
+    assert names == sorted(names, key=e._driver_window_key())
+
+
+def test_driver_window_key_force_expires():
+    """The six r4-greens sort as never-green until some query has a
+    round-6 (or later) green row, then by their own last-green round."""
+    import __spark_entry__ as e
+
+    forced = e._driver_window_key({"ann_ivf": 4, "rollup_1m": 5})
+    assert forced("ann_ivf")[0] == 0
+    assert forced("rollup_1m")[0] == 5
+    expired = e._driver_window_key({"ann_ivf": 4, "rollup_1m": 6})
+    assert expired("ann_ivf")[0] == 4
 
 
 class TestTextQuality6:

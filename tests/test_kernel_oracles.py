@@ -748,6 +748,255 @@ def test_stl_batched_bit_identical_to_loop(n, period):
                 assert np.array_equal(a, b), kind
 
 
+def _pacf_lag_reference(x0, k):
+    """Unadjusted lag-k coefficient: lstsq of x0_t on [1, x0_{t-1..t-k}]
+    over rows t = k..n-1."""
+    n = x0.size
+    cols = [x0[k - j - 1: n - j - 1] for j in range(k)]
+    X = np.column_stack([np.ones(n - k)] + cols)
+    beta, *_ = np.linalg.lstsq(X, x0[k:], rcond=None)
+    return beta[-1]
+
+
+def _pacf_ols_loop_reference(ts, nlags, adjusted=True):
+    """pacf_ols as one lstsq per lag (the pre-Cholesky implementation)."""
+    x = np.asarray(ts, dtype=float)
+    n = x.size
+    nlags = min(nlags, n // 2 - 1) if n >= 4 else 0
+    out = np.full(nlags, np.nan)
+    x0 = x - x.mean()
+    for k in range(1, nlags + 1):
+        coef = _pacf_lag_reference(x0, k)
+        if adjusted:
+            coef *= n / (n - k)
+        out[k - 1] = coef
+    return out
+
+
+def _spy_pacf_fallback(monkeypatch):
+    """Record every call pacf_ols makes to its per-lag fallback."""
+    fell_back = []
+    loop = K._pacf_ols_loop
+
+    def spy(*args):
+        fell_back.append(True)
+        return loop(*args)
+
+    monkeypatch.setattr(K, "_pacf_ols_loop", spy)
+    return fell_back
+
+
+def _ar_series(n, phi, seed):
+    rng = np.random.default_rng(seed)
+    x = np.zeros(n)
+    for i in range(1, n):
+        x[i] = phi * x[i - 1] + rng.standard_normal()
+    return x
+
+
+def _pacf_inputs(n):
+    rng = np.random.default_rng(n)
+    t = np.arange(n, dtype=float)
+    sine = np.sin(2 * np.pi * t / 12)
+    ar = np.zeros(n)
+    for i in range(1, n):
+        ar[i] = 0.99 * ar[i - 1] + rng.standard_normal()
+    spike = np.zeros(n)
+    spike[n // 2] = 1.0
+    return {
+        "gaussian": rng.standard_normal(n),
+        "lognormal": rng.lognormal(size=n) * 1e3,
+        "random_walk": np.cumsum(rng.standard_normal(n)),
+        "ar_0.99": ar,
+        "near_constant": 1 + 1e-7 * rng.standard_normal(n),
+        "sine_1e-3": sine + 1e-3 * rng.standard_normal(n),
+        "sine_1e-4": sine + 1e-4 * rng.standard_normal(n),
+        "sine_1e-6": sine + 1e-6 * rng.standard_normal(n),
+        "sine": sine,
+        "ramp": t,
+        "ramp_1e-9": t + 1e-9 * rng.standard_normal(n),
+        "t_squared": t ** 2,
+        "t_mod_2": t % 2,
+        "t_mod_5": t % 5,
+        "constant": np.full(n, 3.0),
+        "spike": spike,
+        "sparse_01": (rng.random(n) < 0.1).astype(float),
+    }
+
+
+#: rank-deficient designs (lstsq returns the minimum-norm solution)
+#: and a badly scaled one (lstsq's own error is ~1e-9): only the
+#: per-lag fallback reproduces either
+_PACF_MUST_FALL_BACK = ("constant", "ramp", "sine", "t_mod_2", "t_mod_5",
+                        "near_constant")
+
+
+def _check_pacf_matrix(n, monkeypatch):
+    fell_back = _spy_pacf_fallback(monkeypatch)
+    nlags = max(1, 1 + n // 10)
+    for kind, x in _pacf_inputs(n).items():
+        fell_back.clear()
+        ref = _pacf_ols_loop_reference(x, nlags)
+        got = K.pacf_ols(x, nlags)
+        assert got.shape == ref.shape, kind
+        if fell_back:
+            assert np.array_equal(got, ref, equal_nan=True), kind
+        else:
+            assert np.max(np.abs(got - ref), initial=0.0) <= 1e-9, kind
+        if kind in _PACF_MUST_FALL_BACK and ref.size > 1:
+            assert fell_back, kind
+
+
+@pytest.mark.parametrize("n", [4, 5, 9, 451, 512])
+def test_pacf_ols_cholesky_matches_lstsq_loop(n, monkeypatch):
+    """One-Cholesky pacf vs the per-lag lstsq loop: max |Δ| ≤ 1e-9 on
+    every input, and exactly equal on the inputs that take the
+    rank-deficient fallback (which every degenerate design must)."""
+    _check_pacf_matrix(n, monkeypatch)
+
+
+@pytest.mark.parametrize("n", [9, 451, 512])
+def test_pacf_ols_small_chunks_match_lstsq_loop(n, monkeypatch):
+    """The same contract when a tiny Gram budget splits the lags into
+    many chunks (1 to 6 lags each), so every chunk boundary and the
+    rank-1 carry of H between chunks is exercised."""
+    monkeypatch.setattr(K, "_PACF_CHUNK_ELEMS", 600)
+    _check_pacf_matrix(n, monkeypatch)
+
+
+def test_pacf_ols_memory_bounded_at_4096_points(monkeypatch):
+    """Extract's default max_points is 4096 (K = 410 lags).  The chunked
+    Gram keeps the peak allocation near the per-lag loop's (~23 MiB
+    there) instead of the ~2 GiB a single (K, K+2, K+2) stack takes,
+    and the lags at both ends of the first chunk match lstsq."""
+    import tracemalloc
+
+    fell_back = _spy_pacf_fallback(monkeypatch)
+    n = 4096
+    x = _ar_series(n, 0.6, seed=n)
+    nlags = 1 + n // 10
+    tracemalloc.start()
+    try:
+        got = K.pacf_ols(x, nlags)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert not fell_back
+    assert peak < 64 * 2 ** 20, peak
+    c = K._PACF_CHUNK_ELEMS // (nlags + 2) ** 2
+    assert 1 < c < nlags
+    x0 = x - x.mean()
+    for k in (1, 2, nlags - c, nlags - c + 1, nlags):
+        ref = _pacf_lag_reference(x0, k) * n / (n - k)
+        assert abs(got[k - 1] - ref) <= 1e-9, k
+
+
+def test_pacf_ols_scale_guard_only_for_tiny_sd(monkeypatch):
+    """pacf is scale-invariant.  Below sd ~1e-6 (next to the intercept
+    column of ones) the series takes the lstsq loop and returns it
+    exactly.  Any larger sd keeps the Cholesky, which stays within 1e-9
+    of the loop on the standardised series up to sd 1e12 (where the
+    loop on the scaled series itself is off by up to ~1e-6)."""
+    fell_back = _spy_pacf_fallback(monkeypatch)
+    n = 512
+    nlags = 1 + n // 10
+    base = _ar_series(n, 0.6, seed=5)
+    base /= base.std()
+    truth = _pacf_ols_loop_reference(base, nlags)
+    for sd in (1e-9, 1e-8, 1e-7, 1e-5, 1e-3, 1e3, 1e6, 1e9, 1e12):
+        x = 5.0 + sd * base
+        fell_back.clear()
+        got = K.pacf_ols(x, nlags)
+        if sd < 1e-6:
+            assert fell_back, sd
+            assert np.array_equal(got, _pacf_ols_loop_reference(x, nlags)), sd
+        else:
+            assert not fell_back, sd
+            assert np.max(np.abs(got - truth)) <= 1e-9, sd
+
+
+def _approx_entropy_reference(ts, m=2, factor=0.2, max_n=512):
+    x = np.asarray(ts, dtype=float)
+    if x.size > max_n:
+        x = x[-max_n:]
+    r = factor * x.std(ddof=0)
+    phis = {}
+    for d, rows, D in K._cheb_dist_by_dim(x, m + 1):
+        if d in (m, m + 1):
+            c = (D <= r).sum(axis=1) / rows
+            phis[d] = float(np.mean(np.log(c)))
+    return phis[m] - phis[m + 1]
+
+
+def _sample_entropy_reference(ts, m=2, factor=0.2, max_n=512):
+    x = np.asarray(ts, dtype=float)
+    if x.size > max_n:
+        x = x[-max_n:]
+    r = factor * x.std(ddof=0)
+    counts = {}
+    for d, rows, D in K._cheb_dist_by_dim(x, m + 1):
+        if d in (m, m + 1):
+            iu = np.triu_indices(rows, k=1)
+            counts[d] = int((D[iu] <= r).sum())
+    a, b = counts[m + 1], counts[m]
+    if b == 0 or a == 0:
+        return np.nan
+    return -math.log(a / b)
+
+
+@pytest.mark.parametrize("n", [40, 300, 700])
+@pytest.mark.parametrize("m", [1, 2, 3])
+def test_entropies_from_shared_counts_bit_identical(n, m):
+    """approx_entropy/sample_entropy read one memoized match-count pass
+    and count pairs as (Σ rowcount − self-matches) // 2: bit-identical
+    to the per-kernel passes with triu_indices, also past the 512-point
+    truncation, on r = 0 (constant input) and on r = NaN (a NaN in the
+    series: no diagonal self-match either)."""
+    rng = np.random.default_rng(n + m)
+    with_nan = rng.standard_normal(n)
+    with_nan[-3] = np.nan
+    inputs = {
+        "gaussian": rng.standard_normal(n),
+        "lognormal": rng.lognormal(size=n) * 1e3,
+        "constant": np.full(n, 4.0),
+        "sparse_01": (rng.random(n) < 0.1).astype(float),
+        "with_nan": with_nan,
+    }
+    for kind, x in inputs.items():
+        with np.errstate(divide="ignore"):
+            pairs = [
+                (_approx_entropy_reference(x, m=m), K.approx_entropy(x, m=m)),
+                (_sample_entropy_reference(x, m=m), K.sample_entropy(x, m=m)),
+                (_approx_entropy_reference(x, m=m),
+                 K.approx_entropy(x, m=m, memo=False)),
+            ]
+        for ref, got in pairs:
+            assert (np.isnan(ref) and np.isnan(got)) or ref == got, kind
+
+
+def test_moving_approx_ent_keeps_series_memo():
+    """The rolling ApEn's windows bypass the 8-entry kernel memo, so the
+    series' own decomp entry survives and no window key is added; a
+    series with a NaN adds one shared entropy entry, not one per
+    kernel call."""
+    from ts_pymfe_spark.operators import arrow_kernels as AK
+
+    x = np.random.default_rng(3).standard_normal(400)
+    K._MEMO.clear()
+    K.decompose(x)
+    before = set(K._MEMO)
+    assert any(key[0] == "decomp" and key[1] == x.tobytes() for key in before)
+    AK._moving_approx_ent(x)
+    assert set(K._MEMO) == before
+    # a NaN makes r NaN: both entropies still share one entry
+    xn = x.copy()
+    xn[7] = np.nan
+    with np.errstate(divide="ignore"):
+        K.approx_entropy(xn)
+        K.sample_entropy(xn)
+    assert len(set(K._MEMO) - before) == 1
+
+
 # ---------------------------------------------------------------------------
 # Batch 2: remaining self-only rows (selectors, spectral pickers,
 # landmarker families, perturbation/surprise, embedding lag)

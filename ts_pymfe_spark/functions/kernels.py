@@ -71,14 +71,120 @@ def acf(ts: np.ndarray, nlags: int | None = None, adjusted: bool = True) -> np.n
     return (acov / c0)[1:]
 
 
+#: Smallest pivot L_jj² (of the diagonal-equilibrated Gram, so a value
+#: in [0, 1]: one minus the R² of column j on the columns before it)
+#: pacf_ols accepts from its Cholesky before it falls back to lstsq.
+_PACF_MIN_PIVOT = 1e-6
+#: Smallest lag-column to intercept-column norm ratio (about the series
+#: sd) pacf_ols accepts.  lstsq does not equilibrate, so when the
+#: centred series is tiny next to the intercept column of ones its own
+#: error grows (~2e-9 at sd 1e-7); below this ratio the series takes
+#: the loop and keeps the loop's answer exactly.  There is no upper
+#: bound: past sd ~1e8 lstsq drifts too (up to ~1e-5 at sd 1e12), but
+#: the equilibrated Cholesky does not, so it is the better answer there.
+_PACF_MIN_SCALE = 1e-6
+#: Element budget of one stacked Gram block (8 MB of float64): lags are
+#: factored in chunks of at most this many (k+2)² elements, so memory
+#: stays O(n·K) plus a fixed block instead of O(K³).
+_PACF_CHUNK_ELEMS = 1 << 20
+
+
 def pacf_ols(ts: np.ndarray, nlags: int, adjusted: bool = True) -> np.ndarray:
     """Partial autocorrelation via per-lag OLS (statsmodels
     ``pacf(method='ols-adjusted')``, used at ``autocorr.py:194-250``):
-    regress x_t on [1, x_{t-1..t-k}]; pacf(k) = last coefficient,
-    scaled by n/(n-k) when adjusted.  Returns lags 1..nlags."""
+    regress x_t on [1, x_{t-1..t-k}] over rows t = k..n-1 (statsmodels'
+    ``efficient=True`` per-lag sample); pacf(k) = last coefficient,
+    scaled by n/(n-k) when adjusted.  Returns lags 1..nlags.
+
+    All lags come from one Gram matrix and batched Choleskys instead of
+    one ``lstsq`` per lag.  With ``Z = [1, x_{t-1..t-K}, x_t]``,
+    ``H_K = Z[K:]ᵀZ[K:]`` and ``H_k = H_{k+1} + z_k z_kᵀ`` (a reverse
+    cumulative sum).  Each ``H_k`` is masked to columns {0..k, y} (the
+    masked diagonal set to 1) and equilibrated by its diagonal, so
+    pacf(k) = L[y,k]/L[k,k] · d_y/d_k: the last coefficient of the
+    regression read off the Cholesky factor.  Lags are stacked in
+    chunks of at most ``_PACF_CHUNK_ELEMS`` elements (one chunk for
+    every K ≤ 100), each chunk cut to the columns its highest lag uses.
+    Agrees with the per-lag loop to max |Δ| ≤ 1e-9, not bit for bit
+    (for sd above ~1e8, with the loop on the standardised series).
+
+    Guards: lstsq's answer on a rank-deficient design is the
+    minimum-norm solution, which normal equations cannot reproduce.
+    So if a Cholesky fails or any design pivot L_jj² is below
+    ``_PACF_MIN_PIVOT`` (constant, ramp, exact-sine, periodic-integer
+    series), or a lag column's norm is below ``_PACF_MIN_SCALE`` times
+    the intercept's (series sd below ~1e-6, where lstsq's own error
+    exceeds the tolerance), the whole series takes ``_pacf_ols_loop``
+    and its result is the loop's exactly."""
     x = np.asarray(ts, dtype=float)
     n = x.size
     nlags = min(nlags, n // 2 - 1) if n >= 4 else 0
+    if nlags < 1:
+        return np.empty(0)
+    x0 = x - x.mean()
+    # Z[t] = [1, x0_{t-1}, ..., x0_{t-K}, x0_t]; lags before t = 0 are 0
+    # and only ever land in columns j > t ≥ k, which H_k's mask drops.
+    lagged = np.lib.stride_tricks.sliding_window_view(
+        np.concatenate([np.zeros(nlags), x0]), nlags + 1)[:, ::-1]
+    Z = np.column_stack([np.ones(n), lagged[:, 1:], x0])
+    G = Z[nlags:].T @ Z[nlags:]
+    out = np.empty(nlags)
+    k_hi = nlags
+    while k_hi >= 1:
+        c = max(1, min(k_hi, _PACF_CHUNK_ELEMS // (k_hi + 2) ** 2))
+        coef = _pacf_chunk(Z, G, k_hi, c)
+        if coef is None:
+            return _pacf_ols_loop(x, nlags, adjusted)
+        out[k_hi - c:k_hi] = coef
+        rows = Z[k_hi - c:k_hi]
+        G += rows.T @ rows  # now H_{k_hi - c}
+        k_hi -= c
+    if adjusted:
+        out *= n / (n - np.arange(1, nlags + 1))
+    return out
+
+
+def _pacf_chunk(Z: np.ndarray, G: np.ndarray, k_hi: int, c: int):
+    """Unadjusted pacf(k) for lags k = k_hi-c+1..k_hi, given
+    ``G = H_{k_hi}``; None when a guard of pacf_ols fires."""
+    s = k_hi + 2
+    cols = np.r_[0:k_hi + 1, Z.shape[1] - 1]
+    # H[i] = H_{k_hi-i} on columns {0..k_hi, y}: H_{k_hi}, then the rows
+    # z_t (t = k_hi-1 down to k_hi-c+1) as outer products, summed in place.
+    H = np.empty((c, s, s))
+    H[0] = G[np.ix_(cols, cols)]
+    z = Z[k_hi - 1:k_hi - c:-1][:, cols]
+    np.multiply(z[:, :, None], z[:, None, :], out=H[1:])
+    np.cumsum(H, axis=0, out=H)
+    k = k_hi - np.arange(c)
+    j = np.arange(s)
+    y = s - 1
+    keep = (j[None, :] <= k[:, None]) | (j[None, :] == y)
+    H *= keep[:, :, None]
+    H *= keep[:, None, :]
+    diag = H[:, j, j]
+    diag[~keep] = 1.0
+    d = np.sqrt(np.where(diag > 0, diag, 1.0))
+    if not np.all(d[:, 1:] >= _PACF_MIN_SCALE * d[:, :1]):
+        return None
+    H[:, j, j] = diag
+    H /= d[:, :, None]
+    H /= d[:, None, :]
+    try:
+        L = np.linalg.cholesky(H)
+    except np.linalg.LinAlgError:
+        return None
+    piv = L[:, j, j] ** 2
+    if not np.all(piv[keep & (j[None, :] != y)] >= _PACF_MIN_PIVOT):
+        return None
+    i = np.arange(c)
+    return (L[i, y, k] / L[i, k, k] * d[i, y] / d[i, k])[::-1]
+
+
+def _pacf_ols_loop(x: np.ndarray, nlags: int, adjusted: bool) -> np.ndarray:
+    """pacf_ols as one ``lstsq`` per lag: the path a series takes when a
+    Cholesky guard fires (``nlags`` already clipped by the caller)."""
+    n = x.size
     out = np.full(nlags, np.nan)
     x0 = x - x.mean()
     for k in range(1, nlags + 1):
@@ -458,37 +564,64 @@ def _cheb_dist_by_dim(x: np.ndarray, max_dim: int):
         yield d, rows, D
 
 
-def approx_entropy(ts: np.ndarray, m: int = 2, factor: float = 0.2,
-                   max_n: int = 512) -> float:
-    """ApEn(m, r=factor·std, Chebyshev) — ``info_theory.py:764-837``.
-    O(n²); input truncated to the last ``max_n`` points (engine length
-    cap, mirroring the reference tests' 512-point truncation)."""
+def _entropy_counts(ts: np.ndarray, m: int, factor: float, max_n: int,
+                    memo: bool = True):
+    """The one O(n²) pass approx_entropy and sample_entropy share: for
+    d in (m, m+1), the per-row count of D_d ≤ r (self-match included)
+    and the number of matching pairs i < j.  The input is truncated to
+    its last ``max_n`` points and r = factor·std.
+
+    Pairs are (Σ rowcount − diagonal matches) // 2: D is exactly
+    symmetric, so this is the upper-triangle count without the
+    ``triu_indices`` gather.  Memoized on the truncated series, m and
+    factor (not r, which is NaN and never equal to itself when the
+    series holds a NaN), so the second of the two kernels on a series
+    costs nothing; ``memo=False``
+    is for callers with many short-lived windows (a rolling ApEn would
+    otherwise evict the series' period/decomp entries)."""
     x = np.asarray(ts, dtype=float)
     if x.size > max_n:
         x = x[-max_n:]
     r = factor * x.std(ddof=0)
+
+    def run():
+        counts = {}
+        for d, rows, D in _cheb_dist_by_dim(x, m + 1):
+            if d in (m, m + 1):
+                hit = D <= r
+                rowcount = hit.sum(axis=1)
+                self_hits = np.count_nonzero(np.diagonal(hit))
+                counts[d] = (rowcount, int(rowcount.sum() - self_hits) // 2)
+        return counts
+
+    if not memo:
+        return run()
+    return _memo(("entropy_counts", x.tobytes(), m, factor), run)
+
+
+def approx_entropy(ts: np.ndarray, m: int = 2, factor: float = 0.2,
+                   max_n: int = 512, memo: bool = True) -> float:
+    """ApEn(m, r=factor·std, Chebyshev) — ``info_theory.py:764-837``.
+    O(n²); input truncated to the last ``max_n`` points (engine length
+    cap, mirroring the reference tests' 512-point truncation).  Reads
+    the row counts of the pass shared with sample_entropy
+    (``_entropy_counts``; ``memo=False`` bypasses its memo)."""
+    counts = _entropy_counts(ts, m, factor, max_n, memo)
     phis = {}
-    for d, rows, D in _cheb_dist_by_dim(x, m + 1):
-        if d in (m, m + 1):
-            c = (D <= r).sum(axis=1) / rows
-            phis[d] = float(np.mean(np.log(c)))
+    for d, (rowcount, _) in counts.items():
+        rows = rowcount.size
+        phis[d] = float(np.mean(np.log(rowcount / rows)))
     return phis[m] - phis[m + 1]
 
 
 def sample_entropy(ts: np.ndarray, m: int = 2, factor: float = 0.2,
                    max_n: int = 512) -> float:
     """SampEn — ``info_theory.py:840-914`` (nolds sampen semantics:
-    r = factor·std, Chebyshev, self-matches excluded)."""
-    x = np.asarray(ts, dtype=float)
-    if x.size > max_n:
-        x = x[-max_n:]
-    r = factor * x.std(ddof=0)
-    counts = {}
-    for d, rows, D in _cheb_dist_by_dim(x, m + 1):
-        if d in (m, m + 1):
-            iu = np.triu_indices(rows, k=1)
-            counts[d] = int((D[iu] <= r).sum())
-    a, b = counts[m + 1], counts[m]
+    r = factor·std, Chebyshev, self-matches excluded).  Reads the pair
+    counts of the memoized pass shared with approx_entropy
+    (``_entropy_counts``)."""
+    counts = _entropy_counts(ts, m, factor, max_n)
+    a, b = counts[m + 1][1], counts[m][1]
     if b == 0 or a == 0:
         return np.nan
     return -math.log(a / b)

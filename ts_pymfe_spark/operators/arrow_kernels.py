@@ -318,14 +318,16 @@ def _fs_len(x: np.ndarray, num_bins: int = 10) -> np.ndarray:
 def _moving_approx_ent(x: np.ndarray, window_size: float = 0.1,
                        max_windows: int = 64) -> np.ndarray:
     """Rolling approximate entropy (local_stats.py:1528-1621), stride-
-    subsampled to bound the O(n·w²) cost (engine cap, documented)."""
+    subsampled to bound the O(n·w²) cost (engine cap, documented).
+    Windows bypass the kernel memo: up to 64 one-off entries would
+    evict the series' own period/decomp entries."""
     w = K._win_size(x.size, window_size)
     if x.size < w or w < 8:
         return np.array([np.nan])
     wins = K._rolling_windows(x, w)
     stride = max(1, wins.shape[0] // max_windows)
     return np.asarray(
-        [K.approx_entropy(win, max_n=w) for win in wins[::stride]]
+        [K.approx_entropy(win, max_n=w, memo=False) for win in wins[::stride]]
     )
 
 

@@ -123,8 +123,18 @@ def gapfill_agg(buckets: DataFrame, step_seconds: int,
     are date_trunc'd), same as gapfill()'s LEFT JOIN, which silently
     drops off-grid observations.
 
+    Preconditions, not checked: ``value`` is non-NULL on every row, and
+    ``(conv_id, series, bucket_start)`` is unique.  A NULL observation
+    drops out of the sum together with the interpolated gaps on both
+    sides of it; a duplicate bucket adds an ``m = -1`` term and counts
+    twice in ``count(*)``.  Either way the totals no longer equal the
+    filled grid's.
+
     Returns (conv_id, series, n_buckets, n_gaps, total) with ``total``
-    the un-rounded double sum of filled values.
+    the un-rounded double sum of filled values.  The closed form is
+    value-equal, not bit-identical, to summing the per-bucket lerps, so
+    a total rounded to 3 dp that sits a few ulps from a .0005 boundary
+    can round the other way.
     """
     if method != "interp":
         raise ValueError(method)

@@ -496,23 +496,3 @@ def sample_video_frames(df: DataFrame, every_n: int = 5) -> DataFrame:
         .select("media_id", "payload")
         .mapInPandas(run, FRAME_SCHEMA)
     )
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: one output row per planned frame
-    (decode-free).  Demonstrates the explode-by-schedule pattern —
-    the frame grid is computed relationally, the decoder only ever sees
-    (media_id, frame_ts) work units."""
-    return (
-        df.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.col("duration_ms") - 1,
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )
