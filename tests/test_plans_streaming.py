@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import shutil
 
 import numpy as np
@@ -459,6 +460,158 @@ def test_storage_backed_ingest_matches_batch_and_resumes(spark, turns, tmp_path)
     assert days[0] in expired
     assert f"{days[0]}{RATE_SUFFIX}" in expired
     assert all(p < cutoff for p in expired)
+
+
+# One ingest_tiers call on a fresh store submits this many Spark jobs:
+# the 1m, ~rate, 1h and 1d writes and the stages their plans need.
+# Manifest lookups and tier read-backs are driver-side and add none, so
+# a change that brings back a metadata job fails the guard below.
+INGEST_MAX_JOBS = 11
+
+
+@contextlib.contextmanager
+def _spark_jobs(spark):
+    """Count the Spark jobs submitted inside the block, by job-id window
+    over the status store (the window perfbench/trace.py uses).  The
+    listener bus is drained at both ends so no job is missed or
+    miscounted because its start event was still queued."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def next_job_id():
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)  # newest first
+        return jobs.apply(0).jobId() + 1 if jobs.size() else 0
+
+    out = {"jobs": 0}
+    job0 = next_job_id()
+    yield out
+    out["jobs"] = next_job_id() - job0
+
+
+@pytest.fixture(scope="module")
+def ingested(spark, turns, tmp_path_factory):
+    """A fresh ingest_tiers store, its job count, and a copy of it whose
+    1m tier has had retention applied (tombstoned main and ~rate days)."""
+    from ts_pymfe_spark.plans.ingest import ingest_tiers
+
+    base = tmp_path_factory.mktemp("ingested")
+    out = str(base / "store")
+    series = derive_series(turns)
+    with _spark_jobs(spark) as n:
+        ingest_tiers(spark, series, out, run_id="fresh")
+    retained = str(base / "retained")
+    shutil.copytree(f"{out}/tier=1m", retained)
+    w = CheckpointedWriter(spark, retained, run_id="ret")
+    days = sorted(p for p in w.live() if "~" not in p)
+    expired = w.apply_retention(days[1])
+    assert expired and any("~" in p for p in expired)
+    return {"out": out, "jobs": n["jobs"], "retained": retained}
+
+
+def _ingested_roots(ingested):
+    return [f"{ingested['out']}/tier={t}" for t in ("1m", "1h", "1d")] + [
+        ingested["retained"]
+    ]
+
+
+def test_ingest_job_count_guard(ingested):
+    assert 0 < ingested["jobs"] <= INGEST_MAX_JOBS
+
+
+def test_manifest_reads_submit_no_spark_jobs(spark, ingested):
+    """completed/expired/live/read are driver-side file reads: bracketed
+    with the status-store window they submit no Spark job, on stores
+    with main, ~rate and tombstoned partitions."""
+    for root in _ingested_roots(ingested):
+        w = CheckpointedWriter(spark, root)
+        with _spark_jobs(spark) as n:
+            done, dead, live = w.completed(), w.expired(), w.live()
+            df = w.read()
+        assert n["jobs"] == 0, root
+        assert live and live == done - dead
+        assert df.columns
+    w = CheckpointedWriter(spark, ingested["retained"])
+    assert w.expired() and any("~" in p for p in w.live())
+
+
+def test_read_schema_and_rows_match_inferred_read(spark, ingested):
+    """The footer-pinned schema equals what parquet schema inference
+    returns (names, types, nullability, order) and the rows are the
+    same, for every tier, both 1m branches and a store after retention."""
+    import pandas as pd
+
+    for root in _ingested_roots(ingested):
+        w = CheckpointedWriter(spark, root)
+        live = sorted(w.live())
+        paths = [f"{root}/part={p}" for p in live]
+        got, exp = w.read(), spark.read.parquet(*paths)
+        assert got.schema == exp.schema, root
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in exp.schema
+        ]
+        if root.endswith("tier=1m"):  # the ~rate branch alone agrees too
+            rate = [p for p, d in zip(paths, live) if "~" in d]
+            assert rate and spark.read.parquet(*rate).schema == got.schema
+
+        def rows(df):
+            return df.orderBy(*KEY).toPandas().reset_index(drop=True)
+
+        pd.testing.assert_frame_equal(rows(got), rows(exp), check_exact=True)
+
+
+def test_empty_manifest_dir_is_an_empty_manifest(spark, turns, tmp_path):
+    """A crash between creating _manifest and the first entry's rename
+    leaves the directory empty: that is a manifest with no entries, not
+    an error, and the next run commits every partition."""
+    import os
+
+    root = str(tmp_path / "empty_manifest")
+    os.makedirs(f"{root}/_manifest")
+    w = CheckpointedWriter(spark, root, run_id="after_crash")
+    assert w.completed() == w.expired() == w.live() == set()
+    assert w.metrics().count() == 0
+    with pytest.raises(FileNotFoundError):
+        w.read()
+    tier = rollup_raw(derive_series(turns), "1h")
+    committed = w.run(tier, "bucket_start", "day")
+    assert len(committed) > 1
+    assert w.read().count() == tier.count()
+
+
+def test_uncommitted_manifest_tmp_is_pending(spark, turns, tmp_path):
+    """Only renamed *.json files are manifest entries.  A crash after a
+    partition's data rename but before its manifest rename leaves a
+    complete *.json.tmp: the partition is still pending, a resume
+    recomputes it exactly once, sweeps the leftover, and read() returns
+    each row once.  A truncated *.json.tmp is ignored as well."""
+    import os
+
+    root = str(tmp_path / "tmp_store")
+    tier = rollup_raw(derive_series(turns), "1h")
+    w1 = CheckpointedWriter(spark, root, run_id="w1")
+    parts = sorted(e["partition"] for e in w1.run(tier, "bucket_start", "day"))
+    assert len(parts) > 2
+    mdir = f"{root}/_manifest"
+    victim = parts[1]
+    entry = f"{mdir}/{victim}-w1.json"
+    os.rename(entry, entry + ".tmp")  # data in place, manifest not renamed
+    with open(f"{mdir}/{parts[2]}-dead.json.tmp", "w") as f:
+        f.write('{"run_id": "dead", "partit')  # truncated mid-write
+
+    w2 = CheckpointedWriter(spark, root, run_id="w2")
+    assert w2.completed() == set(parts) - {victim}
+    assert None not in w2.completed()
+    assert set(w2.metrics().toPandas()["partition"]) == w2.completed()
+    redone = w2.run(tier, "bucket_start", "day")
+    assert [e["partition"] for e in redone] == [victim]
+    assert not [f for f in os.listdir(mdir) if f.endswith(".tmp")]
+    assert w2.completed() == set(parts)
+
+    got = w2.read()
+    assert got.count() == tier.count()
+    assert got.select(*KEY).distinct().count() == tier.count()
+    assert CheckpointedWriter(spark, root, run_id="w3").run(
+        tier, "bucket_start", "day") == []
 
 
 def test_stream_store_retention_expires_batches_crash_safe(

@@ -1,18 +1,27 @@
 """Checkpoint/resume with per-partition lineage + metrics (north rule).
 
 Every tier write is committed partition-by-partition; a ``_manifest``
-table records (run_id, partition, rows, bytes, wall_ms, snapshot).
-Restart = anti-join pending partitions against the manifest — only
-uncommitted partitions recompute.  This is the parquet-backed stand-in
-for per-partition Iceberg snapshot checkpoints (no Iceberg catalog jars
-in this sandbox; the write path is isolated here so swapping
-``_write_partition`` to ``writeTo(...).append()`` + snapshot-id capture
-is a one-function change).
+directory records (run_id, partition, rows, bytes, wall_ms, snapshot),
+one JSON entry per file.  Restart = anti-join pending partitions
+against the manifest — only uncommitted partitions recompute.  This is
+the parquet-backed stand-in for per-partition Iceberg snapshot
+checkpoints (no Iceberg catalog jars in this sandbox; the write path is
+isolated here so swapping ``_write_partition`` to
+``writeTo(...).append()`` + snapshot-id capture is a one-function
+change).
+
+Metadata is read on the driver, as Iceberg reads its own metadata: the
+manifest is a plain directory listing plus ``json.loads`` per entry,
+and ``read()`` takes its schema from the Spark row schema stored in a
+parquet footer — so no manifest lookup or tier read-back submits a
+Spark job.  An entry exists once its file is renamed to ``*.json``;
+that rename is the atomic commit point, and ``*.json.tmp`` leftovers of
+a crash are never read (``run()`` sweeps them).
 
 Scale notes: partitions are calendar days (matching the production
 Iceberg partitioning days(ts), SURVEY §1.4), so the unit of restart is
 a bounded, independently-writable slice; the manifest itself is tiny
-(one row per partition per run).
+(one entry per partition per run).
 """
 
 from __future__ import annotations
@@ -24,11 +33,14 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST_SCHEMA = (
     "run_id string, partition string, rows long, bytes long, "
-    "wall_ms long, commit_ms long, committed_seq long"
+    "wall_ms long, commit_ms long, committed_seq long, expired boolean"
 )
+# footer key under which Spark's parquet writer stores the row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _footer_stats(parquet_dir: str) -> tuple[int, int]:
@@ -48,12 +60,32 @@ def _footer_stats(parquet_dir: str) -> tuple[int, int]:
     return rows, nbytes
 
 
+def _footer_schema(paths: list[str]) -> StructType:
+    """The Spark schema stored in the footer of the first ``.parquet``
+    file under ``paths`` — the same footer key schema inference reads,
+    taken with pyarrow on the driver instead of in a Spark job."""
+    import pyarrow.parquet as pq
+
+    for d in paths:
+        for f in sorted(os.listdir(d)):
+            if f.endswith(".parquet"):
+                meta = pq.read_metadata(os.path.join(d, f)).metadata
+                return StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+    raise FileNotFoundError(f"no parquet files under {len(paths)} partitions "
+                            f"starting at {paths[0]}")
+
+
 class CheckpointedWriter:
     """Partition-at-a-time committed writes with resume.
 
     >>> w = CheckpointedWriter(spark, "/data/features_1h")
     >>> w.run(tier_df, partition_col="bucket_start")   # day slices
     Re-running after a crash skips partitions already in the manifest.
+
+    Every metadata read (``completed``, ``expired``, ``live``,
+    ``metrics`` and the schema ``read`` uses) is a driver-side file
+    read; only the ``run`` write and the rows ``read`` returns are
+    Spark work.
     """
 
     def __init__(self, spark: SparkSession, root: str,
@@ -64,16 +96,26 @@ class CheckpointedWriter:
         self.run_id = run_id or uuid.uuid4().hex[:12]
 
     # -- manifest ---------------------------------------------------------
+    def _entries(self) -> list[dict]:
+        """Every committed manifest entry.  Only renamed ``*.json``
+        files count: an empty ``_manifest`` (crash before the first
+        rename) is an empty manifest, and ``*.json.tmp`` leftovers are
+        uncommitted, complete or not."""
+        try:
+            names = sorted(os.listdir(self.manifest_dir))
+        except FileNotFoundError:
+            return []
+        entries = []
+        for name in names:
+            if not name.endswith(".json"):
+                continue
+            with open(os.path.join(self.manifest_dir, name)) as f:
+                entries.extend(json.loads(ln) for ln in f if ln.strip())
+        return entries
+
     def completed(self) -> set[str]:
-        if not os.path.exists(self.manifest_dir):
-            return set()
-        rows = (
-            self.spark.read.json(self.manifest_dir)
-            .select("partition")
-            .distinct()
-            .collect()
-        )
-        return {r["partition"] for r in rows}
+        """Partitions with any manifest entry, tombstones included."""
+        return {e["partition"] for e in self._entries()}
 
     def _append_manifest(self, entry: dict, suffix: str = "") -> None:
         """Atomically add one manifest entry.  ``suffix`` distinguishes
@@ -93,24 +135,19 @@ class CheckpointedWriter:
 
     def expired(self) -> set[str]:
         """Partitions expired by retention (tombstoned in the manifest)."""
-        if not os.path.exists(self.manifest_dir):
-            return set()
-        df = self.spark.read.json(self.manifest_dir)
-        if "expired" not in df.columns:
-            return set()
-        rows = (
-            df.filter(F.col("expired") == True)  # noqa: E712
-            .select("partition").distinct().collect()
-        )
-        return {r["partition"] for r in rows}
+        return {e["partition"] for e in self._entries()
+                if e.get("expired") is True}
 
     def live(self) -> set[str]:
         """Committed AND not retention-expired."""
         return self.completed() - self.expired()
 
     def metrics(self) -> DataFrame:
-        """Lineage/metrics table for observability dashboards."""
-        return self.spark.read.json(self.manifest_dir)
+        """Lineage/metrics table for observability dashboards: one row
+        per committed entry, columns as ``MANIFEST_SCHEMA``."""
+        cols = [c.split()[0] for c in MANIFEST_SCHEMA.split(", ")]
+        rows = [tuple(e.get(c) for c in cols) for e in self._entries()]
+        return self.spark.createDataFrame(rows, MANIFEST_SCHEMA)
 
     # -- retention --------------------------------------------------------
     def apply_retention(self, older_than: str,
@@ -207,6 +244,13 @@ class CheckpointedWriter:
         )
         if partition_suffix:
             part = F.concat(part, F.lit(partition_suffix))
+        # a *.json.tmp is a manifest entry whose rename never happened:
+        # its partition is pending, and under the single writer per root
+        # (see the staging sweep below) no live writer owns the file
+        if os.path.exists(self.manifest_dir):
+            for f in os.listdir(self.manifest_dir):
+                if f.endswith(".json.tmp"):
+                    os.remove(os.path.join(self.manifest_dir, f))
         done = self.completed()
         pend = df.withColumn("_part", part)
         if done:
@@ -274,12 +318,13 @@ class CheckpointedWriter:
         return committed
 
     def read(self) -> DataFrame:
-        """Read back only committed, retention-live partitions."""
+        """Read back only committed, retention-live partitions, with the
+        schema pinned from a parquet footer (no inference job)."""
         done = sorted(self.live())
         paths = [f"{self.root}/part={p}" for p in done]
         if not paths:
             raise FileNotFoundError(f"no committed partitions under {self.root}")
-        return self.spark.read.parquet(*paths)
+        return self.spark.read.schema(_footer_schema(paths)).parquet(*paths)
 
 
 def apply_retention(spark: SparkSession, store_root: str,
