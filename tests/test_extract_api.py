@@ -125,3 +125,260 @@ def test_fused_extract_emits_no_rows_for_empty_feature(spark):
     long_ = res[res.conv_id == "c9"].set_index("name")["value"]
     assert {"acf.mean", "acf.sd", "dw"} <= set(long_.index)
     assert not np.isnan(long_["acf.mean"])
+
+
+# ---------------------------------------------------------------------------
+# Partition-level runner: batches of complete groups, stacked kernels
+# ---------------------------------------------------------------------------
+
+#: the extract benchmark's 14 features (bench.py feature_job's set)
+BENCH_FEATURES = [
+    "acf", "pacf", "period", "ps_entropy", "hist_entropy", "dw",
+    "trend_strength", "season_strength", "lz_complexity",
+    "sample_entropy", "approx_entropy", "model_linear", "model_sine",
+    "model_naive_seasonal",
+]
+
+
+def _mixed_series():
+    """(conv_id, series) -> values: lengths 5, 40 and 456-512, series
+    cut by max_points=512, constant, NaN-containing and 0/1 flags."""
+    rng = np.random.default_rng(2024)
+    t = np.arange(700)
+    out = {
+        ("a0", "text_len"): rng.lognormal(3, 1, 5),
+        ("a1", "text_len"): rng.lognormal(3, 1, 40),
+        ("a2", "text_len"): rng.lognormal(3, 1, 456),
+        ("a3", "text_len"): rng.lognormal(3, 1, 480),
+        ("a4", "text_len"): rng.lognormal(3, 1, 511),
+        ("a5", "text_len"): np.full(512, 42.0),
+        ("a6", "text_len"): np.where(t % 97 == 3, np.nan,
+                                     rng.lognormal(3, 1, 700))[:600],
+        ("a7", "tool_flag"): (rng.random(600) < 0.3).astype(float),
+        ("a8", "text_len"): 50 + 20 * np.sin(2 * np.pi * t / 24)
+        + rng.standard_normal(700),
+        ("a9", "text_len"): np.cumsum(rng.standard_normal(512)),
+    }
+    for i in range(5):
+        out[(f"b{i}", "text_len")] = rng.lognormal(3, 1, 512 + 37 * i)
+        out[(f"b{i}", "tool_flag")] = (rng.random(512 + 37 * i) < 0.2) * 1.0
+    return out
+
+
+def _series_df(spark, series, shuffle_seed=0):
+    import pandas as pd
+
+    rows = [(c, s, i, float(v)) for (c, s), x in series.items()
+            for i, v in enumerate(x)]
+    pdf = pd.DataFrame(rows, columns=["conv_id", "series", "turn_idx", "value"])
+    pdf = pdf.sample(frac=1.0, random_state=shuffle_seed)  # arrival order
+    return spark.createDataFrame(
+        pdf, "conv_id string, series string, turn_idx int, value double")
+
+
+def _reference_rows(x, conv, features, summaries):
+    """Driver-side twin of the fused kernel for one series."""
+    from ts_pymfe_spark.operators.arrow_kernels import FEATURE_KERNELS
+
+    out = {}
+    for name in features:
+        try:
+            res = (SEEDED_FEATURE_KERNELS[name](x, feature_seed(conv, name))
+                   if name in SEEDED_FEATURE_KERNELS
+                   else FEATURE_KERNELS[name](x))
+        except Exception:
+            res = np.nan
+        arr = np.atleast_1d(np.asarray(res, dtype=float))
+        if arr.size == 1:
+            out[(name, "")] = float(arr[0])
+        elif arr.size > 1:
+            for s, v in summarize_array(arr, summaries):
+                out[(name, s)] = v
+    return out
+
+
+@pytest.fixture
+def small_arrow_batches(spark, monkeypatch):
+    """Arrow batches of 37 rows and kernel batches of ~900 rows, so
+    groups straddle both boundaries."""
+    from ts_pymfe_spark.operators import grouped
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "37")
+    monkeypatch.setattr(grouped, "BATCH_ROWS", 900)
+    yield
+    spark.conf.set(key, old)
+
+
+def test_runner_bitmatches_per_series_kernels(spark, small_arrow_batches):
+    """The runner (one partition, groups straddling Arrow and kernel
+    batches, model_sine stacked over same-length series) emits exactly
+    the per-series FEATURE_KERNELS values of every series."""
+    from ts_pymfe_spark.operators.arrow_kernels import series_features
+
+    series = _mixed_series()
+    summaries = ("mean", "sd")
+    got = series_features(
+        _series_df(spark, series), features=BENCH_FEATURES, max_points=512,
+        parallelism=1, summaries=summaries,
+    ).toPandas()
+    assert set(zip(got.conv_id, got.series)) == set(series)
+    for (conv, ser), x in series.items():
+        g = got[(got.conv_id == conv) & (got.series == ser)]
+        rows = dict(zip(zip(g.feature, g.summary), g.value))
+        ref = _reference_rows(x[-512:], conv, BENCH_FEATURES, summaries)
+        assert set(rows) == set(ref), conv
+        bad = [k for k in ref if not (rows[k] == ref[k] or (
+            np.isnan(rows[k]) and np.isnan(ref[k])))]
+        assert not bad, (conv, ser, bad)
+
+
+def test_row_order_is_total_and_partition_invariant(spark, tmp_path):
+    """Rows sharing a turn_idx are ordered by value, so the series and
+    its max_points cut do not depend on input files or partitioning:
+    input written as 4 files, extracted at parallelism 1 and 8, gives
+    identical output, equal to the driver-side (turn_idx, value) sort."""
+    import pandas as pd
+
+    from ts_pymfe_spark.operators.arrow_kernels import series_features
+
+    rng = np.random.default_rng(5)
+    rows = []
+    for c in range(6):
+        n = 60 + 10 * c
+        idx = np.sort(rng.integers(0, n // 2, n))      # many duplicates
+        rows += [(f"c{c}", int(i), float(v))
+                 for i, v in zip(idx, rng.lognormal(2, 1, n))]
+    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "value"])
+    path = str(tmp_path / "dup")
+    spark.createDataFrame(
+        pdf.sample(frac=1.0, random_state=1),
+        "conv_id string, turn_idx int, value double",
+    ).repartition(4).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(spark.read.parquet(path).inputFiles()) == 4
+    feats = ["acf", "dw", "model_linear", "lz_complexity"]
+    outs = [
+        series_features(df, features=feats, max_points=50, parallelism=p)
+        .toPandas().sort_values(["conv_id", "feature", "idx"],
+                                ignore_index=True)
+        for p in (1, 8)
+    ]
+    pd.testing.assert_frame_equal(outs[0], outs[1], check_exact=True)
+    from ts_pymfe_spark.operators.arrow_kernels import FEATURE_KERNELS
+
+    for conv, g in pdf.groupby("conv_id"):
+        x = g.sort_values(["turn_idx", "value"])["value"].to_numpy()[-50:]
+        got = outs[0][outs[0].conv_id == conv]
+        for name in feats:
+            ref = np.atleast_1d(FEATURE_KERNELS[name](x))
+            np.testing.assert_array_equal(
+                got[got.feature == name]["value"].to_numpy(), ref)
+
+
+def test_measure_time_constant_per_series_feature(spark, small_arrow_batches):
+    """measure_time=True: wall_ms is non-negative and constant per
+    (conv, series, feature), also for the stacked model_sine (stack
+    wall / stack size), and values equal the untimed run."""
+    from ts_pymfe_spark.operators.arrow_kernels import series_features
+
+    df = _series_df(spark, _mixed_series())
+    feats = ["model_sine", "dw", "acf"]
+    timed = series_features(df, features=feats, max_points=512,
+                            parallelism=1, measure_time=True,
+                            summaries=("mean", "sd")).toPandas()
+    assert (timed["wall_ms"] >= 0).all()
+    assert (timed.groupby(["conv_id", "series", "feature"])["wall_ms"]
+            .nunique() == 1).all()
+    plain = series_features(df, features=feats, max_points=512,
+                            parallelism=1, summaries=("mean", "sd")).toPandas()
+    keys = ["conv_id", "series", "feature", "summary"]
+    m = plain.merge(timed, on=keys, suffixes=("_a", "_b"))
+    assert len(m) == len(plain) == len(timed)
+    np.testing.assert_array_equal(m["value_a"].to_numpy(),
+                                  m["value_b"].to_numpy())
+
+
+def _sine_fold_loop_reference(y):
+    """model_sine landmark scores as one np.linalg.lstsq per
+    Gauss-Newton step per fold, one series at a time: the per-fold
+    loop the stacked fit replaced, kept verbatim as the reference."""
+    import math
+
+    def fit(Xtr, ytr, Xte):
+        n = ytr.size
+        if n < 8:
+            raise ValueError("too short for sine fit")
+        freqs = np.fft.fftfreq(n, Xtr[1] - Xtr[0])
+        fyy = np.abs(np.fft.rfft(ytr))[1:]
+        w0 = 2 * np.pi * abs(freqs[1 + int(np.argmax(fyy))])
+        theta = np.array([ytr.std() * math.sqrt(2), max(w0, 1e-6), 0.0,
+                          ytr.mean()])
+        for _ in range(50):
+            A, w, p, c = theta
+            s = np.sin(w * Xtr + p)
+            cc = np.cos(w * Xtr + p)
+            r = ytr - (A * s + c)
+            J = np.column_stack([s, A * Xtr * cc, A * cc, np.ones(n)])
+            try:
+                step, *_ = np.linalg.lstsq(J, r, rcond=None)
+            except np.linalg.LinAlgError:
+                break
+            theta = theta + step
+            if np.max(np.abs(step)) < 1e-10:
+                break
+        A, w, p, c = theta
+        if not np.all(np.isfinite(theta)):
+            raise ValueError("sine fit diverged")
+        return A * np.sin(w * Xte + p) + c
+
+    y = np.asarray(y, dtype=float)
+    n = y.size
+    X = np.linspace(0.0, 1.0, n)
+    out = np.full(5, np.nan)
+    for fold, (tr_end, te_s, te_e) in enumerate(LM.ts_splits(n, 5)):
+        ytr, yte = y[:tr_end], y[te_s:te_e]
+        lo, hi = ytr.min(), ytr.max()
+        span = hi - lo
+        if span == 0:
+            span = 1.0
+        try:
+            pred = fit(X[:tr_end], (ytr - lo) / span, X[te_s:te_e])
+            out[fold] = LM.rmse(np.asarray(pred, float).ravel(),
+                                (yte - lo) / span)
+        except (ValueError, ZeroDivisionError, np.linalg.LinAlgError):
+            out[fold] = np.nan
+    return out
+
+
+@pytest.mark.parametrize("n", [5, 9, 40, 47, 48, 456, 512])
+def test_stacked_sine_equals_per_series_lstsq_loop(n):
+    """The stacked Gauss-Newton fit (one private gelsd gufunc call per
+    step for the whole stack) equals the public np.linalg.lstsq fold
+    loop bit for bit: per series (S = 1), as one stack, permuted and
+    split into uneven stacks.  A numpy whose gufunc no longer matches
+    lstsq fails here."""
+    rng = np.random.default_rng(n)
+    t = np.arange(n)
+    nan_row = rng.standard_normal(n)
+    nan_row[n // 2] = np.nan
+    X = np.stack([
+        rng.standard_normal(n),
+        np.cumsum(rng.standard_normal(n)),
+        3 * np.sin(2 * np.pi * t / 12) + rng.standard_normal(n),
+        rng.lognormal(3, 1, n),
+        (rng.random(n) < 0.3).astype(float),
+        np.full(n, 7.0),
+        nan_row,
+        1e6 + rng.standard_normal(n),
+    ])
+    ref = np.stack([_sine_fold_loop_reference(x) for x in X])
+    same = lambda a, b: np.array_equal(a, b, equal_nan=True)  # noqa: E731
+    assert same(np.stack([LM.landmark_scores(x, "model_sine") for x in X]), ref)
+    assert same(LM.landmark_scores(X, "model_sine"), ref)
+    perm = rng.permutation(len(X))
+    assert same(LM.landmark_scores(X[perm], "model_sine"), ref[perm])
+    parts = [LM.landmark_scores(X[a:b], "model_sine")
+             for a, b in ((0, 3), (3, 4), (4, 8))]
+    assert same(np.concatenate(parts), ref)

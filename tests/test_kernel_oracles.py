@@ -691,9 +691,19 @@ def _loess_reference(y, q, xeval=None):
                     fit, swy / np.maximum(sw, 1e-300))
 
 
-def _stl_loop_reference(x, period, seasonal=7, inner=5):
+def _band_smoother(y, q):
+    """The low-pass / trend smoother of ``K.stl_decompose``: the banded
+    loess operator on the full integer grid."""
+    return K._band_apply(K._band_operator(y.size, q), y)
+
+
+def _stl_loop_reference(x, period, seasonal=7, inner=5,
+                        smoother=_band_smoother):
     """STL with one loess call per cycle-subseries phase per inner
-    iteration and every loess weight set rebuilt per call."""
+    iteration and every loess weight set rebuilt per call.  The
+    low-pass and trend fits use ``smoother``: the banded operator of
+    ``K.stl_decompose`` by default, ``_loess_reference`` for the
+    per-row form of the original implementation."""
     x = np.asarray(x, dtype=float)
     n = x.size
     tl = int(math.ceil(1.5 * period / (1 - 1.5 / seasonal)))
@@ -713,9 +723,9 @@ def _stl_loop_reference(x, period, seasonal=7, inner=5):
             C[p] = sm[0]
             C[p + (m + 1) * period] = sm[-1]
         L = K._ma_valid(K._ma_valid(K._ma_valid(C, period), period), 3)
-        L = _loess_reference(L, lp)
+        L = smoother(L, lp)
         S = C[period: period + n] - L
-        T = _loess_reference(x - S, tl)
+        T = smoother(x - S, tl)
     return T, S, x - T - S
 
 
@@ -746,6 +756,69 @@ def test_stl_batched_bit_identical_to_loop(n, period):
         if period <= n // 2:
             for a, b in zip(ref, K.decompose(x, period)):
                 assert np.array_equal(a, b), kind
+
+
+@pytest.mark.parametrize(
+    "n", [1, 2, 3, 4, 7, 8, 9, 20, 64, 101, 240, 511, 512, 1000])
+def test_band_operator_matches_per_row_loess(n):
+    """The banded loess operator equals the per-row loess of
+    ``_loess_reference`` within 1e-13·max|y| for odd and even windows,
+    windows wider than the series (q > n, radius inflated by q/n) and
+    on constant input (every row on the degenerate-det branch)."""
+    qs = [1, 2, 3, 4, 5, 6, 7, 8, 13, 14, 25, 50, 101, 190, 191, 256,
+          n - 1, n, n + 1, 2 * n, 3 * n + 2]
+    for q in sorted({q for q in qs if q >= 1}):
+        rng = np.random.default_rng(1000 * n + q)
+        for y in (rng.standard_normal(n), np.full(n, 2.5),
+                  rng.lognormal(size=n) * 1e3):
+            got = K._band_apply(K._band_operator(n, q), y)
+            ref = _loess_reference(y, q)
+            assert got.shape == ref.shape
+            assert np.max(np.abs(got - ref)) <= 1e-13 * np.max(np.abs(y)), q
+
+
+_STL_GRID = [(240, 12), (512, 256), (511, 255), (101, 50), (64, 2), (9, 4),
+             (20, 19), (7, 6)] + [(512, p) for p in (190, 200, 211, 224, 240,
+                                                      255, 256)]
+
+
+@pytest.mark.parametrize("n,period", _STL_GRID)
+def test_stl_within_tolerance_of_per_row_loess_stl(n, period):
+    """Full STL with the banded low-pass/trend operators against the
+    original per-row-loess STL (``_stl_loop_reference`` with
+    ``_loess_reference`` smoothers, which is bit-identical to the
+    plan-based STL it replaced): every component within
+    1e-12·max|x|."""
+    for x in (np.random.default_rng(n + period).standard_normal(n),
+              np.full(n, 2.5),
+              np.random.default_rng(87).lognormal(size=n) * 1e3,
+              np.cumsum(np.random.default_rng(period).standard_normal(n))):
+        ref = _stl_loop_reference(x, period, smoother=_loess_reference)
+        got = K.stl_decompose(x, period)
+        tol = 1e-12 * np.max(np.abs(x))
+        for part, a, b in zip("TSR", ref, got):
+            assert np.max(np.abs(a - b)) <= tol, part
+
+
+#: tracemalloc peaks of the plan-based STL this replaced, n = 4096
+_STL_PARENT_PEAK_MIB = {300: 118.4, 2000: 785.0}
+
+
+@pytest.mark.parametrize("period", sorted(_STL_PARENT_PEAK_MIB))
+def test_stl_memory_at_4096_points(period):
+    """The banded operators are O(q² + n): at n = 4096 STL peaks below
+    the per-row plans' O(n·q) peak (118 MiB at period 300, 785 MiB at
+    period 2000, where the trend window is 3819 points)."""
+    import tracemalloc
+
+    x = np.random.default_rng(period).standard_normal(4096)
+    tracemalloc.start()
+    try:
+        K.stl_decompose(x, period)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak <= _STL_PARENT_PEAK_MIB[period] * 2 ** 20, peak
 
 
 def _pacf_lag_reference(x0, k):

@@ -29,16 +29,21 @@ def optimized(df) -> str:
 
 def test_extract_is_exactly_one_shuffle(spark, turns):
     """The flagship extract = ONE fused kernel+summary Arrow stage
-    (round 7): a single groupBy(applyInPandas) exchange and a single
-    Python boundary, nothing else (no global sort: round 1's orderBy
-    would show a rangepartitioning Exchange here; rounds 1-6 carried a
-    second exchange + grouped-map pass for the summary stage)."""
+    (round 7): a single hash exchange on the series keys and a single
+    Python boundary — the partition-level mapInPandas runner, no
+    per-group FlatMapGroupsInPandas — nothing else (no global sort:
+    round 1's orderBy would show a rangepartitioning Exchange here;
+    rounds 1-6 carried a second exchange + grouped-map pass for the
+    summary stage)."""
     from ts_pymfe_spark.api import TSMFESpark
 
     eng = TSMFESpark(features=["dw", "acf"], summaries=("mean",))
-    p = plan(eng.extract(derive_series(turns)))
+    series = derive_series(turns)
+    p = plan(eng.extract(series))
     assert p.count("Exchange hashpartitioning") == 1
-    assert p.count("FlatMapGroupsInPandas") == 1
+    # the synthetic input is itself a mapInPandas source
+    assert p.count("MapInPandas") == plan(series).count("MapInPandas") + 1
+    assert "FlatMapGroupsInPandas" not in p
     assert "rangepartitioning" not in p  # the dropped global orderBy
 
 

@@ -23,7 +23,8 @@ Layout
 - ``operators.local_stats`` rolling/tiled window features (SQL family)
 - ``operators.sequence`` lag/diff/run/crossing features (SQL family)
 - ``operators.gapfill``  calendar grid + as-of carry-forward + lerp
-- ``operators.arrow_kernels`` per-series numpy kernels (applyInPandas)
+- ``operators.arrow_kernels`` per-series numpy kernels (Arrow UDFs)
+- ``operators.grouped``  partition-level grouped map (one mapInPandas)
 - ``operators.compression`` Gorilla XOR + delta-of-delta codecs
 - ``plans``              checkpoint manifest / resume / lineage metrics
 - ``streaming``          Structured Streaming tier maintenance

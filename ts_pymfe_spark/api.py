@@ -15,8 +15,9 @@ lists.
 (tsmfe.py:427-438), sorted lexicographically per series
 (tsmfe.py:941-947).  Scalar features keep their bare name.
 
-Execution: the whole extraction is ONE Arrow stage —
-``groupBy(conv).applyInPandas`` kernels (operators/arrow_kernels.py)
+Execution: the whole extraction is ONE Arrow stage — the
+``series_features`` kernels (operators/arrow_kernels.py) on one
+partition-level ``mapInPandas`` runner over key-sorted partitions,
 with the per-feature summaries fused into the same kernel call (round
 7; the kernel holds each feature's full value array already) — so a
 1000-executor cluster extracts ~10^6 conversations concurrently with
@@ -78,7 +79,10 @@ class TSMFESpark:
         ``measure_time``: adds per-feature kernel wall-clock
         (reference ``measure_time`` option, tsmfe.py:128-165 /
         _internal.timeit:1422-1442 — 'total' semantics: rows of one
-        feature's summaries share the feature's kernel time)."""
+        feature's summaries share the feature's kernel time).  A
+        feature that runs batched over same-length series
+        (``BATCHED_FEATURE_KERNELS``) stamps each of them with the
+        batch's wall divided by the batch size."""
         # Fused summary stage (round 7): the kernel holds each
         # feature's complete value array for its group, so it emits
         # the summary rows directly — value-equal to the former

@@ -326,6 +326,87 @@ def _loess(y: np.ndarray, q: int, xeval: np.ndarray | None = None) -> np.ndarray
     return _loess_apply(_loess_plan(y.size, q, xeval), y)
 
 
+def _band_operator(n: int, q: int) -> np.ndarray:
+    """The q-nearest loess on the full integer grid 0..n-1 as a linear
+    operator, stored as its distinct coefficient rows only.
+
+    Output i is Σ_j c_ij·y_j over the window [s_i, s_i + qe), with
+    c_ij = (swxx·w_ij − swx·wxc_ij)/det (w_ij/sw on the degenerate
+    branch), the ``_loess_plan`` fit rewritten as weights on y.  On the
+    integer grid the window is contiguous and, with half = (qe−1)//2
+    and E = qe − 1 − half:
+
+      * the ``half`` left-edge rows use the window [0, qe);
+      * every interior row has the same offsets −half..E, so one
+        coefficient row serves all n − qe + 1 of them;
+      * right-edge row n−1−i is left-edge-frame row i mirrored (|xc|,
+        λ, sw and swxx mirror; swx and wxc both flip sign), i.e. row i
+        applied to the reversed series.
+
+    So the operator is the (E + 1, qe) block of rows i = 0..E in the
+    left frame (window [0, qe), point i), row ``half`` being the
+    interior row — O(q² + n) memory where the per-row plan is O(n·q).
+    Against ``_loess_plan``/``_loess_apply`` this changes only
+    rounding (weights-then-dot instead of moments-then-fit, and the
+    right edge's sums run mirrored)."""
+    qe = min(q, n)
+    e = qe - 1 - (qe - 1) // 2
+    i = np.arange(e + 1, dtype=float)[:, None]
+    xc = np.arange(qe, dtype=float)[None, :] - i
+    lam = np.maximum(i, qe - 1 - i)
+    if q > n:
+        lam = lam * (q / n)
+    lam = np.maximum(lam, 1e-300)
+    # w = (1 − |xc/λ|³)³ on [0, 1], in place to bound the peak at three
+    # (E + 1, qe) arrays
+    u = np.abs(xc)
+    u /= lam
+    w = u * u
+    w *= u
+    np.subtract(1.0, w, out=w)
+    np.maximum(w, 0.0, out=w)
+    np.multiply(w, w, out=u)
+    w *= u
+    del u
+    wxc = w * xc
+    sw = w.sum(axis=1, keepdims=True)
+    swx = wxc.sum(axis=1, keepdims=True)
+    xc *= wxc                       # w·xc²
+    swxx = xc.sum(axis=1, keepdims=True)
+    del xc
+    det = sw * swxx - swx * swx
+    # degenerate neighbourhood (all weight on one point): weighted mean
+    deg = ~(det > 1e-12 * np.maximum(sw * swxx, 1e-300))[:, 0]
+    mean_rows = w[deg] / np.maximum(sw[deg], 1e-300)
+    wxc *= swx
+    w *= swxx
+    w -= wxc
+    with np.errstate(divide="ignore", invalid="ignore"):
+        w /= det
+    w[deg] = mean_rows
+    return w
+
+
+def _band_apply(op: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """Apply a ``_band_operator`` to a 1-D ``y``: one row-by-vector
+    product per edge block (the right one on the reversed tail) and one
+    correlation with the interior row.
+
+    The edge products are ``einsum``, not ``@``: OpenBLAS gemv splits
+    blocks over its threads and rounds differently per thread count
+    (driver and Python workers may differ there), while einsum's loops
+    round the same everywhere.  ``np.correlate`` is one dot per output,
+    single-threaded at these lengths."""
+    n, qe = y.size, op.shape[1]
+    h = (qe - 1) // 2
+    e = qe - 1 - h
+    out = np.empty(n)
+    out[:h] = np.einsum("ij,j->i", op[:h], y[:qe])
+    out[h: n - e] = np.correlate(y, op[h], "valid")
+    out[n - e:] = np.einsum("ij,j->i", op[:e], y[::-1][:qe])[::-1]
+    return out
+
+
 def _ma_valid(x: np.ndarray, w: int) -> np.ndarray:
     """'valid' moving average: length n − w + 1."""
     c = np.concatenate([[0.0], np.cumsum(x)])
@@ -360,10 +441,17 @@ def stl_decompose(ts: np.ndarray, period: int, seasonal: int = 7,
     Their fits land in a (period, M+2) grid whose flattened transpose
     is C: evaluation point j of phase p is time p + (j−1)·period, i.e.
     C[p + j·period].  The loess weights depend only on (n, q, xeval),
-    so the subseries, low-pass and trend plans are built once per call,
-    not once per inner iteration.  A length-1 subseries (period > n/2)
-    is fitted and extended as its single value exactly, as the
-    per-phase loop did; the output is bit-identical to that loop."""
+    so the subseries plans and the low-pass and trend operators are
+    built once per call, not once per inner iteration.  A length-1
+    subseries (period > n/2) is fitted and extended as its single value
+    exactly, as the per-phase loop did; the output is bit-identical to
+    that loop.
+
+    Steps 3 and 5 smooth the full grid 0..n-1, so they use the banded
+    operators of ``_band_operator`` (O(q² + n) memory, one correlation
+    for the interior rows) instead of per-row plans (O(n·q)).  That
+    changes rounding only: every component stays within 1e-12·max|x|
+    of the per-row-plan STL (tests/test_kernel_oracles.py)."""
     x = np.asarray(ts, dtype=float)
     n = x.size
     period = int(period)
@@ -377,8 +465,8 @@ def stl_decompose(ts: np.ndarray, period: int, seasonal: int = 7,
         (rows, m, _loess_plan(m, seasonal, np.arange(-1, m + 1, dtype=float)))
         for rows, m in groups
     ]
-    lp_plan = _loess_plan(n, lp)
-    tl_plan = _loess_plan(n, tl)
+    lp_op = _band_operator(n, lp)
+    tl_op = _band_operator(n, tl)
     Dpad = np.zeros(M * period)
     G = np.empty((period, M + 2))
     T = np.zeros(n)
@@ -390,9 +478,9 @@ def stl_decompose(ts: np.ndarray, period: int, seasonal: int = 7,
             G[rows, : m + 2] = _loess_apply(plan, grid[rows, :m])
         C = G.T.ravel()[: n + 2 * period]
         L = _ma_valid(_ma_valid(_ma_valid(C, period), period), 3)
-        L = _loess_apply(lp_plan, L)
+        L = _band_apply(lp_op, L)
         S = C[period: period + n] - L
-        T = _loess_apply(tl_plan, x - S)
+        T = _band_apply(tl_op, x - S)
     return T, S, x - T - S
 
 

@@ -20,6 +20,7 @@ import math
 from typing import Callable
 
 import numpy as np
+from numpy.linalg import _umath_linalg
 
 # ---------------------------------------------------------------------------
 # scoring (reference scoring.py:7-63)
@@ -122,34 +123,100 @@ def _sine_func(t, A, w, p, c):
     return A * np.sin(w * t + p) + c
 
 
+#: the LAPACK gelsd gufunc behind ``np.linalg.lstsq`` (numpy 1.x picks
+#: lstsq_m or lstsq_n by shape, numpy 2 has one ``lstsq``)
+_LSTSQ = getattr(_umath_linalg, "lstsq", None)
+
+
+def _gelsd(J: np.ndarray, r: np.ndarray, rcond: float):
+    """``np.linalg.lstsq(J[i], r[i], rcond)`` for every i of a stack in
+    one call of the LAPACK gelsd gufunc that lstsq itself wraps (same
+    gufunc choice, signature and rcond), so each item's solution is
+    bit-identical to its own lstsq call.  Returns (x, rank): an item
+    whose solve failed, where lstsq raises LinAlgError, has rank -1
+    and NaN x; its neighbours in the stack are unaffected.  Call it
+    under ``np.errstate(invalid="ignore")``: a failed item raises the
+    invalid flag."""
+    m, k = J.shape[-2:]
+    gufunc = _LSTSQ or (
+        _umath_linalg.lstsq_m if m <= k else _umath_linalg.lstsq_n)
+    x, _, rank, _ = gufunc(J, r[..., None], rcond, signature="ddd->ddid")
+    return x[..., 0], rank
+
+
 def _m_sine(Xtr, ytr, Xte, period):
     """TSSine (``_models.py:267-345``): A·sin(wt+p)+c, FFT initial guess
     then Gauss-Newton refinement (stand-in for scipy curve_fit's LM —
-    same objective, deterministic)."""
-    n = ytr.size
+    same objective, deterministic).
+
+    ``ytr`` is one series (m,) or a stack (S, m) of same-length series,
+    fitted in lockstep: every Gauss-Newton step builds the residual and
+    Jacobian of all still-active items with the per-element expressions
+    of a one-series fit and solves them with one stacked gelsd call
+    (``_gelsd``).  An item stops when its step is below 1e-10 or its
+    solve fails (at its previous θ); a non-finite final θ is a failed
+    fit — ValueError for one series, a NaN prediction row in a stack.
+    Each row of a stack therefore equals that series fitted alone, bit
+    for bit, whatever else shares the stack.
+
+    The solves stay SVD least squares on purpose.  On the extract
+    benchmark's series (seed 903) 111 of the 320 fold fits hit the
+    50-step cap without converging, so their θ is wherever step 50
+    leaves it; evaluating one product, A·Xtr·cc as (A·cc)·Xtr, moved a
+    fold RMSE by up to 0.77.  Normal equations (or any solver with
+    different rounding) would move those folds as much, so batching
+    keeps gelsd and only removes the per-call overhead."""
+    Y = np.asarray(ytr, dtype=float)
+    Ys = Y.reshape(-1, Y.shape[-1])
+    S, n = Ys.shape
     if n < 8:
         raise ValueError("too short for sine fit")
     freqs = np.fft.fftfreq(n, Xtr[1] - Xtr[0])
-    fyy = np.abs(np.fft.rfft(ytr))[1:]
-    w0 = 2 * np.pi * abs(freqs[1 + int(np.argmax(fyy))])
-    theta = np.array([ytr.std() * math.sqrt(2), max(w0, 1e-6), 0.0, ytr.mean()])
-    for _ in range(50):
-        A, w, p, c = theta
-        s = np.sin(w * Xtr + p)
-        cc = np.cos(w * Xtr + p)
-        r = ytr - (A * s + c)
-        J = np.column_stack([s, A * Xtr * cc, A * cc, np.ones(n)])
-        try:
-            step, *_ = np.linalg.lstsq(J, r, rcond=None)
-        except np.linalg.LinAlgError:
-            break
-        theta = theta + step
-        if np.max(np.abs(step)) < 1e-10:
-            break
-    A, w, p, c = theta
-    if not np.all(np.isfinite(theta)):
+    theta = np.empty((S, 4))
+    for i, y in enumerate(Ys):
+        fyy = np.abs(np.fft.rfft(y))[1:]
+        w0 = 2 * np.pi * abs(freqs[1 + int(np.argmax(fyy))])
+        theta[i] = (y.std() * math.sqrt(2), max(w0, 1e-6), 0.0, y.mean())
+    rcond = np.finfo(float).eps * max(n, 4)
+    # the items still iterating (ia) with their θ (th) and series (ys),
+    # compacted only when an item stops; the Jacobian's column planes
+    # (the gufunc copies each item to Fortran order whatever the
+    # strides) are s, A·Xtr·cc, A·cc and the constant 1
+    ia, th, ys = np.arange(S), theta.copy(), Ys
+    J = np.empty((S, 4, n))
+    J[:, 3] = 1.0
+    with np.errstate(invalid="ignore", over="ignore", divide="ignore",
+                     under="ignore"):
+        for _ in range(50):
+            A, w, p, c = th[:, 0:1], th[:, 1:2], th[:, 2:3], th[:, 3:4]
+            s = J[:, 0]
+            arg = w * Xtr + p
+            np.sin(arg, out=s)
+            np.cos(arg, out=arg)                     # cc
+            np.multiply(A, Xtr, out=J[:, 1])
+            J[:, 1] *= arg
+            np.multiply(A, arg, out=J[:, 2])
+            np.multiply(A, s, out=arg)
+            arg += c
+            r = np.subtract(ys, arg, out=arg)
+            step, rank = _gelsd(J.transpose(0, 2, 1), r, rcond)
+            # a failed solve stops its item at the previous θ
+            go = rank >= 0
+            th[go] += step[go]
+            go &= ~(np.abs(step).max(axis=1) < 1e-10)
+            if not go.all():
+                theta[ia] = th
+                ia, th, ys, J = ia[go], th[go], ys[go], J[go]
+                if not ia.size:
+                    break
+    theta[ia] = th
+    ok = np.all(np.isfinite(theta), axis=1)
+    if Y.ndim == 1 and not ok[0]:
         raise ValueError("sine fit diverged")
-    return _sine_func(Xte, A, w, p, c)
+    A, w, p, c = (theta[:, j, None] for j in range(4))
+    pred = _sine_func(Xte, A, w, p, c)
+    pred[~ok] = np.nan
+    return pred[0] if Y.ndim == 1 else pred
 
 
 def _m_exp(Xtr, ytr, Xte, period):
@@ -182,16 +249,28 @@ MODELS: dict[str, Callable] = {
 }
 
 
+#: models whose fit takes a (S, m) stack of same-length training series
+#: and returns (S, h) predictions, a NaN row where one item's fit failed
+STACKED_MODELS = frozenset({"model_sine"})
+
+
 def landmark_scores(y: np.ndarray, model: str, period: int | None = None,
                     score: str = "rmse", num_cv_folds: int = 5,
                     lm_sample_frac: float = 1.0) -> np.ndarray:
     """The standard pipeline (``landmarking.py:36-146``): returns the
-    per-fold score vector (len = num_cv_folds), nan where the fit fails."""
+    per-fold score vector (len = num_cv_folds), nan where the fit fails.
+
+    For a ``STACKED_MODELS`` model ``y`` may also be a (S, n) stack of
+    same-length series, giving (S, num_cv_folds): each fold of the
+    whole stack is fitted in one call, and row i equals
+    ``landmark_scores(y[i], ...)`` bit for bit."""
     y = np.asarray(y, dtype=float)
+    if y.ndim != 1 and model not in STACKED_MODELS:
+        raise ValueError(f"{model} takes one series, got shape {y.shape}")
     if lm_sample_frac < 1.0:
-        keep = int(np.ceil(y.size * lm_sample_frac))
-        y = y[-keep:]
-    n = y.size
+        keep = int(np.ceil(y.shape[-1] * lm_sample_frac))
+        y = y[..., -keep:]
+    n = y.shape[-1]
     score_fn = SCORES[score]
     model_fn = MODELS[model]
     # seasonal-naive uses integer timestamps (landmarking.py:1241-1313);
@@ -200,22 +279,24 @@ def landmark_scores(y: np.ndarray, model: str, period: int | None = None,
         X = np.arange(n, dtype=float)
     else:
         X = np.linspace(0.0, 1.0, n)
-    out = np.full(num_cv_folds, np.nan)
+    out = np.full(y.shape[:-1] + (num_cv_folds,), np.nan)
     for fold, (tr_end, te_s, te_e) in enumerate(ts_splits(n, num_cv_folds)):
-        ytr, yte = y[:tr_end], y[te_s:te_e]
+        ytr, yte = y[..., :tr_end], y[..., te_s:te_e]
         Xtr, Xte = X[:tr_end], X[te_s:te_e]
         # per-fold MinMax scale fit on train (landmarking.py:125-136)
-        lo, hi = ytr.min(), ytr.max()
-        span = hi - lo
-        if span == 0:
-            span = 1.0
+        lo = ytr.min(axis=-1, keepdims=True)
+        span = ytr.max(axis=-1, keepdims=True) - lo
+        span[span == 0] = 1.0
         ytr_s = (ytr - lo) / span
         yte_s = (yte - lo) / span
         try:
-            pred = model_fn(Xtr, ytr_s, Xte, period)
-            out[fold] = score_fn(np.asarray(pred, float).ravel(), yte_s)
+            pred = np.asarray(model_fn(Xtr, ytr_s, Xte, period), float)
+            if y.ndim == 1:
+                out[fold] = score_fn(pred.ravel(), yte_s)
+            else:
+                out[:, fold] = [score_fn(a, b) for a, b in zip(pred, yte_s)]
         except (ValueError, ZeroDivisionError, np.linalg.LinAlgError):
-            out[fold] = np.nan
+            out[..., fold] = np.nan
     return out
 
 

@@ -1,13 +1,19 @@
-"""Per-series Arrow kernels: ``groupBy(conv_id).applyInPandas`` over the
-pure-numpy kernel library (functions/kernels.py).
+"""Per-series Arrow kernels over the pure-numpy kernel library
+(functions/kernels.py).
 
 This is the bit-match oracle path (SURVEY §2.12): whole-series
 computations SQL cannot express (FFT ACF/spectrum, O(n²) entropies,
 sequential recurrences) run vectorized per series inside Arrow workers.
 The same kernel functions generate the golden fixtures, so engine
 output equals fixtures by construction — the float-summation-order
-hazard (SURVEY §4.3) is closed by sorting each group by
-``(turn_idx)`` before compute.
+hazard (SURVEY §4.3) is closed by sorting each series by
+``(turn_idx, value)`` before compute.
+
+``series_features`` runs on one partition-level runner
+(``operators/grouped.py``: repartition + sortWithinPartitions + one
+``mapInPandas``), with same-length series of a batch stacked for the
+features in ``BATCHED_FEATURE_KERNELS``; ``bootstrap_series_features``
+is still a ``groupBy(conv_id).applyInPandas``.
 
 Scale design:
   - groups are (conv_id[, series]) — the natural parallelism axis; a
@@ -33,6 +39,7 @@ from pyspark.sql import DataFrame
 
 from ts_pymfe_spark.functions import kernels as K
 from ts_pymfe_spark.functions.summaries import summarize_array
+from ts_pymfe_spark.operators.grouped import map_sorted_groups
 
 FEATURE_SCHEMA = (
     "conv_id string, series string, feature string, idx int, value double"
@@ -88,6 +95,13 @@ for _model in LM.MODELS:
             x, m, period=K.ts_period(x) if m.endswith("seasonal") else None
         )
     )
+
+#: feature name -> callable(X: (S, n) stack of same-length series) ->
+#: S results, result i bit-identical to ``FEATURE_KERNELS[name](X[i])``;
+#: ``series_features`` runs these once per stack instead of per series
+BATCHED_FEATURE_KERNELS: dict[str, Callable[[np.ndarray], Iterable]] = {
+    "model_sine": lambda X: LM.landmark_scores(X, "model_sine"),
+}
 
 # rolling/tiled array features (numpy oracle forms of operators/local_stats)
 for _stat in ("avg", "var", "sd", "skewness", "kurtosis", "acf", "gmean"):
@@ -448,6 +462,27 @@ def _resolve_features(features: Iterable[str] | None) -> list[str]:
     return names
 
 
+def _batched_results(name: str, xs: list[np.ndarray]) -> list[tuple]:
+    """(result, wall_ms) of ``BATCHED_FEATURE_KERNELS[name]`` for every
+    series in ``xs``: one call per stack of same-length series, its
+    wall split evenly over the stack."""
+    by_len: dict[int, list[int]] = {}
+    for i, x in enumerate(xs):
+        by_len.setdefault(x.size, []).append(i)
+    out: list[tuple] = [()] * len(xs)
+    for idx in by_len.values():
+        t0 = time.perf_counter()
+        try:
+            stack = np.stack([xs[i] for i in idx])
+            res = list(BATCHED_FEATURE_KERNELS[name](stack))
+        except Exception:
+            res = [np.nan] * len(idx)  # error containment, as per series
+        ms = (time.perf_counter() - t0) * 1000.0 / len(idx)
+        for i, r in zip(idx, res):
+            out[i] = (r, ms)
+    return out
+
+
 def series_features(
     df: DataFrame,
     features: Iterable[str] | None = None,
@@ -461,6 +496,20 @@ def series_features(
     summaries: Iterable[str] | None = None,
 ) -> DataFrame:
     """Long feature table over per-series Arrow kernels.
+
+    Execution: one partition-level runner (``grouped.map_sorted_groups``)
+    — repartition on the series keys, sort within partitions by
+    (keys, ``order_col``, ``value_col``), one ``mapInPandas`` that cuts
+    the groups with numpy and runs the kernel loop on batches of
+    complete series.  Features in ``BATCHED_FEATURE_KERNELS`` run once
+    per stack of same-length series of a batch (bit-identical to their
+    ``FEATURE_KERNELS`` entry per series); every other feature runs per
+    series.
+
+    Row order: each series is sorted by ``order_col`` with ties broken
+    by ``value_col``, a total order of its rows, so the series (and its
+    ``max_points`` cut) does not depend on input splits, partition
+    count or shuffle order.
 
     ``summaries`` (round 7): when given, the kernel emits summary rows
     (conv_id, series, feature, summary, value[, wall_ms]) DIRECTLY —
@@ -488,7 +537,9 @@ def series_features(
 
     ``measure_time``: add a ``wall_ms`` column = wall-clock of the
     feature's kernel call (reference ``measure_time='total'``,
-    tsmfe.py:128-165; array rows of one feature share the value).
+    tsmfe.py:128-165; array rows of one feature share the value).  A
+    batched feature stamps each series of a stack with the stack's
+    wall divided by its size.
 
     ``parallelism``: partition count for the kernel stage.  AQE's
     bytes-based partition coalescing is WRONG for compute-bound Arrow
@@ -496,10 +547,9 @@ def series_features(
     and AQE happily coalesces it to 2-3 tasks (measured: 3 partitions
     for 2109 series at local[32] — a 10× parallelism collapse).  An
     explicit numbered repartition on the group keys opts out of AQE
-    coalescing AND satisfies the groupBy's required clustering, so no
-    second shuffle is added.  Default: 2× defaultParallelism,
-    clamped to ``n_groups`` when the caller passes its (cheap,
-    approximate) group-count estimate."""
+    coalescing and is the stage's only shuffle.  Default: 2×
+    defaultParallelism, clamped to ``n_groups`` when the caller passes
+    its (cheap, approximate) group-count estimate."""
     names = _resolve_features(features)
     has_series = "series" in df.columns
     keys = ["conv_id", "series"] if has_series else ["conv_id"]
@@ -512,67 +562,74 @@ def series_features(
             # (hash partitioning cannot use more partitions than
             # groups productively)
             parallelism = max(1, min(parallelism, int(n_groups)))
-    df = df.repartition(parallelism, *keys)
 
     summarized = summaries is not None
     summ_names = tuple(summaries) if summarized else ()
     mid_col = "summary" if summarized else "idx"
-    empty_cols = ["conv_id", "series", "feature", mid_col, "value"] + (
-        ["wall_ms"] if measure_time else []
-    )
+    batched = [n for n in names if n in BATCHED_FEATURE_KERNELS]
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < min_points:
-            return pd.DataFrame({c: [] for c in empty_cols})
-        pdf = pdf.sort_values(order_col)
-        if len(pdf) > max_points:
-            pdf = pdf.iloc[-max_points:]
-        x = pdf[value_col].to_numpy(dtype=float)
-        conv = pdf["conv_id"].iloc[0]
-        ser = pdf["series"].iloc[0] if has_series else value_col
+    def kernel(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
+        vals = pdf[value_col].to_numpy(dtype=float)
+        convs = pdf["conv_id"].to_numpy()
+        sers = pdf["series"].to_numpy() if has_series else None
+        groups = []
+        for a, b in zip(starts[:-1].tolist(), starts[1:].tolist()):
+            if b - a >= min_points:
+                groups.append((convs[a], sers[a] if has_series else value_col,
+                               vals[max(a, b - max_points): b].copy()))
+        pre = {n: _batched_results(n, [g[2] for g in groups]) for n in batched}
+        out_conv: list = []
+        out_ser: list = []
         out_feat: list[str] = []
         out_mid: list = []
         out_val: list[float] = []
         out_ms: list[float] = []
-        for name in names:
-            t0 = time.perf_counter() if measure_time else 0.0
-            try:
-                if name in SEEDED_FEATURE_KERNELS:
-                    res = SEEDED_FEATURE_KERNELS[name](
-                        x, feature_seed(conv, name)
-                    )
+        for gi, (conv, ser, x) in enumerate(groups):
+            for name in names:
+                t0 = time.perf_counter() if measure_time else 0.0
+                if name in pre:
+                    res, ms = pre[name][gi]
                 else:
-                    res = FEATURE_KERNELS[name](x)
-            except Exception:
-                res = np.nan  # error containment: nan, never fail the job
-                # (reference behavior: _internal.py:594-614)
-            arr = np.atleast_1d(np.asarray(res, dtype=float))
-            if summarized:
-                # exactly summarize()'s convention: single rows pass
-                # through with summary '', arrays reduce, and an empty
-                # array has no feature rows to summarize, so no rows
-                if arr.size == 0:
-                    rows = []
-                elif arr.size == 1:
-                    rows = [("", float(arr[0]))]
+                    ms = None
+                    try:
+                        if name in SEEDED_FEATURE_KERNELS:
+                            res = SEEDED_FEATURE_KERNELS[name](
+                                x, feature_seed(conv, name)
+                            )
+                        else:
+                            res = FEATURE_KERNELS[name](x)
+                    except Exception:
+                        res = np.nan  # error containment: nan, never fail
+                        # the job (reference behavior: _internal.py:594-614)
+                arr = np.atleast_1d(np.asarray(res, dtype=float))
+                if summarized:
+                    # exactly summarize()'s convention: single rows pass
+                    # through with summary '', arrays reduce, and an empty
+                    # array has no feature rows to summarize, so no rows
+                    if arr.size == 0:
+                        rows = []
+                    elif arr.size == 1:
+                        rows = [("", float(arr[0]))]
+                    else:
+                        rows = summarize_array(arr, summ_names)
+                    out_mid.extend(r[0] for r in rows)
+                    out_val.extend(r[1] for r in rows)
+                    n_rows = len(rows)
                 else:
-                    rows = summarize_array(arr, summ_names)
-                out_feat.extend([name] * len(rows))
-                out_mid.extend(r[0] for r in rows)
-                out_val.extend(r[1] for r in rows)
-                n_rows = len(rows)
-            else:
-                out_feat.extend([name] * arr.size)
-                out_mid.extend(range(arr.size))
-                out_val.extend(arr.tolist())
-                n_rows = arr.size
-            if measure_time:
-                out_ms.extend(
-                    [(time.perf_counter() - t0) * 1000.0] * n_rows
-                )
+                    out_mid.extend(range(arr.size))
+                    out_val.extend(arr.tolist())
+                    n_rows = arr.size
+                out_feat.extend([name] * n_rows)
+                if measure_time:
+                    if ms is None:
+                        ms = (time.perf_counter() - t0) * 1000.0
+                    out_ms.extend([ms] * n_rows)
+            n_new = len(out_feat) - len(out_conv)
+            out_conv.extend([conv] * n_new)
+            out_ser.extend([ser] * n_new)
         cols = {
-            "conv_id": conv,
-            "series": ser,
+            "conv_id": out_conv,
+            "series": out_ser,
             "feature": out_feat,
             mid_col: out_mid,
             "value": out_val,
@@ -587,7 +644,9 @@ def series_features(
     else:
         schema = FEATURE_SCHEMA
     schema += ", wall_ms double" if measure_time else ""
-    return df.groupBy(*keys).applyInPandas(kernel, schema)
+    return map_sorted_groups(df.select(*keys, order_col, value_col), keys,
+                             [order_col, value_col], kernel, schema,
+                             parallelism)
 
 
 BOOTSTRAP_SCHEMA = (
