@@ -1,8 +1,16 @@
 from __future__ import annotations
 
-import pytest
+import os
 
-from ts_pymfe_spark.session import get_spark
+# One BLAS thread on the driver, as session.get_spark gives the Python
+# workers: OpenBLAS reads this only when numpy first loads it, which
+# the imports below do (pyspark.sql imports numpy).
+for _var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
+    os.environ.setdefault(_var, "1")
+
+import pytest  # noqa: E402
+
+from ts_pymfe_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")

@@ -382,3 +382,26 @@ def test_stacked_sine_equals_per_series_lstsq_loop(n):
     parts = [LM.landmark_scores(X[a:b], "model_sine")
              for a, b in ((0, 3), (3, 4), (4, 8))]
     assert same(np.concatenate(parts), ref)
+
+
+def test_stacked_sine_skips_nan_series_without_blas_errors(capfd):
+    """A series holding a NaN starts from a non-finite θ and is never
+    solved: OpenBLAS writes no DLASCL error (at fd level, hence capfd),
+    its rows are NaN, and the finite series beside it still equal
+    their one-series (S = 1) fits bit for bit."""
+    n = 512
+    rng = np.random.default_rng(11)
+    t = np.arange(n)
+    nan_row = rng.standard_normal(n)
+    nan_row[n // 3] = np.nan
+    X = np.stack([3 * np.sin(2 * np.pi * t / 24) + rng.standard_normal(n),
+                  nan_row,
+                  np.cumsum(rng.standard_normal(n))])
+    capfd.readouterr()
+    got = LM.landmark_scores(X, "model_sine")
+    singles = [LM.landmark_scores(X[i], "model_sine") for i in (0, 2)]
+    out, err = capfd.readouterr()
+    assert "DLASCL" not in out + err
+    assert np.isnan(got[1]).all()
+    assert np.array_equal(got[[0, 2]], np.stack(singles))
+    assert np.isfinite(got[[0, 2]]).all()

@@ -988,13 +988,29 @@ def test_pacf_ols_scale_guard_only_for_tiny_sd(monkeypatch):
             assert np.max(np.abs(got - truth)) <= 1e-9, sd
 
 
+def _cheb_dist_by_dim_reference(x: np.ndarray, max_dim: int):
+    """Yield (dim, rows, D) for dim = 1..max_dim where D is the
+    rows×rows Chebyshev distance matrix over the dim-length embedding
+    windows of ``x``, built incrementally (D_d = max(D_{d-1}, new
+    coordinate diff)): the float distance matrices the entropy kernels
+    used before their counts came from one comparison matrix."""
+    n = x.size
+    D = None
+    for d in range(1, max_dim + 1):
+        rows = n - d + 1
+        v = x[d - 1 : d - 1 + rows]
+        step = np.abs(np.subtract.outer(v, v))
+        D = step if D is None else np.maximum(D[:rows, :rows], step)
+        yield d, rows, D
+
+
 def _approx_entropy_reference(ts, m=2, factor=0.2, max_n=512):
     x = np.asarray(ts, dtype=float)
     if x.size > max_n:
         x = x[-max_n:]
     r = factor * x.std(ddof=0)
     phis = {}
-    for d, rows, D in K._cheb_dist_by_dim(x, m + 1):
+    for d, rows, D in _cheb_dist_by_dim_reference(x, m + 1):
         if d in (m, m + 1):
             c = (D <= r).sum(axis=1) / rows
             phis[d] = float(np.mean(np.log(c)))
@@ -1007,7 +1023,7 @@ def _sample_entropy_reference(ts, m=2, factor=0.2, max_n=512):
         x = x[-max_n:]
     r = factor * x.std(ddof=0)
     counts = {}
-    for d, rows, D in K._cheb_dist_by_dim(x, m + 1):
+    for d, rows, D in _cheb_dist_by_dim_reference(x, m + 1):
         if d in (m, m + 1):
             iu = np.triu_indices(rows, k=1)
             counts[d] = int((D[iu] <= r).sum())
@@ -1017,7 +1033,20 @@ def _sample_entropy_reference(ts, m=2, factor=0.2, max_n=512):
     return -math.log(a / b)
 
 
-@pytest.mark.parametrize("n", [40, 300, 700])
+def _entropy_inputs(n, m):
+    rng = np.random.default_rng(n + m)
+    with_nan = rng.standard_normal(n)
+    with_nan[-3] = np.nan
+    return {
+        "gaussian": rng.standard_normal(n),
+        "lognormal": rng.lognormal(size=n) * 1e3,
+        "constant": np.full(n, 4.0),
+        "sparse_01": (rng.random(n) < 0.1).astype(float),
+        "with_nan": with_nan,
+    }
+
+
+@pytest.mark.parametrize("n", [3, 5, 40, 300, 512, 700])
 @pytest.mark.parametrize("m", [1, 2, 3])
 def test_entropies_from_shared_counts_bit_identical(n, m):
     """approx_entropy/sample_entropy read one memoized match-count pass
@@ -1025,17 +1054,7 @@ def test_entropies_from_shared_counts_bit_identical(n, m):
     to the per-kernel passes with triu_indices, also past the 512-point
     truncation, on r = 0 (constant input) and on r = NaN (a NaN in the
     series: no diagonal self-match either)."""
-    rng = np.random.default_rng(n + m)
-    with_nan = rng.standard_normal(n)
-    with_nan[-3] = np.nan
-    inputs = {
-        "gaussian": rng.standard_normal(n),
-        "lognormal": rng.lognormal(size=n) * 1e3,
-        "constant": np.full(n, 4.0),
-        "sparse_01": (rng.random(n) < 0.1).astype(float),
-        "with_nan": with_nan,
-    }
-    for kind, x in inputs.items():
+    for kind, x in _entropy_inputs(n, m).items():
         with np.errstate(divide="ignore"):
             pairs = [
                 (_approx_entropy_reference(x, m=m), K.approx_entropy(x, m=m)),
@@ -1045,6 +1064,29 @@ def test_entropies_from_shared_counts_bit_identical(n, m):
             ]
         for ref, got in pairs:
             assert (np.isnan(ref) and np.isnan(got)) or ref == got, kind
+
+
+@pytest.mark.parametrize("n", [3, 5, 40, 300, 512, 700])
+@pytest.mark.parametrize("m", [1, 2, 3])
+def test_entropy_counts_equal_distance_matrix_counts(n, m):
+    """The counts read from one comparison matrix (hits of dimension d
+    = hits of d−1 AND the shifted dimension-1 hits) equal the row and
+    upper-triangle pair counts of the float Chebyshev matrices D_d ≤ r,
+    for every input kind, with and without the memo."""
+    for kind, x in _entropy_inputs(n, m).items():
+        xs = x[-512:]
+        r = 0.2 * xs.std(ddof=0)
+        ref = {}
+        for d, rows, D in _cheb_dist_by_dim_reference(xs, m + 1):
+            if d in (m, m + 1):
+                iu = np.triu_indices(rows, k=1)
+                ref[d] = ((D <= r).sum(axis=1), int((D[iu] <= r).sum()))
+        for memo in (True, False):
+            got = K._entropy_counts(x, m, 0.2, 512, memo)
+            assert set(got) == set(ref), kind
+            for d, (rowcount, pairs) in ref.items():
+                assert np.array_equal(got[d][0], rowcount), (kind, d)
+                assert got[d][1] == pairs, (kind, d)
 
 
 def test_moving_approx_ent_keeps_series_memo():

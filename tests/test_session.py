@@ -42,3 +42,34 @@ def _default_cpus(env_cpus):
 def test_default_cpus_is_host_cores_unless_overridden():
     assert _default_cpus(None) == os.cpu_count()
     assert _default_cpus("3") == 3
+
+
+def test_driver_blas_rounds_like_the_workers(spark):
+    """The pytest driver runs OpenBLAS with the workers' one thread
+    (conftest sets the variables before numpy loads): a gemv of the
+    STL band operator's edge-block shape, whose rounding depends on
+    the thread count at these sizes, is bitwise equal on the driver
+    and in a mapInPandas worker."""
+    import numpy as np
+    import pandas as pd
+
+    from ts_pymfe_spark.functions.kernels import _band_operator
+
+    def products():
+        rng = np.random.default_rng(7)
+        out = []
+        for n, q in ((512, 253), (456, 201), (700, 411)):
+            op = _band_operator(n, q)
+            qe = op.shape[1]
+            y = rng.lognormal(3, 1, n)
+            out.append((op[: (qe - 1) // 2] @ y[:qe]).tobytes().hex())
+        return out
+
+    def in_worker(batches):
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"hex": products()})
+
+    got = spark.range(1, numPartitions=1).mapInPandas(
+        in_worker, "hex string").toPandas()
+    assert list(got.hex) == products()

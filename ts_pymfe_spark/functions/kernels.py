@@ -636,31 +636,25 @@ def _embed(x: np.ndarray, dim: int, lag: int = 1) -> np.ndarray:
                             for j in range(dim)])
 
 
-def _cheb_dist_by_dim(x: np.ndarray, max_dim: int):
-    """Yield (dim, rows, D) for dim = 1..max_dim where D is the
-    rows×rows Chebyshev distance matrix over the dim-length embedding
-    windows of ``x`` — built INCREMENTALLY (D_d = max(D_{d-1}, new
-    coordinate diff)), the same O(n²)-per-dim trick as cao_e1_e2,
-    instead of an O(n²·d) broadcast tensor per dimension."""
-    n = x.size
-    D = None
-    for d in range(1, max_dim + 1):
-        rows = n - d + 1
-        v = x[d - 1 : d - 1 + rows]
-        step = np.abs(np.subtract.outer(v, v))
-        D = step if D is None else np.maximum(D[:rows, :rows], step)
-        yield d, rows, D
-
-
 def _entropy_counts(ts: np.ndarray, m: int, factor: float, max_n: int,
                     memo: bool = True):
     """The one O(n²) pass approx_entropy and sample_entropy share: for
     d in (m, m+1), the per-row count of D_d ≤ r (self-match included)
-    and the number of matching pairs i < j.  The input is truncated to
-    its last ``max_n`` points and r = factor·std.
+    and the number of matching pairs i < j, where D_d is the Chebyshev
+    distance matrix of the d-length embedding windows.  The input is
+    truncated to its last ``max_n`` points and r = factor·std.
 
-    Pairs are (Σ rowcount − diagonal matches) // 2: D is exactly
-    symmetric, so this is the upper-triangle count without the
+    No D_d is built.  max(a, b) ≤ r exactly when a ≤ r and b ≤ r, and
+    the dimension-d step matrix is the dimension-1 one shifted by d−1
+    on both axes.  So B = |x_i − x_j| ≤ r is computed once, from one
+    ``subtract.outer``, and the hits of dimension d are those of d−1
+    (cut to the rows of d) AND B shifted by d−1: one float pass and
+    boolean ANDs.  Each comparison is the same float subtraction as in
+    a per-dimension matrix, so the counts are exact, also for NaN input
+    (NaN is never ≤ r) and r = 0.
+
+    Pairs are (Σ rowcount − diagonal matches) // 2: the hits are
+    exactly symmetric, so this is the upper-triangle count without the
     ``triu_indices`` gather.  Memoized on the truncated series, m and
     factor (not r, which is NaN and never equal to itself when the
     series holds a NaN), so the second of the two kernels on a series
@@ -673,10 +667,16 @@ def _entropy_counts(ts: np.ndarray, m: int, factor: float, max_n: int,
     r = factor * x.std(ddof=0)
 
     def run():
+        diff = np.subtract.outer(x, x)
+        B = np.abs(diff, out=diff) <= r
+        hit = B
         counts = {}
-        for d, rows, D in _cheb_dist_by_dim(x, m + 1):
-            if d in (m, m + 1):
-                hit = D <= r
+        for d in range(1, m + 2):
+            if d > 1:
+                rows = x.size - d + 1
+                hit = hit[:rows, :rows] & B[d - 1:d - 1 + rows,
+                                            d - 1:d - 1 + rows]
+            if d >= m:
                 rowcount = hit.sum(axis=1)
                 self_hits = np.count_nonzero(np.diagonal(hit))
                 counts[d] = (rowcount, int(rowcount.sum() - self_hits) // 2)

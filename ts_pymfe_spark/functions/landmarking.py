@@ -181,13 +181,17 @@ def _m_sine(Xtr, ytr, Xte, period):
     # the items still iterating (ia) with their θ (th) and series (ys),
     # compacted only when an item stops; the Jacobian's column planes
     # (the gufunc copies each item to Fortran order whatever the
-    # strides) are s, A·Xtr·cc, A·cc and the constant 1
-    ia, th, ys = np.arange(S), theta.copy(), Ys
-    J = np.empty((S, 4, n))
+    # strides) are s, A·Xtr·cc, A·cc and the constant 1.  An item whose
+    # initial θ is not finite (a NaN or inf in its series) never starts:
+    # no step can make its θ finite, so it is a failed fit either way,
+    # and gelsd on NaN input makes OpenBLAS print a DLASCL error
+    ia = np.flatnonzero(np.all(np.isfinite(theta), axis=1))
+    th, ys = theta[ia], Ys[ia]
+    J = np.empty((ia.size, 4, n))
     J[:, 3] = 1.0
     with np.errstate(invalid="ignore", over="ignore", divide="ignore",
                      under="ignore"):
-        for _ in range(50):
+        for _ in range(50 if ia.size else 0):
             A, w, p, c = th[:, 0:1], th[:, 1:2], th[:, 2:3], th[:, 3:4]
             s = J[:, 0]
             arg = w * Xtr + p

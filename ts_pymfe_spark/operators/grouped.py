@@ -15,6 +15,9 @@ next one; a group is never split across two ``fn`` calls.
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
 from typing import Callable, Iterator, Sequence
 
 import numpy as np
@@ -26,6 +29,47 @@ from pyspark.sql import DataFrame
 #: input rows before ``fn`` runs on them (one group larger than this is
 #: still passed whole)
 BATCH_ROWS = 1 << 16
+
+
+class _FrozenZipImporter(zipimport.zipimporter):
+    """A ``zipimporter`` that keeps the archive directory it has read:
+    ``importlib.invalidate_caches()`` no longer re-reads the archive."""
+
+    def invalidate_caches(self):
+        pass
+
+
+def freeze_spark_archives() -> None:
+    """Stop ``importlib.invalidate_caches()`` re-reading the archives of
+    the Spark installation in this Python worker.
+
+    pyspark's ``worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` at the start of every task, and on
+    Python 3.11 each ``zipimporter`` in ``sys.path_importer_cache``
+    then re-reads its whole archive directory.  A ``local[3]`` worker
+    holds 16 of them: 12 into pyspark.zip (the archive and sub-packages
+    such as ``pyspark/sql/pandas``), 2 into the spark-core jar (5,359
+    entries, no ``.py`` file among them) and 2 into the py4j zip.  One
+    call took 0.17–0.30 s in a worker on a 4-core host (one re-read of
+    pyspark.zip 8–16 ms, of the jar 27–63 ms, of py4j 0.3 ms), paid by
+    every Python task before its kernels start, also on a reused
+    worker.
+
+    Every plain ``zipimporter`` outside ``SparkFiles.getRootDirectory()``
+    becomes a ``_FrozenZipImporter`` (a class swap: nothing is read).
+    Those archives are installation files that do not change while a
+    worker runs, so no import result changes; archives shipped with
+    ``addPyFile`` live under the root directory and still invalidate.
+    Workers are reused (``spark.python.worker.reuse``), so this pays
+    off from a worker's second task on; call it at the start of every
+    task, where it costs microseconds."""
+    from pyspark import SparkFiles
+
+    shipped = os.path.join(SparkFiles.getRootDirectory(), "")
+    for path, finder in list(sys.path_importer_cache.items()):
+        if (type(finder) is zipimport.zipimporter
+                and not path.startswith(shipped)):
+            finder.__class__ = _FrozenZipImporter
 
 
 def group_starts(pdf: pd.DataFrame, keys: Sequence[str]) -> np.ndarray:
@@ -55,13 +99,17 @@ def map_sorted_groups(
     put enough columns in ``order`` to break every tie.  ``pdf`` holds
     whole groups only, ``starts`` is ``group_starts(pdf, keys)``, and
     ``fn`` returns the output rows (columns of ``schema``) of all of
-    them."""
+    them.
+
+    Each task starts with ``freeze_spark_archives()``: a reused worker
+    then skips pyspark's per-task re-read of Spark's own archives."""
     keys = list(keys)
     batch_rows = BATCH_ROWS  # read here: the closure carries it to workers
     sorted_df = df.repartition(parallelism, *keys).sortWithinPartitions(
         *keys, *order)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        freeze_spark_archives()
         done: list[pd.DataFrame] = []   # complete groups not yet run
         done_rows = 0
         tail: list[pd.DataFrame] = []   # pieces of the group still open

@@ -63,6 +63,12 @@ def get_spark(
     # OpenBLAS additionally spawn ncpu threads per worker oversubscribes
     # cores quadratically and ANTI-scales the Arrow-kernel path
     # (measured: 8-core feature job slower than 2-core before this pin).
+    # The workers get it from spark.executorEnv.* below.  The driver's
+    # own BLAS reads these variables only when numpy first loads, which
+    # ``import pyspark.sql`` (above) has normally done already, so the
+    # setdefault here does not reach it: a driver that must round like
+    # the workers (gemv splits work per thread) sets them before
+    # importing numpy, as tests/conftest.py does.
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
     builder = (
