@@ -23,6 +23,7 @@ general.py, model_based.py, landmarking.py, freq_domain.py).
 from __future__ import annotations
 
 import math
+import warnings
 
 import numpy as np
 import pytest
@@ -226,6 +227,18 @@ def test_lz_complexity_hand_case():
     got = K.lz_complexity(x, num_bins=2)
     n = 10
     assert got == pytest.approx(5 / (n / math.log2(n)))
+
+
+@pytest.mark.parametrize("bad", [np.nan, np.inf, -np.inf])
+def test_lz_complexity_non_finite_is_nan(bad):
+    """A non-finite point makes the equal-width discretisation undefined
+    (the reference raises and scores NaN); it must not collapse the
+    series to one symbol and score it as constant."""
+    x = np.random.default_rng(0).normal(size=600)
+    x[100] = bad
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert math.isnan(K.lz_complexity(x))
 
 
 def test_walker_path_hand_recurrence():

@@ -6,6 +6,7 @@ import contextlib
 import shutil
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -614,6 +615,105 @@ def test_uncommitted_manifest_tmp_is_pending(spark, turns, tmp_path):
         tier, "bucket_start", "day") == []
 
 
+# One run_stream_to_store arrival on an existing store submits at most
+# this many Spark jobs: the batch's 1m rollup and its write.  The store
+# keeps 1m partials only, so a change that brings back per-batch 1h/1d
+# writes (or a persist of the batch aggregate) fails the guard below.
+STREAM_COMMIT_MAX_JOBS = 2
+
+
+def _streamed_store(spark, turns, root, files=3):
+    """A 1m partial store streamed from ``files`` input files, one
+    microbatch per file; returns (in_dir, store, ckpt)."""
+    from ts_pymfe_spark.streaming.rollup_stream import run_stream_to_store
+
+    in_dir, store, ckpt = (str(root / d) for d in ("in", "store", "ckpt"))
+    turns.repartition(files).write.mode("overwrite").parquet(in_dir)
+    run_stream_to_store(spark, in_dir, store, ckpt, max_files_per_trigger=1)
+    return in_dir, store, ckpt
+
+
+def _tiers_pdf(tiers):
+    return {t: df.orderBy(*KEY).toPandas() for t, df in tiers.items()}
+
+
+def _batch_dirs(store):
+    import os
+
+    return sorted(d for d in os.listdir(f"{store}/tier=1m")
+                  if d.startswith("batch="))
+
+
+def test_stream_commit_job_count_guard(spark, turns, tmp_path):
+    from ts_pymfe_spark.streaming.rollup_stream import run_stream_to_store
+
+    in_dir, store, ckpt = _streamed_store(spark, turns, tmp_path, files=2)
+    turns.limit(500).coalesce(1).write.mode("append").parquet(in_dir)
+    with _spark_jobs(spark) as n:
+        run_stream_to_store(spark, in_dir, store, ckpt)
+    assert len(_batch_dirs(store)) == 3
+    assert 0 < n["jobs"] <= STREAM_COMMIT_MAX_JOBS
+
+
+def test_stream_replay_is_idempotent(spark, turns, tmp_path):
+    """A batch whose commit never reached the checkpoint is replayed on
+    the next run: it overwrites its own batch dir, adds none, and the
+    merged tiers are exactly what the first run read."""
+    import os
+
+    from ts_pymfe_spark.streaming.rollup_stream import (
+        read_all_tiers,
+        run_stream_to_store,
+    )
+
+    in_dir, store, ckpt = _streamed_store(spark, turns, tmp_path)
+    first = _tiers_pdf(read_all_tiers(spark, store))
+    dirs = _batch_dirs(store)
+    assert len(dirs) >= 2
+    last = max(int(d.split("=")[1]) for d in dirs)
+    replayed = f"{store}/tier=1m/batch={last}"
+    before = set(os.listdir(replayed))
+
+    for f in (f"{last}", f".{last}.crc"):  # the commit and its checksum
+        os.remove(f"{ckpt}/commits/{f}")
+    run_stream_to_store(spark, in_dir, store, ckpt, max_files_per_trigger=1)
+
+    assert os.path.exists(f"{ckpt}/commits/{last}")
+    assert _batch_dirs(store) == dirs
+    assert set(os.listdir(replayed)) != before  # rewritten, not kept
+    again = _tiers_pdf(read_all_tiers(spark, store))
+    for t in ("1m", "1h", "1d"):
+        pd.testing.assert_frame_equal(again[t], first[t], check_exact=True)
+
+
+def test_stream_readers_ignore_old_layout_tier_dirs(spark, turns, tmp_path):
+    """Stores from the earlier layout also hold per-batch 1h and 1d
+    partials.  Planted for the first batch only (a store whose writer
+    switched to 1m-only partials after it), they must not change what
+    read_tier or read_all_tiers return."""
+    from ts_pymfe_spark.operators.rollup import cascade
+    from ts_pymfe_spark.streaming.rollup_stream import (
+        read_all_tiers,
+        read_tier,
+    )
+
+    _, store, _ = _streamed_store(spark, turns, tmp_path)
+    exp_1h = read_tier(spark, store, "1h").orderBy(*KEY).toPandas()
+    exp = _tiers_pdf(read_all_tiers(spark, store))
+
+    b0 = _batch_dirs(store)[0]
+    up = spark.read.parquet(f"{store}/tier=1m/{b0}")
+    for tier in ("1h", "1d"):
+        up = cascade(up, tier)
+        up.write.parquet(f"{store}/tier={tier}/{b0}")
+
+    got_1h = read_tier(spark, store, "1h").orderBy(*KEY).toPandas()
+    pd.testing.assert_frame_equal(got_1h, exp_1h, check_exact=True)
+    got = _tiers_pdf(read_all_tiers(spark, store))
+    for t in ("1m", "1h", "1d"):
+        pd.testing.assert_frame_equal(got[t], exp[t], check_exact=True)
+
+
 def test_stream_store_retention_expires_batches_crash_safe(
         spark, turns, tmp_path):
     """Round-5 streaming retention (VERDICT r4 #6): the streamed
@@ -736,6 +836,7 @@ def test_stream_store_compaction_exactly_once(spark, turns, tmp_path):
                         max_files_per_trigger=1)
 
     pre = read_tier(spark, store, "1m").orderBy(*KEY).toPandas()
+    pre_1h = read_tier(spark, store, "1h").orderBy(*KEY).toPandas()
     n_batches = len(os.listdir(f"{store}/tier=1m"))
 
     cutoff = days[2]
@@ -756,6 +857,16 @@ def test_stream_store_compaction_exactly_once(spark, turns, tmp_path):
     np.testing.assert_array_equal(got["n"].to_numpy(), pre["n"].to_numpy())
     np.testing.assert_allclose(
         got["s1"].to_numpy(), pre["s1"].to_numpy(), rtol=1e-12
+    )
+    # coarser tiers compose from the compacted 1m view
+    got_1h = read_tier_compacted(spark, store, compact, "1h").orderBy(
+        *KEY
+    ).toPandas()
+    assert len(got_1h) == len(pre_1h)
+    np.testing.assert_array_equal(
+        got_1h["n"].to_numpy(), pre_1h["n"].to_numpy())
+    np.testing.assert_allclose(
+        got_1h["s1"].to_numpy(), pre_1h["s1"].to_numpy(), rtol=1e-12
     )
 
     # idempotent re-run: nothing new to commit, view unchanged
@@ -881,10 +992,11 @@ def test_streaming_hll_matches_batch(spark, turns, tmp_path):
     """Streamed per-microbatch HLL partials, max-merged on read, equal
     the batch sketch over the same rows — register-exact, so the
     estimates match to the last ulp."""
-    from ts_pymfe_spark.operators.sketches import hll_estimate, hll_sketch
+    from ts_pymfe_spark.operators.sketches import (hll_estimate, hll_merge,
+                                                   hll_sketch)
     from ts_pymfe_spark.streaming.rollup_stream import (
-        read_hll_sketch,
-        run_hll_stream_to_store,
+        read_partials,
+        run_partials_to_store,
     )
     from pyspark.sql import functions as F
 
@@ -893,8 +1005,11 @@ def test_streaming_hll_matches_batch(spark, turns, tmp_path):
     ckpt = str(tmp_path / "hll_ckpt")
     turns.repartition(16).write.mode("overwrite").parquet(in_dir)
 
-    run_hll_stream_to_store(spark, in_dir, store, ckpt)
-    got = read_hll_sketch(spark, store)
+    run_partials_to_store(
+        spark, in_dir, store, ckpt,
+        lambda b: hll_sketch(b.select(F.to_date("ts").alias("day"),
+                                      "conv_id"), ["day"], "conv_id"))
+    got = hll_merge(read_partials(spark, store))
     exp = hll_sketch(
         spark.read.parquet(in_dir)
         .select(F.to_date("ts").alias("day"), "conv_id"),
@@ -1025,11 +1140,12 @@ def test_streaming_histogram_matches_batch(spark, turns, tmp_path):
     batch quantiles exactly."""
     from pyspark.sql import functions as F
 
-    from ts_pymfe_spark.operators.histogram import (histogram_quantile,
+    from ts_pymfe_spark.operators.histogram import (histogram_merge,
+                                                    histogram_quantile,
                                                     histogram_sketch)
     from ts_pymfe_spark.streaming.rollup_stream import (
-        read_hist_sketch,
-        run_hist_stream_to_store,
+        read_partials,
+        run_partials_to_store,
     )
 
     in_dir = str(tmp_path / "hist_in")
@@ -1037,8 +1153,12 @@ def test_streaming_histogram_matches_batch(spark, turns, tmp_path):
     ckpt = str(tmp_path / "hist_ckpt")
     turns.repartition(16).write.mode("overwrite").parquet(in_dir)
 
-    run_hist_stream_to_store(spark, in_dir, store, ckpt)
-    got = read_hist_sketch(spark, store)
+    run_partials_to_store(
+        spark, in_dir, store, ckpt,
+        lambda b: histogram_sketch(
+            b.select(F.to_date("ts").alias("day"), "turn_idx"),
+            ["day"], "turn_idx", 0.0, 200.0, 100))
+    got = histogram_merge(read_partials(spark, store))
     exp = histogram_sketch(
         spark.read.parquet(in_dir)
         .select(F.to_date("ts").alias("day"), "turn_idx"),
@@ -1167,11 +1287,11 @@ def test_streaming_cms_matches_batch(spark, turns, tmp_path):
     """Streamed per-microbatch count-min counter partials, sum-merged
     on read, equal the batch sketch over the same rows — counter-exact
     (integer sums), so every point estimate matches exactly."""
-    from ts_pymfe_spark.operators.sketches import (cms_estimate,
+    from ts_pymfe_spark.operators.sketches import (cms_estimate, cms_merge,
                                                    cms_sketch)
     from ts_pymfe_spark.streaming.rollup_stream import (
-        read_cms_sketch,
-        run_cms_stream_to_store,
+        read_partials,
+        run_partials_to_store,
     )
 
     in_dir = str(tmp_path / "cms_in")
@@ -1179,8 +1299,9 @@ def test_streaming_cms_matches_batch(spark, turns, tmp_path):
     ckpt = str(tmp_path / "cms_ckpt")
     turns.repartition(16).write.mode("overwrite").parquet(in_dir)
 
-    run_cms_stream_to_store(spark, in_dir, store, ckpt)
-    got = read_cms_sketch(spark, store)
+    run_partials_to_store(spark, in_dir, store, ckpt,
+                          lambda b: cms_sketch(b, "conv_id"))
+    got = cms_merge(read_partials(spark, store))
     whole = spark.read.parquet(in_dir)
     exp = cms_sketch(whole, "conv_id")
     assert sorted(map(tuple, got.collect())) == \
@@ -1203,10 +1324,12 @@ def test_streaming_daily_health_matches_batch(spark, tmp_path):
     of 1/4 are exact in any merge order)."""
     import datetime as dt
 
-    from ts_pymfe_spark.operators.drift import daily_drift
+    from ts_pymfe_spark.operators.drift import (daily_drift,
+                                                daily_health_from_partials,
+                                                daily_health_partials)
     from ts_pymfe_spark.streaming.rollup_stream import (
-        read_daily_health,
-        run_health_stream_to_store,
+        read_partials,
+        run_partials_to_store,
     )
 
     t0 = dt.datetime(2024, 3, 1)
@@ -1224,8 +1347,11 @@ def test_streaming_daily_health_matches_batch(spark, tmp_path):
     ckpt = str(tmp_path / "h_ckpt")
     df.repartition(16).write.mode("overwrite").parquet(in_dir)
 
-    run_health_stream_to_store(spark, in_dir, store, ckpt)
-    got = read_daily_health(spark, store).orderBy("col_name", "day")
+    run_partials_to_store(spark, in_dir, store, ckpt,
+                          daily_health_partials,
+                          schema=spark.read.parquet(in_dir).schema)
+    got = daily_health_from_partials(read_partials(spark, store)) \
+        .orderBy("col_name", "day")
     exp = daily_drift(spark.read.parquet(in_dir)) \
         .orderBy("col_name", "day")
     assert [tuple(r) for r in got.collect()] == \
@@ -1240,11 +1366,12 @@ def test_streaming_drift_cells_match_batch(spark, tmp_path):
     read, equal the batch cells exactly (integer counts), so the
     KS/PSI verdicts from the store match the batch screens."""
     from ts_pymfe_spark.operators.drift import (drift_cells,
+                                                drift_cells_merge,
                                                 ks_from_cells,
                                                 psi_from_cells)
     from ts_pymfe_spark.streaming.rollup_stream import (
-        read_drift_cells,
-        run_drift_cells_to_store,
+        read_partials,
+        run_partials_to_store,
     )
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -1255,12 +1382,14 @@ def test_streaming_drift_cells_match_batch(spark, tmp_path):
 
     bounds = {t: (0.0, 100.0) for t in
               ("view", "click", "purchase", "signup", "error")}
-    run_drift_cells_to_store(spark, in_dir, store, ckpt, bounds,
-                             bins=64)
-    got = read_drift_cells(spark, store)
     bdf = spark.createDataFrame(
         [(k, lo, hi) for k, (lo, hi) in bounds.items()],
         "event_type string, lo double, hi double")
+    run_partials_to_store(
+        spark, in_dir, store, ckpt,
+        lambda b: drift_cells(b, F.col("user_id") % 2, bdf, bins=64),
+        schema=spark.read.parquet(in_dir).schema)
+    got = drift_cells_merge(read_partials(spark, store))
     exp = drift_cells(spark.read.parquet(in_dir),
                       F.col("user_id") % 2, bdf, bins=64)
     assert sorted(map(tuple, got.collect())) == \

@@ -717,9 +717,12 @@ def sample_entropy(ts: np.ndarray, m: int = 2, factor: float = 0.2,
 
 def lz_complexity(ts: np.ndarray, num_bins: int = 10) -> float:
     """Lempel-Ziv complexity of the equal-width-discretized series,
-    normalized by n/log2(n) — ``info_theory.py:1169-1232``."""
+    normalized by n/log2(n) — ``info_theory.py:1169-1232``.  NaN on a
+    non-finite value, where the reference's discretisation raises."""
     x = np.asarray(ts, dtype=float)
     n = x.size
+    if not np.isfinite(x).all():
+        return np.nan
     mn, mx = x.min(), x.max()
     if mx == mn:
         sym = np.zeros(n, dtype=int)

@@ -187,7 +187,9 @@ class TierMap(dict):
 def build_all_tiers(series_df: DataFrame, salted: bool = True,
                     include_turn_rate: bool = True,
                     persist: bool = False) -> TierMap:
-    """The full cascade.  Returns TierMap {tier: moments DataFrame}.
+    """The full cascade: the one pass over raw points (1m
+    ``rollup_raw``) through ``compose_tiers``.  Returns TierMap
+    {tier: moments DataFrame}.
 
     ``persist=True`` caches the 1m tier (it is consumed twice: by the
     emergent turn-rate rollup and by the 1h cascade) and the 1h tier
@@ -197,6 +199,16 @@ def build_all_tiers(series_df: DataFrame, salted: bool = True,
     and rely on the written table instead.  Callers that persist MUST
     release with ``tiers.unpersist_all()`` (not just per-tier
     unpersist) — see TierMap."""
+    return compose_tiers(rollup_raw(series_df, "1m", salted=salted),
+                         include_turn_rate, persist)
+
+
+def compose_tiers(t1m: DataFrame, include_turn_rate: bool = True,
+                  persist: bool = False) -> TierMap:
+    """Every tier from the main-branch 1m moment vectors: the emergent
+    turn-rate branch, then the 1h/1d cascades.  Shared by the batch
+    cascade and the streaming store's merge-on-read (rollup_stream);
+    ``persist`` as in ``build_all_tiers``."""
     from pyspark import StorageLevel
 
     from functools import reduce
@@ -218,7 +230,6 @@ def build_all_tiers(series_df: DataFrame, salted: bool = True,
     # keep ClusteredDistribution satisfied and the whole raw->1d path
     # needs exactly ONE exchange (audited in tests/test_plan_audits.py).
     tiers = TierMap()
-    t1m = rollup_raw(series_df, "1m", salted=salted)
     if persist:
         t1m = _persist(t1m, tiers)
     branches = [t1m]

@@ -6,8 +6,7 @@ MEMORY_AND_DISK 1m cache duplicated data that CheckpointedWriter had
 just written, contradicting rollup.py's own guidance ("callers that
 write each tier to storage should leave this False"), and the cache was
 the documented cause of a resume OOM at default driver memory.  This
-module implements the scale-safe form — the pattern
-``streaming/rollup_stream.read_all_tiers`` already uses:
+module implements the scale-safe form as a commit-and-read-back ladder:
 
   1. the main-branch 1m tier is aggregated from raw and committed
      (the ONLY pass over raw points — one conv_id exchange when the
@@ -24,6 +23,15 @@ module implements the scale-safe form — the pattern
 Branch note: ``cascade`` of the stored union equals the batch path's
 union-of-branch-cascades because the two branches' group keys are
 disjoint (``series`` = 'turn_rate' vs the rest).
+
+Why this is not ``rollup.compose_tiers``: that composition (used by
+``build_all_tiers`` and the streaming store's ``read_all_tiers``)
+builds every tier as one lazy plan over a 1m relation, so its 1d tier
+recomputes from 1m.  Here each step reads back the tier it has just
+committed — 1d from the stored 1h, the turn-rate branch from the stored
+1m — so every step resumes independently and never re-derives a
+committed tier.  It is composed from the same primitives
+(``rollup_raw``, ``rate_1m_projection``, ``cascade``).
 """
 
 from __future__ import annotations

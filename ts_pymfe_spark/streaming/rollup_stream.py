@@ -2,7 +2,7 @@
 fresh as transcript turns arrive.
 
 Design: **stateless partial vectors + merge-on-read** — each microbatch
-computes plain per-(conv, series, bucket) moment vectors for JUST its
+computes plain per-(conv, series, minute) moment vectors for JUST its
 rows (no streaming state, no watermark-dropped late data) and appends
 them as partials; reading a tier finishes the merge with the same
 associative ``moment_merge_aggs`` the batch cascade uses.  Late or
@@ -10,9 +10,14 @@ out-of-order turns simply add another partial to their bucket — exact
 regardless of arrival order, the same property that makes the batch
 cascade salt-safe.
 
-A watermarked windowed variant (``streaming_rollup_1m_watermarked``) is
-also provided for bounded-state pipelines where late data past the
-horizon may be dropped by contract.
+The store keeps **1m partials only** (``tier=1m/batch=<id>``); 1h and
+1d are composed on read from the merged 1m by ``rollup.compose_tiers``,
+the batch cascade's own composition (turn_rate needs the MERGED 1m
+count anyway, see ``read_all_tiers``).  Stores written by the earlier
+layout may also hold ``tier=1h/batch=*`` and ``tier=1d/batch=*``
+directories; readers ignore them.  ``run_partials_to_store`` and
+``read_partials`` carry the same contract for any mergeable partial
+(HLL registers, histogram/count-min counters, health, drift cells).
 
 At production scale the source is Kafka/Iceberg CDC and the partial
 store is an Iceberg table compacted periodically (merge partials into
@@ -22,12 +27,16 @@ source with ``availableNow`` triggers serves tests.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ts_pymfe_spark.functions.moments import moment_aggs, moment_merge_aggs
+from ts_pymfe_spark.functions.moments import moment_merge_aggs
 from ts_pymfe_spark.operators.derive import derive_series
-from ts_pymfe_spark.operators.rollup import KEY, TIERS
+from ts_pymfe_spark.operators.rollup import (KEY, TierMap, compose_tiers,
+                                             rollup_raw)
 from ts_pymfe_spark.synth import TURNS_SCHEMA
 
 
@@ -40,65 +49,49 @@ def stream_turns(spark: SparkSession, input_dir: str,
     )
 
 
-def streaming_rollup_1m_watermarked(turns_stream: DataFrame,
-                                    watermark: str = "10 minutes") -> DataFrame:
-    """Stateful windowed variant: bounded state via watermark; late data
-    beyond the horizon is dropped (append-mode contract)."""
-    series = derive_series(turns_stream).withWatermark("ts", watermark)
-    return (
-        series.groupBy("conv_id", "series", F.window("ts", "1 minute"))
-        .agg(*moment_aggs("value", "ts"))
-        .withColumn("bucket_start", F.col("window.start"))
-        .drop("window")
+def run_partials_to_store(spark: SparkSession, input_dir: str,
+                          store_dir: str, checkpoint_dir: str,
+                          partial: Callable[[DataFrame], DataFrame],
+                          schema: StructType = TURNS_SCHEMA,
+                          max_files_per_trigger: int = 8) -> None:
+    """availableNow streaming job writing ``partial(batch)`` of every
+    microbatch to ``store_dir/batch=<id>``; ``schema`` is the input's
+    row schema.  Exactly-once via the streaming checkpoint: a replayed
+    batch overwrites its own directory, so appends are idempotent."""
+
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
+        partial(batch).write.mode("overwrite").parquet(
+            f"{store_dir}/batch={batch_id}")
+
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_dir)
+        .writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
+    q.awaitTermination()
+
+
+def read_partials(spark: SparkSession, store_dir: str) -> DataFrame:
+    """Every batch's partial rows, unmerged, for the operator's merge;
+    the ``batch`` layout column is dropped (it is not a partial key)."""
+    return spark.read.parquet(store_dir).drop("batch")
 
 
 def run_stream_to_store(spark: SparkSession, input_dir: str, store_dir: str,
                         checkpoint_dir: str,
                         max_files_per_trigger: int = 8) -> None:
-    """availableNow streaming job: per-batch partial moment vectors
-    appended per tier; exactly-once batch tracking via the streaming
-    checkpoint (a replayed batch overwrites its own deterministic
-    subdirectory, keeping appends idempotent)."""
-
-    def merge_batch(batch_turns: DataFrame, batch_id: int) -> None:
-        series = derive_series(batch_turns)
-        t1m = (
-            series.select(
-                "conv_id", "series", "ts", "value",
-                F.date_trunc(TIERS["1m"], "ts").alias("bucket_start"),
-            )
-            .groupBy(*KEY)
-            .agg(*moment_aggs("value", "ts"))
-        )
-        t1m = t1m.persist()
-        try:
-            t1m.write.mode("overwrite").parquet(
-                f"{store_dir}/tier=1m/batch={batch_id}"
-            )
-            up = t1m
-            for tier in ("1h", "1d"):
-                up = (
-                    up.withColumn(
-                        "bucket_start", F.date_trunc(TIERS[tier], "bucket_start")
-                    )
-                    .groupBy(*KEY)
-                    .agg(*moment_merge_aggs())
-                )
-                up.write.mode("overwrite").parquet(
-                    f"{store_dir}/tier={tier}/batch={batch_id}"
-                )
-        finally:
-            t1m.unpersist()
-
-    q = (
-        stream_turns(spark, input_dir, max_files_per_trigger)
-        .writeStream.option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(merge_batch)
-        .start()
+    """availableNow streaming job: each batch's 1m moment vectors are
+    appended under ``store_dir/tier=1m``; coarser tiers are composed on
+    read (``read_tier``/``read_all_tiers``)."""
+    run_partials_to_store(
+        spark, input_dir, f"{store_dir}/tier=1m", checkpoint_dir,
+        lambda batch: rollup_raw(derive_series(batch), "1m"),
+        max_files_per_trigger=max_files_per_trigger,
     )
-    q.awaitTermination()
 
 
 def _live_batch_dirs(store_dir: str, tier: str) -> list[str]:
@@ -118,17 +111,18 @@ def _live_batch_dirs(store_dir: str, tier: str) -> list[str]:
 
 
 def read_tier(spark: SparkSession, store_dir: str, tier: str) -> DataFrame:
-    """Merge-on-read: combine per-batch partial vectors into final
-    bucket vectors — identical algebra to the batch cascade, so
-    streaming output == batch output exactly.  Retention-tombstoned
-    batch dirs are excluded even if a crash left them on disk.
+    """Merge-on-read: combine the per-batch 1m partial vectors into
+    final bucket vectors — identical algebra to the batch cascade, so
+    streaming output == batch output exactly; 1h and 1d are the main
+    branch of ``compose_tiers`` over them.  Retention-tombstoned batch
+    dirs are excluded even if a crash left them on disk.
 
     Fails loudly on a compacted store (ADVICE r5): once
     ``compact_stream_store`` has swept batch dirs behind the
     ``_compacted_until`` marker, the partials alone are TRUNCATED
     history — a stale caller must switch to ``read_tier_compacted``
     rather than silently get only the newest buckets."""
-    marker = _compaction_marker(store_dir, tier)
+    marker = _compaction_marker(store_dir, "1m")
     if marker is not None:
         raise RuntimeError(
             f"tier {tier!r} under {store_dir} is compacted up to "
@@ -136,16 +130,19 @@ def read_tier(spark: SparkSession, store_dir: str, tier: str) -> DataFrame:
             "use read_tier_compacted(spark, store_dir, compact_dir, "
             "tier) instead"
         )
-    paths = _live_batch_dirs(store_dir, tier)
+    paths = _live_batch_dirs(store_dir, "1m")
     if not paths:
         raise FileNotFoundError(
-            f"no live batch partials under {store_dir}/tier={tier}"
+            f"no live batch partials under {store_dir}/tier=1m"
         )
-    return (
+    t1m = (
         spark.read.parquet(*paths)
         .groupBy(*KEY)
         .agg(*moment_merge_aggs())
     )
+    if tier == "1m":
+        return t1m
+    return compose_tiers(t1m, include_turn_rate=False)[tier]
 
 
 def _batch_max_bucket(batch_dir: str):
@@ -262,13 +259,15 @@ def read_tier_compacted(spark: SparkSession, store_dir: str,
     the split: compacted rows are final vectors for buckets strictly
     older than it; partial rows at or after it still merge on read.
     The two sides' keys are disjoint by construction, so the union
-    needs no further aggregation."""
+    needs no further aggregation.  Marker, partials and compacted rows
+    are the 1m tier's; 1h and 1d are composed from this view as in
+    ``read_tier``."""
     from ts_pymfe_spark.plans.manifest import CheckpointedWriter
 
-    marker = _compaction_marker(store_dir, tier)
+    marker = _compaction_marker(store_dir, "1m")
     if marker is None:
         return read_tier(spark, store_dir, tier)
-    paths = _live_batch_dirs(store_dir, tier)
+    paths = _live_batch_dirs(store_dir, "1m")
     fresh = None
     if paths:
         fresh = (
@@ -279,7 +278,7 @@ def read_tier_compacted(spark: SparkSession, store_dir: str,
         )
     try:
         old = CheckpointedWriter(
-            spark, f"{compact_dir}/tier={tier}"
+            spark, f"{compact_dir}/tier=1m"
         ).read().filter(F.col("bucket_start") < F.lit(marker))
     except FileNotFoundError:
         # marker advanced but nothing was old enough to compact yet
@@ -288,9 +287,11 @@ def read_tier_compacted(spark: SparkSession, store_dir: str,
         raise FileNotFoundError(
             f"no data in either store for tier={tier}"
         )
-    if old is None:
-        return fresh
-    return old if fresh is None else old.unionByName(fresh)
+    t1m = fresh if old is None else (
+        old if fresh is None else old.unionByName(fresh))
+    if tier == "1m":
+        return t1m
+    return compose_tiers(t1m, include_turn_rate=False)[tier]
 
 
 def apply_stream_retention(store_dir: str, tier: str,
@@ -346,241 +347,16 @@ def apply_stream_retention(store_dir: str, tier: str,
 
 
 def read_all_tiers(spark: SparkSession, store_dir: str,
-                   include_turn_rate: bool = True) -> dict[str, DataFrame]:
-    """Merge-on-read composition of the FULL cascade over a streaming
-    partial store — the streaming counterpart of
-    ``rollup.build_all_tiers`` (round-4 parity closure).
+                   include_turn_rate: bool = True) -> TierMap:
+    """The FULL cascade over a streaming partial store: the merged 1m
+    (``read_tier``) through ``compose_tiers``, as ``build_all_tiers``
+    composes its raw 1m rollup — so streaming output == batch output
+    exactly (test_streaming_full_cascade_matches_batch).
 
     The emergent turn-rate series cannot be maintained as per-batch
     partials: its VALUE is the merged 1m bucket count ``n``, and
     moments of n are not mergeable from moments of per-batch partial
-    counts (s2 of 5 is not s2 of 3 plus s2 of 2).  It is therefore
-    derived here, AFTER the 1m merge — the same read-time aggregation
-    the batch cascade performs, so streaming output == batch output
-    exactly (tests/test_plans_streaming.py::
-    test_streaming_full_cascade_matches_batch).
-    """
-    from functools import reduce
-
-    from ts_pymfe_spark.operators.rollup import (
-        cascade,
-        rate_1m_projection,
-    )
-
-    def _union(dfs):
-        return reduce(lambda a, b: a.unionByName(b), dfs)
-
-    t1m = read_tier(spark, store_dir, "1m")
-    branches = [t1m]
-    if include_turn_rate:
-        # identity-bucket rollup as a projection (round 7, rollup.py)
-        branches.append(rate_1m_projection(t1m))
-    tiers = {"1m": _union(branches)}
-    branches_1h = [cascade(b, "1h") for b in branches]
-    tiers["1h"] = _union(branches_1h)
-    tiers["1d"] = _union([cascade(b, "1d") for b in branches_1h])
-    return tiers
-
-
-# ---------------------------------------------------------------------------
-# streaming HLL sketch maintenance (round 5): same partials +
-# merge-on-read contract as the moment tiers — each microbatch appends
-# its own register table; a read max-merges them.  Exact regardless of
-# arrival order (max is associative/commutative/idempotent-per-value),
-# so late data needs no watermark and replays are idempotent (a batch
-# overwrites its own deterministic subdirectory).
-# ---------------------------------------------------------------------------
-
-def run_hll_stream_to_store(spark: SparkSession, input_dir: str,
-                            store_dir: str, checkpoint_dir: str,
-                            value_col: str = "conv_id", p: int = 10,
-                            max_files_per_trigger: int = 8) -> None:
-    """availableNow streaming job: per-batch daily HLL register
-    partials for ``value_col`` appended under ``store_dir``."""
-    from ts_pymfe_spark.operators.sketches import hll_sketch
-
-    def sketch_batch(batch_turns: DataFrame, batch_id: int) -> None:
-        ev = batch_turns.select(F.to_date("ts").alias("day"), value_col)
-        sk = hll_sketch(ev, ["day"], value_col, p=p)
-        sk.write.mode("overwrite").parquet(
-            f"{store_dir}/batch={batch_id}")
-
-    q = (
-        stream_turns(spark, input_dir, max_files_per_trigger)
-        .writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_hll_sketch(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Merge-on-read of the streamed register partials: one max per
-    (day, register) — feed to ``hll_estimate``/``hll_rolling``."""
-    from ts_pymfe_spark.operators.sketches import hll_merge
-
-    # `batch` is the partition-discovery column of the store layout,
-    # not a sketch key — keeping it would merge per-batch, not across
-    return hll_merge(spark.read.parquet(store_dir).drop("batch"))
-
-
-def run_hist_stream_to_store(spark: SparkSession, input_dir: str,
-                             store_dir: str, checkpoint_dir: str,
-                             value_col: str = "turn_idx",
-                             lo: float = 0.0, hi: float = 200.0,
-                             bins: int = 100,
-                             max_files_per_trigger: int = 8) -> None:
-    """availableNow streaming job: per-batch daily histogram-sketch
-    partials (sum-mergeable bin counts — the histogram's analogue of
-    the HLL partials above and the moment partials in
-    run_stream_to_store)."""
-    from ts_pymfe_spark.operators.histogram import histogram_sketch
-
-    def sketch_batch(batch_turns: DataFrame, batch_id: int) -> None:
-        ev = batch_turns.select(F.to_date("ts").alias("day"), value_col)
-        sk = histogram_sketch(ev, ["day"], value_col, lo, hi, bins)
-        sk.write.mode("overwrite").parquet(
-            f"{store_dir}/batch={batch_id}")
-
-    q = (
-        stream_turns(spark, input_dir, max_files_per_trigger)
-        .writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_hist_sketch(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Merge-on-read of streamed histogram partials (sum per (day,
-    bin)) — feed to ``histogram_quantile``."""
-    from ts_pymfe_spark.operators.histogram import histogram_merge
-
-    return histogram_merge(spark.read.parquet(store_dir).drop("batch"))
-
-
-def run_cms_stream_to_store(spark: SparkSession, input_dir: str,
-                            store_dir: str, checkpoint_dir: str,
-                            value_col: str = "conv_id", d: int = 4,
-                            w: int = 2048,
-                            max_files_per_trigger: int = 8) -> None:
-    """availableNow streaming job: per-batch count-min counter
-    partials for ``value_col`` appended under ``store_dir`` — the
-    frequency analogue of the HLL partials above (counters SUM-merge,
-    registers MAX-merge; both stores are O(sketch), never O(rows))."""
-    from ts_pymfe_spark.operators.sketches import cms_sketch
-
-    def sketch_batch(batch_turns: DataFrame, batch_id: int) -> None:
-        sk = cms_sketch(batch_turns, value_col, d=d, w=w)
-        sk.write.mode("overwrite").parquet(
-            f"{store_dir}/batch={batch_id}")
-
-    q = (
-        stream_turns(spark, input_dir, max_files_per_trigger)
-        .writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_cms_sketch(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Merge-on-read of the streamed counter partials (sum per
-    (row, bucket)) — feed to ``cms_estimate``/point queries."""
-    from ts_pymfe_spark.operators.sketches import cms_merge
-
-    return cms_merge(spark.read.parquet(store_dir).drop("batch"))
-
-
-def run_health_stream_to_store(spark: SparkSession, input_dir: str,
-                               store_dir: str, checkpoint_dir: str,
-                               cols: tuple = ("value",),
-                               max_files_per_trigger: int = 8) -> None:
-    """availableNow streaming job: per-batch daily column-health
-    partials (drift.daily_health_partials — sum/min/max-mergeable,
-    the moments-store shape) appended under ``store_dir``.  Merge-on-
-    read via ``read_daily_health`` yields drift.daily_drift's exact
-    output schema without ever re-scanning events.
-
-    Unlike the turn-schema maintainers above, the health stream is
-    column-generic (events, turns, any table with ``ts`` + numeric
-    columns), so the stream schema is sniffed from the input's own
-    parquet footers (one metadata read, no data scan)."""
-    from ts_pymfe_spark.operators.drift import daily_health_partials
-
-    schema = spark.read.parquet(input_dir).schema
-
-    def health_batch(batch_turns: DataFrame, batch_id: int) -> None:
-        hp = daily_health_partials(batch_turns, cols=cols)
-        hp.write.mode("overwrite").parquet(
-            f"{store_dir}/batch={batch_id}")
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-        .writeStream.foreachBatch(health_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_daily_health(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Merge-on-read of the streamed health partials -> the
-    daily_drift output schema (day, col_name, n, n_null, null_frac,
-    mean_v, min_v, max_v, dod_mean_delta)."""
-    from ts_pymfe_spark.operators.drift import daily_health_from_partials
-
-    return daily_health_from_partials(
-        spark.read.parquet(store_dir).drop("batch"))
-
-
-def run_drift_cells_to_store(spark: SparkSession, input_dir: str,
-                             store_dir: str, checkpoint_dir: str,
-                             bounds: dict, grp_col: str = "user_id",
-                             key: str = "event_type",
-                             value_col: str = "value", bins: int = 256,
-                             max_files_per_trigger: int = 8) -> None:
-    """availableNow streaming job: per-batch two-population drift
-    cells (drift.drift_cells — FIXED bounds so batches sum-merge)
-    appended under ``store_dir``.  ``bounds`` maps key -> (lo, hi):
-    the pinned baseline contract.  Merge-on-read via
-    ``read_drift_cells`` feeds ``ks_from_cells``/``psi_from_cells`` —
-    a continuously maintained drift monitor that never re-scans
-    events."""
-    from pyspark.sql import functions as SF
-
-    from ts_pymfe_spark.operators.drift import drift_cells
-
-    schema = spark.read.parquet(input_dir).schema
-    bdf = spark.createDataFrame(
-        [(k, float(lo), float(hi)) for k, (lo, hi) in bounds.items()],
-        f"{key} string, lo double, hi double")
-
-    def cells_batch(batch: DataFrame, batch_id: int) -> None:
-        c = drift_cells(batch, SF.col(grp_col) % 2, bdf, key=key,
-                        value_col=value_col, bins=bins)
-        c.write.mode("overwrite").parquet(f"{store_dir}/batch={batch_id}")
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-        .writeStream.foreachBatch(cells_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_drift_cells(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Merge-on-read of streamed drift cells (sum per (key, cell))."""
-    from ts_pymfe_spark.operators.drift import drift_cells_merge
-
-    return drift_cells_merge(spark.read.parquet(store_dir).drop("batch"))
+    counts (s2 of 5 is not s2 of 3 plus s2 of 2).  It, and with it
+    every 1h/1d tier, is derived here AFTER the 1m merge."""
+    return compose_tiers(read_tier(spark, store_dir, "1m"),
+                         include_turn_rate=include_turn_rate)
