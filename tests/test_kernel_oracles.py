@@ -241,6 +241,31 @@ def test_lz_complexity_non_finite_is_nan(bad):
         assert math.isnan(K.lz_complexity(x))
 
 
+@pytest.mark.parametrize("power", [np.zeros(256), np.full(8, np.inf)])
+def test_ps_entropy_of_flat_spectrum_is_nan(power):
+    """A zero or non-finite total power has no distribution to take the
+    entropy of (scipy.stats.entropy gives NaN): no 0/0 warning, and no
+    (negative) zero that would score a flat series as fully ordered."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert math.isnan(K.ps_entropy(power))
+        assert math.isnan(
+            K.ps_entropy(K.periodogram_hamming(np.full(300, 2.5))[1]))
+
+
+@pytest.mark.parametrize("bad", [np.nan, np.inf])
+def test_approx_entropy_non_finite_is_nan_without_the_pass(bad):
+    """A non-finite point in the cut series scores NaN before the
+    O(n²) match-count pass: no log(0) warning, no memo entry."""
+    x = np.random.default_rng(1).normal(size=600)
+    x[300] = bad
+    before = set(K._MEMO)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert math.isnan(K.approx_entropy(x))
+    assert set(K._MEMO) == before
+
+
 def test_walker_path_hand_recurrence():
     x = np.array([1.0, 2.0, 3.0])
     w = K.walker_path(x, step_size=0.5)

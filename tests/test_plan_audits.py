@@ -524,3 +524,20 @@ def test_rate_1m_projection_equals_identity_rollup(spark, turns):
     b = sorted(map(repr, new.collect()))
     assert len(a) > 100
     assert a == b
+
+
+def test_extract_with_confidence_is_exactly_one_shuffle(spark, turns):
+    """Bootstrap CIs run on the same runner as extract: one hash
+    exchange on the series keys and one mapInPandas that emits the CI
+    rows — no per-group FlatMapGroupsInPandas and no Spark percentile
+    aggregate after it."""
+    from ts_pymfe_spark.api import TSMFESpark
+
+    eng = TSMFESpark(features=["dw", "acf"], summaries=("mean",))
+    series = derive_series(turns)
+    p = plan(eng.extract_with_confidence(series, sample_num=4))
+    assert p.count("Exchange hashpartitioning") == 1
+    assert p.count("MapInPandas") == plan(series).count("MapInPandas") + 1
+    assert "FlatMapGroupsInPandas" not in p
+    assert "percentile" not in p.lower()
+    assert "ObjectHashAggregate" not in p

@@ -108,15 +108,168 @@ def test_extract_with_confidence_brackets_point_estimate(spark, small_series):
     assert (width99 >= width90 - 1e-12).all()
 
 
+def _dup_turn_idx_rows():
+    """Four series whose turn_idx repeats (about two rows per value)."""
+    rng = np.random.default_rng(7)
+    rows = []
+    for c in range(4):
+        n = 40 + 5 * c
+        idx = np.sort(rng.integers(0, n // 2, n))
+        rows += [(f"d{c}", int(i), float(v))
+                 for i, v in zip(idx, rng.lognormal(2, 1, n))]
+    return rows
+
+
 def test_extract_with_confidence_partition_invariant(spark, small_series):
+    """Also with repeated turn_idx: the same rows, read in reverse
+    order, give the same CIs."""
     eng = TSMFESpark(features=["dw"], summaries=("mean",))
-    a = eng.extract_with_confidence(
-        small_series.repartition(1), sample_num=8
-    ).toPandas().sort_values(["conv_id", "name"]).reset_index(drop=True)
-    b = eng.extract_with_confidence(
-        small_series.repartition(7, "turn_idx"), sample_num=8
-    ).toPandas().sort_values(["conv_id", "name"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    rows = _dup_turn_idx_rows()
+    schema = "conv_id string, turn_idx int, value double"
+    for one, seven in (
+        (small_series, small_series),
+        (spark.createDataFrame(rows, schema),
+         spark.createDataFrame(rows[::-1], schema)),
+    ):
+        a = eng.extract_with_confidence(
+            one.repartition(1), sample_num=8
+        ).toPandas().sort_values(["conv_id", "name"]).reset_index(drop=True)
+        b = eng.extract_with_confidence(
+            seven.repartition(7, "turn_idx"), sample_num=8
+        ).toPandas().sort_values(["conv_id", "name"]).reset_index(drop=True)
+        pd.testing.assert_frame_equal(a, b)
+
+
+def _spark_percentile_reference(v, p):
+    """numpy copy of Spark's ``percentile``: position (n − 1)·p, the
+    lower value when the position is whole or both neighbours are
+    equal, else linear interpolation."""
+    v = np.sort(np.asarray(v, dtype=float))
+    pos = (v.size - 1) * p
+    lo, hi = int(np.floor(pos)), int(np.ceil(pos))
+    if lo == hi or v[lo] == v[hi]:
+        return float(v[lo])
+    return float((hi - pos) * v[lo] + (pos - lo) * v[hi])
+
+
+def _bootstrap_reference(x, conv, feats, summaries, sample_num, confidence,
+                         base_seed=1234):
+    """Driver-side extract_with_confidence of one series: the resample
+    loop over the per-series kernels, the summary convention, and the
+    NaN-dropping mean / Spark percentile / count per name."""
+    from ts_pymfe_spark.functions.summaries import summarize_array
+    from ts_pymfe_spark.operators.arrow_kernels import (
+        FEATURE_KERNELS, SEEDED_FEATURE_KERNELS, feature_seed)
+
+    per_name = {}
+    for r in range(sample_num):
+        rs = np.random.RandomState(
+            feature_seed(conv, f"bootstrap:{r}", base_seed))
+        xs = x[rs.randint(x.size, size=x.size)]
+        for f in feats:
+            try:
+                if f in SEEDED_FEATURE_KERNELS:
+                    res = SEEDED_FEATURE_KERNELS[f](
+                        xs, feature_seed(conv, f"{f}:{r}", base_seed))
+                else:
+                    res = FEATURE_KERNELS[f](xs)
+            except Exception:
+                res = np.nan
+            arr = np.atleast_1d(np.asarray(res, dtype=float))
+            if arr.size == 1:
+                rows = [("", float(arr[0]))]
+            else:
+                rows = summarize_array(arr, summaries) if arr.size else []
+            for summ, v in rows:
+                per_name.setdefault(f"{f}.{summ}" if summ else f,
+                                    []).append(v)
+    lo = 0.5 * (1.0 - confidence)
+    out = {}
+    for name, vals in per_name.items():
+        v = np.asarray(vals)
+        v = v[~np.isnan(v)]
+        out[name] = (
+            (float(v.mean()), _spark_percentile_reference(v, lo),
+             _spark_percentile_reference(v, 1.0 - lo), v.size)
+            if v.size else (np.nan, np.nan, np.nan, 0))
+    return out
+
+
+def test_extract_with_confidence_matches_driver_loop(spark, small_series):
+    """CI rows equal a driver-side resample loop: ci_* and n_resamples
+    exactly, value to 1e-12 relative (summation order).  A constant
+    series has an all-NaN trend_strength (NULL row, n_resamples 0); a
+    short random walk's model_naive_seasonal is NaN on some resamples
+    only, which are dropped."""
+    feats = ["dw", "acf", "trend_strength", "model_naive_seasonal",
+             "itrand_mean"]
+    summaries = ("mean", "sd")
+    sample_num, confidence, max_points = 16, 0.9, 48
+    rng = np.random.default_rng(1)
+    extra = [("k_const", i, 3.0) for i in range(30)]
+    extra += [("k_walk", i, float(v))
+              for i, v in enumerate(np.cumsum(rng.standard_normal(40)))]
+    df = small_series.select("conv_id", "turn_idx", "value").unionByName(
+        spark.createDataFrame(extra,
+                              "conv_id string, turn_idx int, value double"))
+    eng = TSMFESpark(features=feats, summaries=summaries,
+                     max_points=max_points)
+    got = eng.extract_with_confidence(
+        df, sample_num=sample_num, confidence=confidence).toPandas()
+    assert (got["series"] == "value").all()
+    pdf = df.toPandas()
+    ref = {}
+    for conv, g in pdf.groupby("conv_id"):
+        x = g.sort_values(["turn_idx", "value"])["value"].to_numpy(
+            dtype=float)[-max_points:]
+        for name, row in _bootstrap_reference(
+                x, conv, feats, summaries, sample_num, confidence).items():
+            ref[(conv, name)] = row
+    rows = {(r.conv_id, r.name): (r.value, r.ci_low, r.ci_high,
+                                  r.n_resamples)
+            for r in got.itertuples()}
+    assert set(rows) == set(ref)
+    same = lambda a, b: a == b or (np.isnan(a) and np.isnan(b))  # noqa: E731
+    for k, (v, lo, hi, n) in ref.items():
+        gv, glo, ghi, gn = rows[k]
+        assert gn == n, k
+        assert same(glo, lo) and same(ghi, hi), k
+        assert same(gv, v) or abs(gv - v) <= 1e-12 * abs(v), k
+    assert ref[("k_const", "trend_strength")][3] == 0
+    assert got[(got.conv_id == "k_const") & (got.name == "trend_strength")
+               ][["value", "ci_low", "ci_high"]].isna().all(axis=None)
+    assert 0 < ref[("k_walk", "model_naive_seasonal.mean")][3] < sample_num
+
+
+def test_spark_percentile_formula_bitwise(spark):
+    """The worker's percentile equals Spark's ``percentile`` bit for
+    bit, also where both neighbours are equal (interpolating between
+    them can change the last bit) and on repeated values."""
+    from ts_pymfe_spark.operators.arrow_kernels import spark_percentile
+
+    rng = np.random.default_rng(3)
+    cases = {
+        "n1": [1 / 3],
+        "n2": [0.1, 0.7],
+        "n2_equal": [1 / 3, 1 / 3],
+        "n3": [0.1, 0.1, 0.7],
+        "n32_repeats": list(np.round(rng.standard_normal(32), 1) / 3),
+        "n32_runs": [v / 7 for v in (1, 2, 3, 4) for _ in range(8)],
+        "n32_distinct": list(rng.lognormal(0, 1, 32)),
+    }
+    ps = [0.025, 0.05, 0.5, 0.95, 0.975]
+    df = spark.createDataFrame(
+        [(c, float(v)) for c, vs in cases.items() for v in vs],
+        "case string, v double")
+    got = df.groupBy("case").agg(*[
+        F.percentile("v", F.lit(p)).alias(f"p{i}") for i, p in enumerate(ps)
+    ]).collect()
+    assert len(got) == len(cases)
+    for r in got:
+        v = np.sort(np.asarray(cases[r["case"]], dtype=float))
+        for i, p in enumerate(ps):
+            assert spark_percentile(v, p).hex() == r[f"p{i}"].hex(), (
+                r["case"], p)
 
 
 def test_jaccard_pairs_guard_refuses_oversize_corpus(spark):

@@ -1327,6 +1327,29 @@ def test_lttb_downsample_grouped(spark):
         assert sorted(got[c]) == sorted(keep.tolist())
 
 
+def test_lttb_downsample_duplicate_order_is_partition_invariant(spark):
+    """Rows sharing an order value reach LTTB sorted by value, so the
+    same rows, read in reverse order and partitioned differently, pick
+    the same points."""
+    from ts_pymfe_spark.operators.downsample import lttb_downsample
+
+    rng = np.random.default_rng(4)
+    rows = []
+    for c in ("a", "b", "c"):
+        idx = np.sort(rng.integers(0, 60, 120))    # ~2 rows per turn_idx
+        rows += [(c, int(i), float(v))
+                 for i, v in zip(idx, rng.normal(size=120).cumsum())]
+    schema = "conv_id string, turn_idx long, value double"
+    picks = [
+        sorted(tuple(r) for r in lttb_downsample(df, n_out=12).collect())
+        for df in (spark.createDataFrame(rows, schema).repartition(1),
+                   spark.createDataFrame(rows[::-1], schema)
+                   .repartition(7, "turn_idx"))
+    ]
+    assert len(picks[0]) == 3 * 12
+    assert picks[0] == picks[1]
+
+
 def test_m4_downsample_hand_case(spark):
     """8 points, 2 buckets: min/max/first/last per bucket with
     deterministic tie positions (value tie -> min keeps the smaller

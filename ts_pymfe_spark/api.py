@@ -21,8 +21,9 @@ partition-level ``mapInPandas`` runner over key-sorted partitions,
 with the per-feature summaries fused into the same kernel call (round
 7; the kernel holds each feature's full value array already) — so a
 1000-executor cluster extracts ~10^6 conversations concurrently with
-exactly one shuffle.  The bootstrap-CI path keeps the separate
-``groupBy(conv, feature, resample).applyInPandas`` summary stage.
+exactly one shuffle.  The bootstrap-CI path runs on the same runner
+(``arrow_kernels.bootstrap_ci``), reducing the resamples to CI rows in
+the worker: also one shuffle.
 """
 
 from __future__ import annotations
@@ -32,10 +33,11 @@ from typing import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ts_pymfe_spark.functions.summaries import DEFAULT_SUMMARIES, summarize
+from ts_pymfe_spark.functions.summaries import DEFAULT_SUMMARIES
 from ts_pymfe_spark.operators.arrow_kernels import (
     FEATURE_KERNELS,
     SEEDED_FEATURE_KERNELS,
+    bootstrap_ci,
     series_features,
 )
 from ts_pymfe_spark.operators.derive import derive_series
@@ -83,14 +85,10 @@ class TSMFESpark:
         feature that runs batched over same-length series
         (``BATCHED_FEATURE_KERNELS``) stamps each of them with the
         batch's wall divided by the batch size."""
-        # Fused summary stage (round 7): the kernel holds each
-        # feature's complete value array for its group, so it emits
-        # the summary rows directly — value-equal to the former
-        # separate summarize() stage (same summarize_array, same
-        # scalar pass-through) while deleting one exchange and one
-        # grouped-map Python pass of ~6x-group-count tiny groups.
-        # measure_time rides along as before: wall_ms is constant per
-        # (conv, series, feature) and stamps every summary row.
+        # The kernel holds each feature's complete value array for its
+        # group, so it emits the summary rows itself; wall_ms is
+        # constant per (conv, series, feature) and stamps every
+        # summary row.
         summ = series_features(
             series_df, features=self.features, max_points=self.max_points,
             measure_time=measure_time, summaries=self.summaries,
@@ -119,53 +117,30 @@ class TSMFESpark:
     ) -> DataFrame:
         """Bootstrap confidence intervals per meta-feature (reference
         ``extract_with_confidence``, tsmfe.py:1079-1248): ``sample_num``
-        iid-with-replacement resamples per series, each fully extracted,
-        then per-(conv, name) percentile CIs.
+        iid-with-replacement resamples per series, each fully extracted
+        and summarized, then per-(conv, name) percentile CIs.
 
         Returns (conv_id, series, name, value, ci_low, ci_high,
-        n_resamples): ``value`` = nanmean over resamples (reference
-        ``return_avg_val=True``); CI bounds = the [α/2, 1−α/2]
-        linear-interpolated quantiles, NaN when any resample produced
-        NaN (np.quantile propagation — reference uses the non-nan-aware
-        quantile, tsmfe.py:1232-1236).
+        n_resamples).  NaN resample values are dropped: ``value`` is
+        the mean of the others (reference ``return_avg_val=True``),
+        ``ci_low``/``ci_high`` their Spark ``percentile`` at
+        [α/2, 1−α/2], and ``n_resamples`` their count; a name whose
+        resamples are all NaN has NULL ``value``/``ci_*`` and
+        ``n_resamples`` 0.  This is the contract the former Spark
+        aggregate had in practice: pandas→Arrow turns a NaN into NULL,
+        which ``avg``/``percentile``/``count`` skip.  The reference
+        instead takes a non-nan-aware quantile (tsmfe.py:1232-1236), so
+        one NaN resample makes its CI NaN.
 
-        One shuffle for extraction (resample loop runs in-worker), one
-        for the summary stage, one final partial-aggregated reduction —
-        the sample_num× compute fan-out never touches the network."""
-        from ts_pymfe_spark.operators.arrow_kernels import (
-            bootstrap_series_features,
-        )
-
-        lo = 0.5 * (1.0 - confidence)
-        feats = bootstrap_series_features(
-            series_df, features=self.features, sample_num=sample_num,
+        One shuffle and one ``mapInPandas``
+        (``arrow_kernels.bootstrap_ci``): the resample loop, the
+        summaries and the CI reduction all run in the worker that holds
+        the series, so the sample_num× fan-out never touches the
+        network."""
+        return bootstrap_ci(
+            series_df, features=self.features, summaries=self.summaries,
+            sample_num=sample_num, confidence=confidence,
             max_points=self.max_points, base_seed=base_seed,
-        )
-        summ = summarize(feats, self.summaries, extra_keys=("resample",))
-        name = F.when(F.col("summary") == "", F.col("feature")).otherwise(
-            F.concat_ws(".", "feature", "summary")
-        )
-        per = summ.select(
-            "conv_id", "series", name.alias("name"),
-            F.col("value"),
-            F.when(F.isnan("value"), None).otherwise(F.col("value"))
-            .alias("_v"),
-        )
-        nan_lit = F.lit(float("nan"))
-        agg = per.groupBy("conv_id", "series", "name").agg(
-            F.avg("_v").alias("value"),               # nanmean
-            F.max(F.isnan("value")).alias("_any_nan"),
-            F.percentile("_v", F.lit(lo)).alias("_lo"),
-            F.percentile("_v", F.lit(1.0 - lo)).alias("_hi"),
-            F.count("value").alias("n_resamples"),
-        )
-        return agg.select(
-            "conv_id", "series", "name", "value",
-            F.when(F.col("_any_nan"), nan_lit).otherwise(F.col("_lo"))
-            .alias("ci_low"),
-            F.when(F.col("_any_nan"), nan_lit).otherwise(F.col("_hi"))
-            .alias("ci_high"),
-            "n_resamples",
         )
 
     def extract_turns(self, turns_df: DataFrame) -> DataFrame:

@@ -573,8 +573,14 @@ def ps_peaks(power: np.ndarray, factor: float = 0.6) -> np.ndarray:
 
 
 def ps_entropy(power: np.ndarray, normalize: bool = True) -> float:
-    """Normalized spectral entropy, base 2 (``freq_domain.py:233-302``)."""
-    p = power / power.sum()
+    """Normalized spectral entropy, base 2 (``freq_domain.py:233-302``).
+    NaN when the total power is 0 or not finite (a flat series): the
+    distribution is then undefined, as it is for the reference's
+    ``scipy.stats.entropy``."""
+    total = power.sum()
+    if total == 0 or not np.isfinite(total):
+        return np.nan
+    p = power / total
     p = p[p > 0]
     h = -float(np.sum(p * np.log2(p)))
     return h / math.log2(power.size) if normalize else h
@@ -693,7 +699,11 @@ def approx_entropy(ts: np.ndarray, m: int = 2, factor: float = 0.2,
     O(n²); input truncated to the last ``max_n`` points (engine length
     cap, mirroring the reference tests' 512-point truncation).  Reads
     the row counts of the pass shared with sample_entropy
-    (``_entropy_counts``; ``memo=False`` bypasses its memo)."""
+    (``_entropy_counts``; ``memo=False`` bypasses its memo).  NaN,
+    without the pass, when the cut series holds a non-finite value:
+    r is then NaN, no pair matches and both log-means are −inf."""
+    if not np.isfinite(np.asarray(ts, dtype=float)[-max_n:]).all():
+        return np.nan
     counts = _entropy_counts(ts, m, factor, max_n, memo)
     phis = {}
     for d, (rowcount, _) in counts.items():

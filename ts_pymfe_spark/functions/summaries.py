@@ -1,5 +1,6 @@
 """The reference's 32 summary functions (``_summary.py:450-485``) as
-pure-numpy kernels + a Spark second-stage summarization operator.
+pure-numpy kernels; the Arrow workers of ``operators/arrow_kernels``
+apply them to each feature array in the kernel call that computed it.
 
 ts-pymfe reduces multi-valued features through these summaries
 (``_internal.py:515-553``, default ``("mean","sd")`` at tsmfe.py:48).
@@ -23,7 +24,6 @@ from __future__ import annotations
 from typing import Callable
 
 import numpy as np
-import pandas as pd
 
 
 def _rm_nan(v: np.ndarray) -> np.ndarray:
@@ -157,88 +157,3 @@ def summarize_array(values: np.ndarray, summaries=DEFAULT_SUMMARIES):
         else:
             out.extend((f"{s}.{i}", float(x)) for i, x in enumerate(arr))
     return out
-
-
-#: extra-key name -> Spark SQL type (for schema synthesis)
-_EXTRA_KEY_TYPES = {"resample": "int"}
-
-
-def summarize(feature_df, summaries=DEFAULT_SUMMARIES, extra_keys=(),
-              carry=(), parallelism=None):
-    """Spark second stage: long feature table (conv_id, series,
-    [*extra_keys,] feature, idx, value) -> (conv_id, series,
-    [*extra_keys,] feature, summary, value[, *carry]).
-
-    Scalar features (single row, idx=0) pass through with summary ''
-    (the reference does not summarize scalars, tsmfe.py:469-471).
-
-    ``extra_keys`` threads additional grouping dimensions through the
-    reduction — e.g. ``("resample",)`` for the bootstrap CI path.
-
-    ``carry`` names double columns that are constant within a group
-    (e.g. the kernel-stage ``wall_ms``) and pass through to every
-    output row — this lets measure_time ride the summary stage in the
-    SAME single pass instead of a second aggregation + join over the
-    expensive kernel output.
-
-    ``parallelism``: like ``series_features`` (round 5): the summary
-    shuffle's byte size is tiny (a few MB of long-format feature rows)
-    but carries one Python invocation per (conv, series, feature)
-    group, so AQE's bytes-based coalescing collapses it to ~1 task and
-    serializes tens of thousands of grouped-map calls (measured: the
-    6-feature flagship summary stage 28.2 s collapsed vs 3.2 s with an
-    explicit numbered repartition at local[32]/sf0.1).  The explicit
-    repartition on the group keys opts out of AQE coalescing and still
-    satisfies the groupBy's required clustering — no extra shuffle.
-
-    Sizing (round 6, VERDICT r5 #8): the default 2x defaultParallelism
-    is deliberately CORES-proportional, not group-count-proportional.
-    The stage is CPU-bound with fixed total Python/Arrow work, so task
-    count only controls (a) wave balance — 2x cores gives two waves,
-    absorbing straggler groups — and (b) per-task scheduling + Arrow
-    session overhead, which GROWS with partition count.  Scaling with
-    group count (9k groups at sf0.1 -> 90k at SF=1) would add
-    partitions without adding cores and pay pure overhead; at the
-    other extreme, fewer than #cores partitions idles cores.  The
-    observed extract_wall spread across driver windows (3.8-8.1 s)
-    tracks the recorded host effective-core probe, not the partition
-    count — re-measured before pinning this (sf0.1, local[32], 2 reps
-    each in one session: 64 partitions 5.00/4.48 s, 512 partitions
-    3.94/3.52 s, 32 partitions 3.52/3.28 s — a monotone warm-up trend
-    across the session, no sizing signal beyond it)."""
-    from pyspark.sql import DataFrame  # local import keeps module numpy-pure
-
-    extra_keys, carry = tuple(extra_keys), tuple(carry)
-    extra_schema = "".join(
-        f", {k} {_EXTRA_KEY_TYPES.get(k, 'string')}" for k in extra_keys
-    )
-    schema = (
-        "conv_id string, series string" + extra_schema
-        + ", feature string, summary string, value double"
-        + "".join(f", {c} double" for c in carry)
-    )
-    group_keys = ("conv_id", "series", *extra_keys, "feature")
-    if parallelism is None:
-        parallelism = (
-            2 * feature_df.sparkSession.sparkContext.defaultParallelism
-        )
-    feature_df = feature_df.repartition(parallelism, *group_keys)
-
-    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("idx")
-        head = {k: pdf[k].iloc[0] for k in group_keys}
-        head.update({c: float(pdf[c].iloc[0]) for c in carry})
-        vals = pdf["value"].to_numpy(dtype=float)
-        if len(vals) == 1:
-            rows = [("", float(vals[0]))]
-        else:
-            rows = summarize_array(vals, summaries)
-        return pd.DataFrame(
-            {
-                **head,
-                "summary": [r[0] for r in rows],
-                "value": [r[1] for r in rows],
-            }
-        )
-
-    return feature_df.groupBy(*group_keys).applyInPandas(kern, schema)

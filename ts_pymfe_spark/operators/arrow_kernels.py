@@ -9,11 +9,13 @@ output equals fixtures by construction — the float-summation-order
 hazard (SURVEY §4.3) is closed by sorting each series by
 ``(turn_idx, value)`` before compute.
 
-``series_features`` runs on one partition-level runner
-(``operators/grouped.py``: repartition + sortWithinPartitions + one
-``mapInPandas``), with same-length series of a batch stacked for the
-features in ``BATCHED_FEATURE_KERNELS``; ``bootstrap_series_features``
-is still a ``groupBy(conv_id).applyInPandas``.
+``series_features`` and ``bootstrap_ci`` run on one partition-level
+runner (``operators/grouped.py``: repartition + sortWithinPartitions +
+one ``mapInPandas``) and share one per-feature kernel loop
+(``_feature_arrays``): same-length series — the series of a batch, or
+the resamples of one series — are stacked for the features in
+``BATCHED_FEATURE_KERNELS``.  ``bootstrap_ci`` reduces the resamples to
+CI rows in the worker.
 
 Scale design:
   - groups are (conv_id[, series]) — the natural parallelism axis; a
@@ -30,7 +32,7 @@ from __future__ import annotations
 
 import math
 import time
-from typing import Callable, Iterable
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -38,7 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ts_pymfe_spark.functions import kernels as K
-from ts_pymfe_spark.functions.summaries import summarize_array
+from ts_pymfe_spark.functions.summaries import (DEFAULT_SUMMARIES,
+                                                summarize_array)
 from ts_pymfe_spark.operators.grouped import map_sorted_groups
 
 FEATURE_SCHEMA = (
@@ -483,6 +486,54 @@ def _batched_results(name: str, xs: list[np.ndarray]) -> list[tuple]:
     return out
 
 
+def _feature_arrays(
+    names: list[str],
+    xs: list[np.ndarray],
+    seed_of: Callable[[int, str], int],
+    measure_time: bool = False,
+) -> Iterator[tuple[int, str, np.ndarray, float | None]]:
+    """The per-feature kernel loop: ``(i, name, arr, ms)`` for each
+    series ``xs[i]`` and each feature of ``names``, in that order.
+    ``arr`` is the result as a 1-d float array, NaN when the kernel
+    raised (error containment, reference ``_internal.py:594-614``);
+    seeded kernels get ``seed_of(i, name)``; features in
+    ``BATCHED_FEATURE_KERNELS`` run once per stack of same-length
+    series.  ``ms`` is the kernel wall when ``measure_time``, else
+    None."""
+    pre = {n: _batched_results(n, xs) for n in names
+           if n in BATCHED_FEATURE_KERNELS}
+    for i, x in enumerate(xs):
+        for name in names:
+            if name in pre:
+                res, ms = pre[name][i]
+            else:
+                t0 = time.perf_counter() if measure_time else 0.0
+                try:
+                    if name in SEEDED_FEATURE_KERNELS:
+                        res = SEEDED_FEATURE_KERNELS[name](x, seed_of(i, name))
+                    else:
+                        res = FEATURE_KERNELS[name](x)
+                except Exception:
+                    res = np.nan
+                ms = (time.perf_counter() - t0) * 1000.0
+            yield (i, name, np.atleast_1d(np.asarray(res, dtype=float)),
+                   ms if measure_time else None)
+
+
+def _summary_rows(arr: np.ndarray, summaries: tuple[str, ...]) -> list[tuple]:
+    """``[(summary, value), ...]`` of one feature array: one value
+    passes through with summary '' (the reference does not summarize
+    scalars, tsmfe.py:469-471), an empty array has no rows."""
+    if arr.size <= 1:
+        return [("", float(v)) for v in arr]
+    return summarize_array(arr, summaries)
+
+
+def _series_keys(df: DataFrame) -> tuple[bool, list[str]]:
+    has_series = "series" in df.columns
+    return has_series, ["conv_id", "series"] if has_series else ["conv_id"]
+
+
 def series_features(
     df: DataFrame,
     features: Iterable[str] | None = None,
@@ -492,7 +543,6 @@ def series_features(
     measure_time: bool = False,
     parallelism: int | None = None,
     min_points: int = 0,
-    n_groups: int | None = None,
     summaries: Iterable[str] | None = None,
 ) -> DataFrame:
     """Long feature table over per-series Arrow kernels.
@@ -500,27 +550,19 @@ def series_features(
     Execution: one partition-level runner (``grouped.map_sorted_groups``)
     — repartition on the series keys, sort within partitions by
     (keys, ``order_col``, ``value_col``), one ``mapInPandas`` that cuts
-    the groups with numpy and runs the kernel loop on batches of
-    complete series.  Features in ``BATCHED_FEATURE_KERNELS`` run once
-    per stack of same-length series of a batch (bit-identical to their
-    ``FEATURE_KERNELS`` entry per series); every other feature runs per
-    series.
+    the groups with numpy and runs ``_feature_arrays`` on batches of
+    complete series (a batched feature stacks the same-length series
+    of a batch, bit-identical to its per-series kernel).
 
     Row order: each series is sorted by ``order_col`` with ties broken
     by ``value_col``, a total order of its rows, so the series (and its
     ``max_points`` cut) does not depend on input splits, partition
     count or shuffle order.
 
-    ``summaries`` (round 7): when given, the kernel emits summary rows
-    (conv_id, series, feature, summary, value[, wall_ms]) DIRECTLY —
-    the kernel already holds each feature's complete value array for
-    its group, so running ``summarize_array`` in-kernel is value-equal
-    to the separate ``summarize()`` stage while deleting a whole
-    Arrow boundary: one exchange of long feature rows plus one
-    grouped-map Python call per (conv, series, feature) group (~6× the
-    group count) collapse into zero (guide §4: fewer JVM↔Python
-    crossings; §2.4: fewer exchanges).  Single-row features keep the
-    pass-through summary '' convention exactly as summarize() does.
+    ``summaries``: when given, the kernel emits summary rows
+    (conv_id, series, feature, summary, value[, wall_ms]) itself
+    (``_summary_rows``): it holds each feature's complete value array,
+    so no second exchange over long feature rows is needed.
 
     ``min_points``: skip series shorter than this INSIDE the kernel
     (empty output for the group) — one scan + one shuffle, instead of
@@ -541,32 +583,13 @@ def series_features(
     batched feature stamps each series of a stack with the stack's
     wall divided by its size.
 
-    ``parallelism``: partition count for the kernel stage.  AQE's
-    bytes-based partition coalescing is WRONG for compute-bound Arrow
-    stages — a few MB of series data can carry minutes of kernel CPU,
-    and AQE happily coalesces it to 2-3 tasks (measured: 3 partitions
-    for 2109 series at local[32] — a 10× parallelism collapse).  An
-    explicit numbered repartition on the group keys opts out of AQE
-    coalescing and is the stage's only shuffle.  Default: 2×
-    defaultParallelism, clamped to ``n_groups`` when the caller passes
-    its (cheap, approximate) group-count estimate."""
+    ``parallelism``: partition count of the stage's only shuffle
+    (``map_sorted_groups``' default when None)."""
     names = _resolve_features(features)
-    has_series = "series" in df.columns
-    keys = ["conv_id", "series"] if has_series else ["conv_id"]
-    if parallelism is None:
-        parallelism = 2 * df.sparkSession.sparkContext.defaultParallelism
-        if n_groups is not None:
-            # tiny-corpus clamp (round-4 ADVICE): a 10-series test
-            # corpus under a 64-partition repartition makes mostly
-            # empty partitions; cap at the caller's group estimate
-            # (hash partitioning cannot use more partitions than
-            # groups productively)
-            parallelism = max(1, min(parallelism, int(n_groups)))
-
+    has_series, keys = _series_keys(df)
     summarized = summaries is not None
     summ_names = tuple(summaries) if summarized else ()
     mid_col = "summary" if summarized else "idx"
-    batched = [n for n in names if n in BATCHED_FEATURE_KERNELS]
 
     def kernel(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
         vals = pdf[value_col].to_numpy(dtype=float)
@@ -577,65 +600,28 @@ def series_features(
             if b - a >= min_points:
                 groups.append((convs[a], sers[a] if has_series else value_col,
                                vals[max(a, b - max_points): b].copy()))
-        pre = {n: _batched_results(n, [g[2] for g in groups]) for n in batched}
-        out_conv: list = []
-        out_ser: list = []
-        out_feat: list[str] = []
-        out_mid: list = []
-        out_val: list[float] = []
-        out_ms: list[float] = []
-        for gi, (conv, ser, x) in enumerate(groups):
-            for name in names:
-                t0 = time.perf_counter() if measure_time else 0.0
-                if name in pre:
-                    res, ms = pre[name][gi]
-                else:
-                    ms = None
-                    try:
-                        if name in SEEDED_FEATURE_KERNELS:
-                            res = SEEDED_FEATURE_KERNELS[name](
-                                x, feature_seed(conv, name)
-                            )
-                        else:
-                            res = FEATURE_KERNELS[name](x)
-                    except Exception:
-                        res = np.nan  # error containment: nan, never fail
-                        # the job (reference behavior: _internal.py:594-614)
-                arr = np.atleast_1d(np.asarray(res, dtype=float))
-                if summarized:
-                    # exactly summarize()'s convention: single rows pass
-                    # through with summary '', arrays reduce, and an empty
-                    # array has no feature rows to summarize, so no rows
-                    if arr.size == 0:
-                        rows = []
-                    elif arr.size == 1:
-                        rows = [("", float(arr[0]))]
-                    else:
-                        rows = summarize_array(arr, summ_names)
-                    out_mid.extend(r[0] for r in rows)
-                    out_val.extend(r[1] for r in rows)
-                    n_rows = len(rows)
-                else:
-                    out_mid.extend(range(arr.size))
-                    out_val.extend(arr.tolist())
-                    n_rows = arr.size
-                out_feat.extend([name] * n_rows)
-                if measure_time:
-                    if ms is None:
-                        ms = (time.perf_counter() - t0) * 1000.0
-                    out_ms.extend([ms] * n_rows)
-            n_new = len(out_feat) - len(out_conv)
-            out_conv.extend([conv] * n_new)
-            out_ser.extend([ser] * n_new)
-        cols = {
-            "conv_id": out_conv,
-            "series": out_ser,
-            "feature": out_feat,
-            mid_col: out_mid,
-            "value": out_val,
-        }
+        cols: dict[str, list] = {c: [] for c in (
+            "conv_id", "series", "feature", mid_col, "value")}
         if measure_time:
-            cols["wall_ms"] = out_ms
+            cols["wall_ms"] = []
+        for gi, name, arr, ms in _feature_arrays(
+            names, [g[2] for g in groups],
+            lambda gi, name: feature_seed(groups[gi][0], name), measure_time,
+        ):
+            if summarized:
+                rows = _summary_rows(arr, summ_names)
+                cols[mid_col].extend(r[0] for r in rows)
+                cols["value"].extend(r[1] for r in rows)
+                n_rows = len(rows)
+            else:
+                cols[mid_col].extend(range(arr.size))
+                cols["value"].extend(arr.tolist())
+                n_rows = arr.size
+            cols["conv_id"].extend([groups[gi][0]] * n_rows)
+            cols["series"].extend([groups[gi][1]] * n_rows)
+            cols["feature"].extend([name] * n_rows)
+            if measure_time:
+                cols["wall_ms"].extend([ms] * n_rows)
         return pd.DataFrame(cols)
 
     if summarized:
@@ -649,76 +635,85 @@ def series_features(
                              parallelism)
 
 
-BOOTSTRAP_SCHEMA = (
-    "conv_id string, series string, resample int, feature string, "
-    "idx int, value double"
+def spark_percentile(v: np.ndarray, p: float) -> float:
+    """Spark SQL ``percentile(col, p)`` of the sorted, non-empty,
+    NaN-free ``v``, to the bit: at position (n − 1)·p, ``v[lo]`` when
+    ``lo == hi`` or ``v[lo] == v[hi]``, else (hi − pos)·v[lo] +
+    (pos − lo)·v[hi] (``PercentileBase.getPercentile``)."""
+    pos = (v.size - 1) * p
+    lo, hi = math.floor(pos), math.ceil(pos)
+    if lo == hi or v[lo] == v[hi]:
+        return float(v[lo])
+    return (hi - pos) * float(v[lo]) + (pos - lo) * float(v[hi])
+
+
+CI_SCHEMA = (
+    "conv_id string, series string, name string, value double, "
+    "ci_low double, ci_high double, n_resamples bigint"
 )
 
 
-def bootstrap_series_features(
+def bootstrap_ci(
     df: DataFrame,
     features: Iterable[str] | None = None,
+    summaries: Iterable[str] = DEFAULT_SUMMARIES,
     sample_num: int = 128,
+    confidence: float = 0.95,
     max_points: int = 4096,
     order_col: str = "turn_idx",
     value_col: str = "value",
     base_seed: int = 1234,
-    parallelism: int | None = None,
-    n_groups: int | None = None,
 ) -> DataFrame:
-    """Kernel features on ``sample_num`` bootstrap resamples per series
-    (reference ``extract_with_confidence``, tsmfe.py:1079-1248 /
-    _extract_with_bootstrap:982-1077: iid index resampling WITH
-    replacement, fresh seed per iteration).
+    """Bootstrap CI rows (``CI_SCHEMA``) per (conv_id, series, name)
+    (reference ``extract_with_confidence``, tsmfe.py:1079-1248: iid
+    resampling WITH replacement, fresh seed per iteration), on
+    ``grouped.map_sorted_groups`` like ``series_features``.
 
-    Distribution shape: the resample loop runs INSIDE the Arrow worker
-    on the already-local series — one shuffle total, no sample_num×
-    data explosion; seeds derive from (conv_id, resample) so results
-    are partition/shuffle-invariant."""
+    Per series (runner order, last ``max_points`` points) the worker
+    draws resample r with ``RandomState(feature_seed(conv,
+    f"bootstrap:{r}", base_seed))`` and runs ``_feature_arrays`` over
+    all resamples at once (a batched kernel gets one (sample_num, n)
+    stack; seeded kernels get ``feature_seed(conv, f"{name}:{r}",
+    base_seed)``).  Per name (``feature`` or ``feature.summary``), NaN
+    resample values are dropped: ``value`` is the mean of the rest,
+    ``ci_low``/``ci_high`` their ``spark_percentile`` at α/2 and
+    1 − α/2 (α = 1 − confidence), ``n_resamples`` their count; with
+    none left, ``value``/``ci_*`` are NULL."""
     names = _resolve_features(features)
-    has_series = "series" in df.columns
-    keys = ["conv_id", "series"] if has_series else ["conv_id"]
-    if parallelism is None:
-        parallelism = 2 * df.sparkSession.sparkContext.defaultParallelism
-        if n_groups is not None:
-            # tiny-corpus clamp (round-4 ADVICE): a 10-series test
-            # corpus under a 64-partition repartition makes mostly
-            # empty partitions; cap at the caller's group estimate
-            # (hash partitioning cannot use more partitions than
-            # groups productively)
-            parallelism = max(1, min(parallelism, int(n_groups)))
-    df = df.repartition(parallelism, *keys)  # see series_features note
+    summ_names = tuple(summaries)
+    has_series, keys = _series_keys(df)
+    p_lo = 0.5 * (1.0 - confidence)
+    p_hi = 1.0 - p_lo
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        if len(pdf) > max_points:
-            pdf = pdf.iloc[-max_points:]
-        x = pdf[value_col].to_numpy(dtype=float)
-        conv = pdf["conv_id"].iloc[0]
-        ser = pdf["series"].iloc[0] if has_series else value_col
-        out: dict[str, list] = {
-            "resample": [], "feature": [], "idx": [], "value": []
-        }
-        for r in range(sample_num):
-            rng = np.random.RandomState(
+    def kernel(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
+        vals = pdf[value_col].to_numpy(dtype=float)
+        convs = pdf["conv_id"].to_numpy()
+        sers = pdf["series"].to_numpy() if has_series else None
+        rows = []
+        for a, b in zip(starts[:-1].tolist(), starts[1:].tolist()):
+            conv, x = convs[a], vals[max(a, b - max_points): b]
+            xs = [x[np.random.RandomState(
                 feature_seed(conv, f"bootstrap:{r}", base_seed)
-            )
-            xs = x[rng.randint(x.size, size=x.size)]
-            for name in names:
-                try:
-                    if name in SEEDED_FEATURE_KERNELS:
-                        res = SEEDED_FEATURE_KERNELS[name](
-                            xs, feature_seed(conv, f"{name}:{r}", base_seed)
-                        )
-                    else:
-                        res = FEATURE_KERNELS[name](xs)
-                except Exception:
-                    res = np.nan
-                arr = np.atleast_1d(np.asarray(res, dtype=float))
-                out["resample"].extend([r] * arr.size)
-                out["feature"].extend([name] * arr.size)
-                out["idx"].extend(range(arr.size))
-                out["value"].extend(arr.tolist())
-        return pd.DataFrame({"conv_id": conv, "series": ser, **out})
+            ).randint(x.size, size=x.size)] for r in range(sample_num)]
+            by_name: dict[str, list[float]] = {}
+            for _, name, arr, _ in _feature_arrays(
+                names, xs,
+                lambda r, name: feature_seed(conv, f"{name}:{r}", base_seed),
+            ):
+                for summ, v in _summary_rows(arr, summ_names):
+                    by_name.setdefault(f"{name}.{summ}" if summ else name,
+                                       []).append(v)
+            ser = sers[a] if has_series else value_col
+            for name, got in by_name.items():
+                v = np.sort(got)
+                v = v[~np.isnan(v)]
+                ci = ((v.mean(), spark_percentile(v, p_lo),
+                       spark_percentile(v, p_hi)) if v.size else
+                      (np.nan,) * 3)
+                rows.append((conv, ser, name, *ci, v.size))
+        return pd.DataFrame(rows, columns=[
+            "conv_id", "series", "name", "value", "ci_low", "ci_high",
+            "n_resamples"])
 
-    return df.groupBy(*keys).applyInPandas(kernel, BOOTSTRAP_SCHEMA)
+    return map_sorted_groups(df.select(*keys, order_col, value_col), keys,
+                             [order_col, value_col], kernel, CI_SCHEMA)

@@ -13,18 +13,21 @@ SHAPE-preserving ones a dashboard needs.
 * **LTTB** (Steinarsson 2013, "Largest-Triangle-Three-Buckets"):
   fixed output size with visual-salience selection.  Inherently
   sequential (each pick depends on the previous pick), so it runs as
-  a per-series vectorized numpy kernel under ``applyInPandas`` — the
-  per-bucket triangle areas are computed vectorized; only the
-  bucket-to-bucket carry is a Python loop over n_out buckets (not
-  over points).
+  a per-series vectorized numpy kernel on the partition-level runner
+  (``operators/grouped.map_sorted_groups``) — the per-bucket triangle
+  areas are computed vectorized; only the bucket-to-bucket carry is a
+  Python loop over n_out buckets (not over points).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
+
+from ts_pymfe_spark.operators.grouped import map_sorted_groups
 
 
 def m4_downsample(df: DataFrame, n_buckets: int = 64,
@@ -107,39 +110,36 @@ def lttb_select(x: np.ndarray, y: np.ndarray, n_out: int) -> np.ndarray:
 def lttb_downsample(df: DataFrame, n_out: int = 64,
                     key: str = "conv_id", order_col: str = "turn_idx",
                     value_col: str = "value") -> DataFrame:
-    """Per-series LTTB under ``applyInPandas`` (Arrow-batched, no
-    per-row Python).  Output schema: (key, order_col, value_col) with
-    the key and order types taken from the INPUT schema (ADVICE r5:
-    a hard-coded struct mislabeled non-default columns and broke
-    non-string keys at Arrow conversion); values are double.
-
-    The explicit numbered repartition keeps AQE from coalescing the
-    grouped stage (round-5 summarize() lesson — FlatMapGroupsInPandas
-    does not propagate outputPartitioning).
-    """
-    import pandas as pd
-
+    """Per-series LTTB on the partition-level runner
+    (``grouped.map_sorted_groups``: one shuffle, one ``mapInPandas``,
+    no per-row Python).  Each series reaches ``lttb_select`` sorted by
+    (``order_col``, ``value_col``), so duplicate ``order_col`` values
+    pick the same points under any partitioning.  Output schema: (key,
+    order_col, value_col) with the key and order types taken from the
+    INPUT schema (ADVICE r5: a hard-coded struct mislabeled
+    non-default columns and broke non-string keys at Arrow
+    conversion); values are double."""
     schema = StructType([
         StructField(key, df.schema[key].dataType),
         StructField(order_col, df.schema[order_col].dataType),
         StructField(value_col, DoubleType()),
     ])
 
-    def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
+    def kernel(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
         x = pdf[order_col].to_numpy(dtype=np.float64)
         y = pdf[value_col].to_numpy(dtype=np.float64)
-        keep = lttb_select(x, y, n_out)
+        keep = np.concatenate([
+            a + lttb_select(x[a:b], y[a:b], n_out)
+            for a, b in zip(starts[:-1].tolist(), starts[1:].tolist())
+        ])
         return pd.DataFrame({
-            key: pdf[key].iloc[0],
+            key: pdf[key].to_numpy()[keep],
             order_col: pdf[order_col].to_numpy()[keep],
             value_col: y[keep],
         })
 
-    n = df.sparkSession.sparkContext.defaultParallelism * 2
-    return (df.select(F.col(key), F.col(order_col), F.col(value_col))
-            .repartition(n, key)
-            .groupBy(key).applyInPandas(_one, schema))
+    return map_sorted_groups(df.select(key, order_col, value_col), [key],
+                             [order_col, value_col], kernel, schema)
 
 
 #: SAX breakpoints for equiprobable Gaussian regions (Lin et al. 2003,
