@@ -486,7 +486,7 @@ def q_gorilla_roundtrip(spark, sf_dir):
     )
 
 
-# batch sessionizer (the streaming operator's oracle form): cumulative
+# batch sessionizer (sequence.sessionize_batch): cumulative
 # count of gaps > 600 s per conversation, total order (ts, turn_idx).
 @register(
     "sessionize",
@@ -506,7 +506,7 @@ def q_gorilla_roundtrip(spark, sf_dir):
     """,
 )
 def q_sessionize(spark, sf_dir):
-    from ts_pymfe_spark.streaming.stateful import sessionize_batch
+    from ts_pymfe_spark.operators.sequence import sessionize_batch
 
     out = sessionize_batch(
         _series(spark, sf_dir), gap_seconds=600,
@@ -3691,7 +3691,7 @@ def q_paa_sax(spark, sf_dir):
 
 
 # per-session aggregates over the sessionizer's assignment
-# (stateful.session_stats) — same 600 s gap / (ts, turn_idx) total
+# (sequence.session_stats) — same 600 s gap / (ts, turn_idx) total
 # order as the sessionize contract query.
 @register(
     "session_stats",
@@ -3717,7 +3717,7 @@ def q_paa_sax(spark, sf_dir):
     """,
 )
 def q_session_stats(spark, sf_dir):
-    from ts_pymfe_spark.streaming.stateful import session_stats
+    from ts_pymfe_spark.operators.sequence import session_stats
 
     return session_stats(_series(spark, sf_dir), gap_seconds=600,
                          order_cols=("ts", "turn_idx"))

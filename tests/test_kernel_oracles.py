@@ -1055,6 +1055,16 @@ def _approx_entropy_reference(ts, m=2, factor=0.2, max_n=512):
     return phis[m] - phis[m + 1]
 
 
+def _approx_entropy_reference_quiet(ts, m=2):
+    """``_approx_entropy_reference`` without the two numpy warnings it
+    raises on its way to NaN when n ≤ m: the mean over zero (m+1)-window
+    rows ("Mean of empty slice") and that mean's 0/0."""
+    with warnings.catch_warnings(), np.errstate(invalid="ignore"):
+        warnings.filterwarnings("ignore", "Mean of empty slice",
+                                RuntimeWarning)
+        return _approx_entropy_reference(ts, m=m)
+
+
 def _sample_entropy_reference(ts, m=2, factor=0.2, max_n=512):
     x = np.asarray(ts, dtype=float)
     if x.size > max_n:
@@ -1095,13 +1105,35 @@ def test_entropies_from_shared_counts_bit_identical(n, m):
     for kind, x in _entropy_inputs(n, m).items():
         with np.errstate(divide="ignore"):
             pairs = [
-                (_approx_entropy_reference(x, m=m), K.approx_entropy(x, m=m)),
+                (_approx_entropy_reference_quiet(x, m=m),
+                 K.approx_entropy(x, m=m)),
                 (_sample_entropy_reference(x, m=m), K.sample_entropy(x, m=m)),
-                (_approx_entropy_reference(x, m=m),
+                (_approx_entropy_reference_quiet(x, m=m),
                  K.approx_entropy(x, m=m, memo=False)),
             ]
         for ref, got in pairs:
             assert (np.isnan(ref) and np.isnan(got)) or ref == got, kind
+
+
+@pytest.mark.parametrize("n", [1, 2, 3])
+@pytest.mark.parametrize("m", [2, 3])
+def test_approx_entropy_short_series_is_nan_without_warning(n, m):
+    """A cut series of at most m points has no (m+1)-window: ApEn is
+    NaN, returned before the match-count pass, so no numpy warning is
+    raised and no memo entry is added.  n = 3 at m = 2 has one
+    (m+1)-window: it runs the pass (one memo entry) to a finite value,
+    still without a warning."""
+    x = np.random.default_rng(n + m).standard_normal(n)
+    K._MEMO.clear()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = [K.approx_entropy(x, m=m), K.approx_entropy(x, m=m, memo=False)]
+    if n <= m:
+        assert all(np.isnan(g) for g in got)
+        assert not K._MEMO
+    else:
+        assert all(np.isfinite(g) for g in got) and got[0] == got[1]
+        assert len(K._MEMO) == 1
 
 
 @pytest.mark.parametrize("n", [3, 5, 40, 300, 512, 700])

@@ -285,7 +285,7 @@ def test_paa_sax_single_exchange(spark):
 
 
 def test_session_stats_single_exchange(spark):
-    from ts_pymfe_spark.streaming.stateful import session_stats
+    from ts_pymfe_spark.operators.sequence import session_stats
 
     p = plan(session_stats(_series6(spark), gap_seconds=600,
                            order_cols=("ts", "turn_idx")))

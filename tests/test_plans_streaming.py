@@ -83,127 +83,6 @@ def test_streaming_rollup_matches_batch(spark, turns, tmp_path):
     )
 
 
-def test_stateful_sessionizer_matches_batch_oracle(spark, turns, tmp_path):
-    """applyInPandasWithState sessionizer: multi-microbatch streaming
-    run (file source, 2 files per trigger) must equal the one-pass
-    batch window oracle — state survives across batches."""
-    from ts_pymfe_spark.streaming.rollup_stream import stream_turns
-    from ts_pymfe_spark.streaming.stateful import (
-        sessionize_batch,
-        sessionize_stream,
-    )
-
-    in_dir = str(tmp_path / "sess_in")
-    ckpt = str(tmp_path / "sess_ckpt")
-    # several files -> several microbatches; repartition by conv so one
-    # conversation spans multiple batches (the stateful part)
-    turns.orderBy("ts").coalesce(1).write.mode("overwrite").parquet(in_dir)
-
-    out = sessionize_stream(stream_turns(spark, in_dir, 2), gap_seconds=600)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = (
-        spark.table("sessions")
-        .orderBy("conv_id", "ts", "turn_idx")
-        .toPandas()
-    )
-    exp = (
-        sessionize_batch(turns, gap_seconds=600)
-        .orderBy("conv_id", "ts", "turn_idx")
-        .toPandas()
-    )
-    assert len(got) == len(exp) > 0
-    np.testing.assert_array_equal(
-        got["session_id"].to_numpy(), exp["session_id"].to_numpy()
-    )
-    # sanity: gaps actually produced multiple sessions somewhere
-    assert got.groupby("conv_id")["session_id"].max().max() >= 1
-
-
-def test_sessionizer_late_data_contract(spark, tmp_path):
-    """Bounded-disorder contract of sessionize_stream: a turn arriving
-    in a LATER microbatch with an OLDER event time (1) joins the
-    session open at arrival instead of forcing a new one, and (2)
-    cannot drag the session clock backwards — the state's high-water
-    ts is monotone, so a subsequent in-gap turn is NOT spuriously
-    split (without max(last_us, us) the late 30 s turn would rewind
-    the clock and the +200 s turn's 170 s gap would break the 100 s
-    session)."""
-    import datetime as dt
-    import time
-
-    from ts_pymfe_spark.streaming.rollup_stream import stream_turns
-    from ts_pymfe_spark.streaming.stateful import sessionize_stream
-    from ts_pymfe_spark.synth import TURNS_SCHEMA
-
-    t0 = dt.datetime(2025, 1, 1, 12, 0, 0)
-
-    def row(idx, sec):
-        return ("c1", idx, "user", "x", "", t0 + dt.timedelta(seconds=sec))
-
-    in_dir = str(tmp_path / "late_in")
-    ckpt = str(tmp_path / "late_ckpt")
-    # microbatch 1: ordered turns, all gaps <= 100 s -> one session
-    b1 = spark.createDataFrame([row(0, 0), row(1, 60), row(2, 120)],
-                               TURNS_SCHEMA)
-    b1.coalesce(1).write.mode("overwrite").parquet(in_dir)
-    time.sleep(1.1)  # distinct file mtimes => deterministic batch order
-    # microbatch 2: one LATE turn (ts +30 s < high-water +120 s) and one
-    # in-gap turn (+200 s, 80 s after the true newest turn)
-    b2 = spark.createDataFrame([row(3, 30), row(4, 200)], TURNS_SCHEMA)
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-
-    out = sessionize_stream(
-        stream_turns(spark, in_dir, max_files_per_trigger=1),
-        gap_seconds=100,
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("late_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = spark.table("late_sessions").orderBy("turn_idx").toPandas()
-    assert len(got) == 5
-    # late turn joined the open session; the monotone clock kept the
-    # +200 s turn in it too
-    assert got["session_id"].tolist() == [0, 0, 0, 0, 0]
-
-
-def test_sessionizer_timeout_mode_wiring(spark):
-    """idle_timeout_seconds=None -> NoTimeout (terminating availableNow
-    replays); set -> ProcessingTimeTimeout eviction (continuous mode).
-    The full timeout firing needs a wall-clock continuous trigger, so
-    the wiring is asserted from the analyzed plan."""
-    from ts_pymfe_spark.streaming.rollup_stream import stream_turns
-    from ts_pymfe_spark.streaming.stateful import sessionize_stream
-    import tempfile
-
-    src = stream_turns(spark, tempfile.mkdtemp(), 1)
-    plan_none = (
-        sessionize_stream(src, idle_timeout_seconds=None)
-        ._jdf.queryExecution().analyzed().toString()
-    )
-    plan_evict = (
-        sessionize_stream(src, idle_timeout_seconds=3600)
-        ._jdf.queryExecution().analyzed().toString()
-    )
-    assert "NoTimeout" in plan_none
-    assert "ProcessingTimeTimeout" in plan_evict
-
-
 def test_checkpointed_writer_single_upstream_execution(spark, turns, tmp_path):
     """Round-4 redesign: run() must execute the upstream pipeline ONCE
     for all pending partitions (the old form ran one full job per day —
@@ -245,7 +124,7 @@ def test_streaming_full_cascade_matches_batch(spark, turns, tmp_path):
     in_dir = str(tmp_path / "casc_in")
     store = str(tmp_path / "casc_store")
     ckpt = str(tmp_path / "casc_ckpt")
-    # >=2 microbatches (maxFilesPerTrigger=8 in stream_turns), with
+    # >=2 microbatches (run_stream_to_store reads 8 files per trigger), with
     # conversations straddling the batch boundary
     turns.repartition(16).write.mode("overwrite").parquet(in_dir)
 
@@ -881,113 +760,6 @@ def test_stream_store_compaction_exactly_once(spark, turns, tmp_path):
         compact_stream_store(spark, store, compact, "1m", days[0])
 
 
-def test_dedup_stream_first_arrival_across_microbatches(spark, tmp_path):
-    """Streaming exact dedup: across microbatches, exactly one output
-    row per distinct md5(text), and the survivor is the FIRST-ARRIVED
-    doc (the only rule with O(1) state per key)."""
-    import datetime as dt
-    import time
-
-    from ts_pymfe_spark.streaming.dedup_stream import (
-        DOC_STREAM_SCHEMA,
-        dedup_stream,
-        stream_docs,
-    )
-
-    t0 = dt.datetime(2025, 1, 1, 12, 0, 0)
-
-    def row(i, txt, sec):
-        return (i, txt, t0 + dt.timedelta(seconds=sec))
-
-    in_dir = str(tmp_path / "docs_in")
-    ckpt = str(tmp_path / "docs_ckpt")
-    b1 = spark.createDataFrame(
-        [row(1, "aaa", 0), row(2, "bbb", 60)], DOC_STREAM_SCHEMA
-    )
-    b1.coalesce(1).write.mode("overwrite").parquet(in_dir)
-    time.sleep(1.1)  # distinct mtimes => deterministic batch order
-    b2 = spark.createDataFrame(
-        [row(3, "aaa", 120), row(4, "ccc", 180), row(5, "bbb", 240)],
-        DOC_STREAM_SCHEMA,
-    )
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-
-    out = dedup_stream(stream_docs(spark, in_dir), watermark="10 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_docs")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = spark.table("dedup_docs").orderBy("doc_id").toPandas()
-    # one row per distinct content; survivors are first arrivals
-    assert got["doc_id"].tolist() == [1, 2, 4]
-    assert sorted(got["text"].tolist()) == ["aaa", "bbb", "ccc"]
-
-
-def test_dedup_stream_watermark_bounds_state(spark, tmp_path):
-    """The state store is bounded by the watermark horizon: once the
-    event-time watermark passes a key's expiry, the key is evicted and
-    the same content RE-EMITS — proving state is O(distinct content in
-    horizon), not O(stream history).  Timing detail: the watermark a
-    batch runs with comes from the PREVIOUS batch's max event time, and
-    expired state is swept lazily at batch end — so after the
-    watermark-advancing filler batch, one more batch must pass before a
-    re-arrival of the same content finds the state evicted."""
-    import datetime as dt
-    import time
-
-    from ts_pymfe_spark.streaming.dedup_stream import (
-        DOC_STREAM_SCHEMA,
-        dedup_stream,
-        stream_docs,
-    )
-
-    t0 = dt.datetime(2025, 1, 1, 12, 0, 0)
-
-    def row(i, txt, sec):
-        return (i, txt, t0 + dt.timedelta(seconds=sec))
-
-    in_dir = str(tmp_path / "evict_in")
-    ckpt = str(tmp_path / "evict_ckpt")
-    # batch 1: "aaa" enters state (expiry t0 + 10 min)
-    b1 = spark.createDataFrame([row(1, "aaa", 0)], DOC_STREAM_SCHEMA)
-    b1.coalesce(1).write.mode("overwrite").parquet(in_dir)
-    time.sleep(1.1)
-    # batch 2: filler 1 h later -> the NEXT batch runs with watermark
-    # t0 + 50 min > expiry
-    b2 = spark.createDataFrame([row(2, "filler", 3600)], DOC_STREAM_SCHEMA)
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    time.sleep(1.1)
-    # batch 3: runs with the advanced watermark; its end-of-batch sweep
-    # evicts "aaa"
-    b3 = spark.createDataFrame([row(3, "filler2", 3700)], DOC_STREAM_SCHEMA)
-    b3.coalesce(1).write.mode("append").parquet(in_dir)
-    time.sleep(1.1)
-    # batch 4: "aaa" again -> state gone -> re-emitted
-    b4 = spark.createDataFrame([row(4, "aaa", 3800)], DOC_STREAM_SCHEMA)
-    b4.coalesce(1).write.mode("append").parquet(in_dir)
-
-    out = dedup_stream(stream_docs(spark, in_dir), watermark="10 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("evict_docs")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = spark.table("evict_docs").orderBy("doc_id").toPandas()
-    assert got["doc_id"].tolist() == [1, 2, 3, 4]
-    assert got["text"].tolist() == ["aaa", "filler", "filler2", "aaa"]
-
-
 def test_streaming_hll_matches_batch(spark, turns, tmp_path):
     """Streamed per-microbatch HLL partials, max-merged on read, equal
     the batch sketch over the same rows — register-exact, so the
@@ -1026,114 +798,6 @@ def test_streaming_hll_matches_batch(spark, turns, tmp_path):
                 if d.startswith("batch=")]) >= 2
 
 
-def test_streaming_counter_matches_batch(spark, tmp_path):
-    """Multi-microbatch streamed counter increases equal the batch
-    counter_increase on per-key time-ordered delivery — including a
-    reset straddling a microbatch boundary."""
-    import datetime as dt
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from ts_pymfe_spark.operators.counters import counter_increase
-    from ts_pymfe_spark.streaming.stateful import counter_rate_stream
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    for u in (1, 2):
-        v = 0.0
-        for i in range(40):
-            v = (v + 5.0) if (i % 13) else (1.0 if i else 5.0)  # resets
-            rows.append((u, t0 + dt.timedelta(seconds=10 * i + u), v))
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-
-    in_dir = str(tmp_path / "cnt_in")
-    # per-key ordered arrival: four time-slices written sequentially
-    # (FileStreamSource processes oldest-modified first)
-    for k in range(4):
-        df.filter(F.floor(
-            (F.col("ts").cast("long") - F.lit(int(t0.timestamp())))
-            / 100) == k) \
-          .coalesce(1).write.mode("append").parquet(in_dir)
-        _time.sleep(0.05)
-
-    stream = (spark.readStream
-              .schema("user_id long, ts timestamp, value double")
-              .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    out_dir = str(tmp_path / "cnt_out")
-    q = (counter_rate_stream(stream).writeStream
-         .format("parquet").option("path", out_dir)
-         .option("checkpointLocation", str(tmp_path / "cnt_ckpt"))
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    got = sorted(
-        (r["user_id"], r["ts"], r["increase"], r["is_reset"])
-        for r in spark.read.parquet(out_dir).collect())
-    exp = sorted(
-        (r["user_id"], r["ts"], r["increase"], r["is_reset"])
-        for r in counter_increase(df).select(
-            "user_id", "ts", "increase", "is_reset").collect())
-    assert got == exp
-
-
-def test_streaming_funnel_matches_batch(spark, tmp_path):
-    """The streamed funnel's final per-key state equals the batch
-    funnel on per-key time-ordered delivery, with chains straddling
-    microbatch boundaries."""
-    import datetime as dt
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from ts_pymfe_spark.operators.funnel import funnel
-    from ts_pymfe_spark.streaming.stateful import funnel_stream
-
-    t0 = dt.datetime(2024, 1, 1)
-    kinds = ["view", "click", "purchase", "error"]
-    rows = []
-    eid = 0
-    for u in range(1, 9):
-        for i in range(12):
-            rows.append((eid, u, t0 + dt.timedelta(seconds=100 * i + u),
-                         kinds[(i * u + u) % 4]))
-            eid += 1
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id long, ts timestamp, "
-              "event_type string")
-
-    in_dir = str(tmp_path / "fn_in")
-    for k in range(3):  # three ordered time-slices -> 3 microbatches
-        df.filter(F.floor(
-            (F.col("ts").cast("long") - F.lit(int(t0.timestamp())))
-            / 400) == k).coalesce(1) \
-          .write.mode("append").parquet(in_dir)
-        _time.sleep(0.05)
-
-    latest = {}
-
-    def keep_latest(batch_df, batch_id):
-        for r in batch_df.collect():
-            latest[r["user_id"]] = (r["t1"], r["t2"], r["t3"], r["depth"])
-
-    stream = (spark.readStream
-              .schema("event_id long, user_id long, ts timestamp, "
-                      "event_type string")
-              .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    q = (funnel_stream(stream, ["view", "click", "purchase"])
-         .writeStream.foreachBatch(keep_latest)
-         .option("checkpointLocation", str(tmp_path / "fn_ckpt"))
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    exp = {r["user_id"]: (r["t1"], r["t2"], r["t3"], r["depth"])
-           for r in funnel(
-               df, [F.col("event_type") == s
-                    for s in ("view", "click", "purchase")],
-               window_s=86400.0, tiebreak_col="event_id").collect()}
-    assert latest == exp
-
-
 def test_streaming_histogram_matches_batch(spark, turns, tmp_path):
     """Streamed per-microbatch histogram partials, sum-merged on read,
     equal the batch sketch bin-for-bin — so streamed quantiles equal
@@ -1170,117 +834,6 @@ def test_streaming_histogram_matches_batch(spark, turns, tmp_path):
     eq = sorted(map(tuple, histogram_quantile(
         exp, ["day"], [0.5], 0.0, 200.0, 100).collect()))
     assert gq == eq
-
-
-def test_counter_stream_event_time_eviction(spark, tmp_path):
-    """Round 6: watermark-driven state eviction for the stateful
-    counter.  A key idle past evict_after_seconds in EVENT time is
-    dropped from the state store once the watermark passes its
-    horizon; its next sample then counts as first-ever (increase null)
-    instead of diffing against the stale value.  Same lazy-sweep
-    timing as dedup_stream: watermark advances at batch end, timed-out
-    groups fire the following batch."""
-    import datetime as dt
-    import time as _time
-
-    from ts_pymfe_spark.streaming.stateful import counter_rate_stream
-
-    t0 = dt.datetime(2024, 1, 1)
-    in_dir = str(tmp_path / "cev_in")
-    schema = "user_id long, ts timestamp, value double"
-
-    def write(rows):
-        spark.createDataFrame(rows, schema).coalesce(1) \
-            .write.mode("append").parquet(in_dir)
-        _time.sleep(1.1)
-
-    write([(1, t0, 100.0)])                                   # b1: enter
-    write([(99, t0 + dt.timedelta(seconds=7200), 1.0)])       # b2: advance wm
-    write([(99, t0 + dt.timedelta(seconds=7300), 2.0)])       # b3: sweep
-    write([(1, t0 + dt.timedelta(seconds=7400), 150.0)])      # b4: re-seen
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(in_dir)
-              .withWatermark("ts", "10 minutes"))
-    out_dir = str(tmp_path / "cev_out")
-    q = (counter_rate_stream(stream, evict_after_seconds=600)
-         .writeStream.format("parquet").option("path", out_dir)
-         .option("checkpointLocation", str(tmp_path / "cev_ckpt"))
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    got = {(r["user_id"], r["ts"]): (r["increase"], r["is_reset"])
-           for r in spark.read.parquet(out_dir).collect()}
-    assert got[(1, t0)] == (None, False)
-    # evicted between b1 and b4: 150 is a FIRST sample, not a 50 delta
-    assert got[(1, t0 + dt.timedelta(seconds=7400))] == (None, False)
-    # the filler key kept its state across b2->b3 (wm never passed it)
-    assert got[(99, t0 + dt.timedelta(seconds=7300))] == (1.0, False)
-
-
-def test_funnel_stream_event_time_eviction(spark, tmp_path):
-    """Round 6: funnel state eviction.  With an effectively-unbounded
-    funnel window, a click after the key's view would normally reach
-    depth 2 — but the key idled past the eviction horizon, so its
-    chain restarts and the latest row shows depth 0."""
-    import datetime as dt
-    import time as _time
-
-    from ts_pymfe_spark.streaming.stateful import funnel_stream
-
-    t0 = dt.datetime(2024, 1, 1)
-    in_dir = str(tmp_path / "fev_in")
-    schema = "user_id long, ts timestamp, event_type string"
-
-    def write(rows):
-        spark.createDataFrame(rows, schema).coalesce(1) \
-            .write.mode("append").parquet(in_dir)
-        _time.sleep(1.1)
-
-    write([(1, t0, "view")])
-    write([(99, t0 + dt.timedelta(seconds=7200), "view")])
-    write([(99, t0 + dt.timedelta(seconds=7300), "click")])
-    write([(1, t0 + dt.timedelta(seconds=7400), "click")])
-
-    latest = {}
-
-    def keep_latest(batch_df, batch_id):
-        for r in batch_df.collect():
-            latest[r["user_id"]] = (r["t1"], r["t2"], r["depth"])
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(in_dir)
-              .withWatermark("ts", "10 minutes"))
-    q = (funnel_stream(stream, ["view", "click", "purchase"],
-                       window_s=10**7, evict_after_seconds=600)
-         .writeStream.foreachBatch(keep_latest)
-         .option("checkpointLocation", str(tmp_path / "fev_ckpt"))
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    # key 1 was evicted before its click: chain restarted at depth 0
-    assert latest[1] == (None, None, 0)
-    # key 99 stayed within horizon: view->click = depth 2
-    assert latest[99][2] == 2
-
-
-def test_eviction_param_wiring(spark):
-    """idle_timeout (processing-time) and evict_after (event-time) are
-    mutually exclusive; each maps to its GroupStateTimeout conf."""
-    import pytest as _pytest
-
-    from ts_pymfe_spark.streaming.stateful import (_pick_timeout,
-                                                   counter_rate_stream)
-
-    with _pytest.raises(ValueError):
-        _pick_timeout(3600, 600)
-    src = (spark.readStream.format("rate").load()
-           .selectExpr("value AS user_id", "timestamp AS ts",
-                       "CAST(value AS DOUBLE) AS value")
-           .withWatermark("ts", "1 minute"))
-    # both forms must at least build their plans
-    counter_rate_stream(src, idle_timeout_seconds=3600)
-    counter_rate_stream(src, evict_after_seconds=600)
 
 
 def test_streaming_cms_matches_batch(spark, turns, tmp_path):

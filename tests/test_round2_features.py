@@ -286,70 +286,6 @@ def test_jaccard_pairs_guard_refuses_oversize_corpus(spark):
     assert TP.jaccard_pairs(docs, max_docs=10, force=True).count() >= 0
 
 
-# ---------------------------------------------------------------------------
-# Multimodal: pure-numpy WAV/BMP codecs + real decode -> feature path
-# ---------------------------------------------------------------------------
-
-def test_wav_roundtrip_pcm16():
-    from ts_pymfe_spark.operators.multimodal import decode_wav, encode_wav
-
-    rng = np.random.default_rng(3)
-    x = np.clip(0.7 * np.sin(np.arange(800) / 5.0)
-                + 0.1 * rng.standard_normal(800), -1, 1)
-    payload = encode_wav(x, 8000)
-    got, sr = decode_wav(payload)
-    assert sr == 8000
-    assert got.shape == x.shape
-    # PCM16 quantization error bound: 1/32767
-    assert np.max(np.abs(got - x)) <= 1.0 / 32767 + 1e-12
-
-
-def test_bmp_roundtrip_exact():
-    from ts_pymfe_spark.operators.multimodal import decode_bmp, encode_bmp
-
-    rng = np.random.default_rng(4)
-    img = rng.integers(0, 256, (7, 5, 3), dtype=np.uint8)  # odd width: padding
-    got = decode_bmp(encode_bmp(img))
-    assert got.dtype == np.uint8
-    assert np.array_equal(got, img)
-
-
-def test_media_features_real_decode_path(spark):
-    from ts_pymfe_spark.operators import multimodal as MM
-
-    media = MM.synth_media(spark, 18)
-    mimes = {
-        r["media_id"]: r["mime"] for r in media.select("media_id", "mime").collect()
-    }
-    out = MM.extract_media_features(media).toPandas()
-    assert len(out) == 18
-    by_kind = out.set_index("media_id")["feature"]
-    kinds = out.set_index("media_id")["kind"]
-    for mid, feat in by_kind.items():
-        if kinds[mid] == "video" and mimes[mid] == "video/mp4":
-            assert feat is None  # compressed container: stub retained
-        else:
-            # BMP / WAV / raw YUV4MPEG2: real decode
-            assert feat is not None and len(feat) == 16
-    # audio features: rms of a 0.5-amplitude sine ~ 0.35
-    audio = out[out.kind == "audio"]["feature"]
-    rms = np.array([f[0] for f in audio])
-    assert (rms > 0.2).all() and (rms < 0.6).all()
-    # image features: channel means in [0,1], histogram sums to 1
-    img = out[out.kind == "image"]["feature"].iloc[0]
-    assert 0.0 <= img[0] <= 1.0
-    assert abs(sum(img[4:]) - 1.0) < 1e-5
-
-
-def test_decode_image_dispatches_bmp_and_stubs_compressed():
-    from ts_pymfe_spark.operators.multimodal import decode_image, encode_bmp
-
-    img = np.zeros((3, 3, 3), dtype=np.uint8)
-    assert decode_image(encode_bmp(img)).shape == (3, 3, 3)
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG\r\n\x1a\n....")
-
-
 def test_moving_acf_sql_exact_vs_kernel(spark, small_series):
     """The SQL moving_acf is now the EXACT rolling adjusted lag-1 ACF
     (round 1 shipped a Pearson-corr approximation).  Oracle: the numpy

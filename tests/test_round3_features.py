@@ -108,16 +108,6 @@ def test_avg_word_len_is_token_derived(spark):
     assert got[2] == pytest.approx(1.0)
 
 
-def test_media_arrow_batch_scopes_and_restores_conf(spark):
-    from ts_pymfe_spark.operators.multimodal import media_arrow_batch
-
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prior = spark.conf.get(key)
-    with media_arrow_batch(spark, batch_mb=64, avg_row_kb=512):
-        assert spark.conf.get(key) == str((64 * 1024) // 512)
-    assert spark.conf.get(key) == prior
-
-
 def test_measure_time_single_pass_no_join(spark, small_series):
     """measure_time now rides the summary stage as a carried column:
     the plan must contain no Join (the old shape aggregated + joined

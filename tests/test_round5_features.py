@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
@@ -91,68 +92,6 @@ def test_ngram_topk_short_docs_excluded(spark):
         [(0, "solo"), (1, ""), (2, "a b")], "doc_id int, text string")
     rows = TP.ngram_topk(df, n=2, k=10).collect()
     assert [(r["ngram"], r["total_count"]) for r in rows] == [("a b", 1)]
-
-
-# ---------------------------------------------------------------------------
-# Y4M video codec + frame sampling (round-5 multimodal upgrade: the
-# video modality gets a REAL uncompressed container, like WAV/BMP did)
-# ---------------------------------------------------------------------------
-
-import numpy as np
-
-
-def test_y4m_roundtrip_c420():
-    from ts_pymfe_spark.operators import multimodal as MM
-
-    rng = np.random.default_rng(7)
-    frames = rng.integers(0, 256, (4, 6, 8, 3), dtype=np.uint8)
-    payload = MM.encode_y4m(frames, fps=(30, 1))
-    meta, got = MM.decode_y4m(payload)
-    assert meta == {"width": 8, "height": 6, "fps_num": 30, "fps_den": 1,
-                    "colorspace": "C420jpeg", "n_frames": 4}
-    for f_in, (y, u, v) in zip(frames, got):
-        # luma is carried exactly; chroma is 2x2 box-subsampled
-        assert np.array_equal(y, f_in[:, :, 0])
-        assert u.shape == v.shape == (3, 4)
-        expect_u = (
-            f_in[0::2, 0::2, 1].astype(int) + f_in[0::2, 1::2, 1]
-            + f_in[1::2, 0::2, 1] + f_in[1::2, 1::2, 1] + 2
-        ) // 4
-        assert np.array_equal(u, expect_u.astype(np.uint8))
-
-
-def test_y4m_rejects_garbage_and_odd_dims():
-    from ts_pymfe_spark.operators import multimodal as MM
-
-    with pytest.raises(ValueError):
-        MM.decode_y4m(b"\x00\x01\x02 not a stream")
-    with pytest.raises(ValueError):
-        MM.encode_y4m(np.zeros((1, 5, 4, 3), dtype=np.uint8))
-
-
-def test_sample_video_frames_real_decode(spark):
-    from ts_pymfe_spark.operators import multimodal as MM
-
-    media = MM.synth_media(spark, 18)
-    vids = {r["media_id"]: r for r in media.filter("kind = 'video'").collect()}
-    out = MM.sample_video_frames(media, every_n=2).toPandas()
-    # only the Y4M rows produce frames; mp4 blobs are contained (0 rows)
-    y4m_ids = {m for m, r in vids.items() if r["mime"] == "video/x-yuv4mpeg"}
-    assert set(out["media_id"]) == y4m_ids
-    for mid in y4m_ids:
-        meta, frames = MM.decode_y4m(bytes(vids[mid]["payload"]))
-        sub = out[out.media_id == mid].sort_values("frame_idx")
-        assert list(sub["frame_idx"]) == list(range(0, meta["n_frames"], 2))
-        # per-frame luma mean matches a direct numpy decode
-        for idx, y_mean in zip(sub["frame_idx"], sub["y_mean"]):
-            assert y_mean == pytest.approx(
-                frames[idx][0].astype(float).mean() / 255.0, rel=1e-6)
-        # first sampled frame has motion 0; 40ms per frame at 25 fps
-        assert sub.iloc[0]["motion"] == 0.0
-        assert sub.iloc[0]["frame_ts_ms"] == 0.0
-        if len(sub) > 1:
-            assert sub.iloc[1]["frame_ts_ms"] == pytest.approx(80.0)
-            assert sub.iloc[1]["motion"] > 0.0
 
 
 # ---------------------------------------------------------------------------

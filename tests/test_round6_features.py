@@ -1,6 +1,6 @@
 """Round-6 features: hot-key chunked-window plans for the ordered
-counter operators (VERDICT r5 item #2), streaming state eviction, and
-the ADVICE r5 contract fixes."""
+counter operators (VERDICT r5 item #2), the session operators, and the
+ADVICE r5 contract fixes."""
 
 from __future__ import annotations
 
@@ -328,10 +328,41 @@ def test_paa_sax_segments_partition_invariant(spark):
     assert a == b
 
 
+def test_sessionize_batch_hand_case(spark):
+    """A gap of exactly gap_seconds stays in the session, one second
+    more splits it; a ts tie is ordered by turn_idx; sessions follow ts
+    order, not turn_idx order; each conversation counts from 0 — the
+    contract the ``sessionize`` query's DuckDB oracle states."""
+    import datetime as dtm
+
+    from ts_pymfe_spark.operators.sequence import sessionize_batch
+
+    t0 = dtm.datetime(2025, 1, 1)
+
+    def at(sec):
+        return t0 + dtm.timedelta(seconds=sec)
+
+    rows = [("a", 0, at(0)),
+            ("a", 1, at(600)),      # gap == 600: same session
+            ("a", 2, at(1201)),     # gap 601: new session
+            ("a", 3, at(1201)),     # ts tie, after turn 2
+            ("a", 4, at(1801)),     # gap == 600 again
+            ("b", 0, at(700)),      # 700 s after b's first turn in ts
+            ("b", 1, at(0)),
+            ("b", 2, at(5000))]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp")
+    got = sorted((r["conv_id"], r["turn_idx"], r["session_id"])
+                 for r in sessionize_batch(
+                     df, gap_seconds=600,
+                     order_cols=("ts", "turn_idx")).collect())
+    assert got == [("a", 0, 0), ("a", 1, 0), ("a", 2, 1), ("a", 3, 1),
+                   ("a", 4, 1), ("b", 0, 1), ("b", 1, 0), ("b", 2, 2)]
+
+
 def test_session_stats_hand_case(spark):
     import datetime as dtm
 
-    from ts_pymfe_spark.streaming.stateful import session_stats
+    from ts_pymfe_spark.operators.sequence import session_stats
 
     t0 = dtm.datetime(2025, 1, 1)
     rows = [("c", 0, t0), ("c", 1, t0 + dtm.timedelta(seconds=100)),

@@ -21,13 +21,14 @@ Layout
 - ``operators.derive``   transcripts -> per-conversation derived series
 - ``operators.rollup``   tier cascade via moment merge (no re-scan)
 - ``operators.local_stats`` rolling/tiled window features (SQL family)
-- ``operators.sequence`` lag/diff/run/crossing features (SQL family)
+- ``operators.sequence`` lag/diff/run/crossing/session features (SQL family)
 - ``operators.gapfill``  calendar grid + as-of carry-forward + lerp
 - ``operators.arrow_kernels`` per-series numpy kernels (Arrow UDFs)
 - ``operators.grouped``  partition-level grouped map (one mapInPandas)
 - ``operators.compression`` Gorilla XOR + delta-of-delta codecs
 - ``plans``              checkpoint manifest / resume / lineage metrics
-- ``streaming``          Structured Streaming tier maintenance
+- ``streaming``          Structured Streaming tier maintenance only (the
+                         1m partial store, merged and composed on read)
 """
 
 __version__ = "0.1.0"

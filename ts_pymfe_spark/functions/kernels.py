@@ -3,8 +3,9 @@
 These re-derive the reference's library-backed computations
 (statsmodels/scipy/nolds are NOT vendored — each kernel is written
 from the published formula, with the reference call-site cited) so the
-exact same code runs inside Spark ``applyInPandas`` workers AND in the
-fixture generator — bit-match by construction (SURVEY §5.2).
+exact same code runs inside the Spark ``mapInPandas`` workers of the
+grouped-map runner (``operators/grouped.py``) AND in the fixture
+generator — bit-match by construction (SURVEY §5.2).
 
 No Spark imports here: this module is importable by tests, fixture
 generation, and the Arrow wrappers alike.
@@ -700,9 +701,12 @@ def approx_entropy(ts: np.ndarray, m: int = 2, factor: float = 0.2,
     cap, mirroring the reference tests' 512-point truncation).  Reads
     the row counts of the pass shared with sample_entropy
     (``_entropy_counts``; ``memo=False`` bypasses its memo).  NaN,
-    without the pass, when the cut series holds a non-finite value:
-    r is then NaN, no pair matches and both log-means are −inf."""
-    if not np.isfinite(np.asarray(ts, dtype=float)[-max_n:]).all():
+    without the pass, when the cut series holds a non-finite value
+    (r is then NaN, no pair matches and both log-means are −inf) or has
+    at most ``m`` points (no (m+1)-window, so φ_{m+1} is a mean over
+    nothing)."""
+    x = np.asarray(ts, dtype=float)[-max_n:]
+    if x.size <= m or not np.isfinite(x).all():
         return np.nan
     counts = _entropy_counts(ts, m, factor, max_n, memo)
     phis = {}

@@ -26,8 +26,8 @@ single task — a ~10^10-row conversation would pin one core for hours.
 ``(key, floor(epoch / chunk_s))`` so a hot key splits across
 time-range tasks, and the cross-chunk state (previous chunk's last
 value / next chunk's first timestamp) is merged back from a
-per-(key, chunk) boundary table — O(#chunks) rows per key, the same
-carried-state shape as streaming/stateful.py.  ``burst_stats`` instead
+per-(key, chunk) boundary table — O(#chunks) rows per key.
+``burst_stats`` instead
 replicates each chunk's trailing ``window_s`` seconds into the next
 chunk (ghost rows count in frames, never in output).  All three are
 value-equal to the single-window plan (tests/test_round6_features.py).

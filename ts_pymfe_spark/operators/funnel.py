@@ -22,9 +22,8 @@ tiebreak)`` sort places it AFTER that completing event — the running
 frame is causal, so ``t_{k-1}`` is not yet visible to rows sorted
 before it.  With a monotone tiebreak (an ingestion-ordered event id,
 as all driver queries use) this is exactly "steps must complete in
-arrival order", and the streaming form (streaming/stateful.py, which
-replays events in the same sort order) agrees row-for-row.  Events at
-strictly later timestamps are always eligible.
+arrival order".  Events at strictly later timestamps are always
+eligible.
 
 Greedy-earliest is optimal here: taking the earliest eligible event at
 every step can only leave more room (never less) for later steps

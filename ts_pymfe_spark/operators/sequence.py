@@ -1,5 +1,5 @@
 """Sequence feature family — lags, diffs, runs, crossings, expanding
-windows, higher-order self-alignment statistics.
+windows, higher-order self-alignment statistics, gap-split sessions.
 
 Reference files: ``/root/reference/tspymfe/general.py`` (diffs,
 crossings, turning points, step changes, run lengths),
@@ -299,3 +299,49 @@ def peak_trough_frac(df: DataFrame, period: int, which: str = "peak",
         .filter(F.col("_rk") == 1)
         .select("conv_id", ((F.col("_arg") + 1) / p).alias("frac"))
     )
+
+
+def sessionize_batch(turns: DataFrame, gap_seconds: int = 1800,
+                     order_cols: tuple[str, ...] = ("ts",)) -> DataFrame:
+    """Conversation sessionizer: a new session starts when the gap to
+    the previous turn exceeds ``gap_seconds`` — one window pass.
+
+    ``order_cols``: pass ("ts", "turn_idx") when ts values can tie —
+    a cumulative window over a non-total order is engine-dependent."""
+    w = Window.partitionBy("conv_id").orderBy(*order_cols)
+    # the ts->timestamp hop keeps TIMESTAMP_NTZ sources castable
+    # (NTZ -> DOUBLE directly is a DATATYPE_MISMATCH; session tz is UTC)
+    sec = F.col("ts").cast("timestamp").cast("double")
+    gap = sec - F.lag(sec).over(w)
+    flagged = turns.select(
+        "conv_id", "turn_idx", "ts",
+        F.when(gap > gap_seconds, 1).otherwise(0).alias("_flag"),
+    )
+    return flagged.select(
+        "conv_id", "turn_idx", "ts",
+        F.sum("_flag").over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
+        ).cast("long").alias("session_id"),
+    )
+
+
+def session_stats(turns: DataFrame, gap_seconds: int = 1800,
+                  order_cols: tuple[str, ...] = ("ts",)) -> DataFrame:
+    """Per-session aggregates over ``sessionize_batch``'s assignment
+    (round 6): one row per (conv_id, session_id) with turn count,
+    start, and duration.
+
+    -> (conv_id, session_id, n_turns, session_start, duration_s)
+
+    Scale shape: the sessionizer's one exchange by conv_id is reused
+    by the (conv_id, session_id) aggregation (subset rule) — the whole
+    op is a single shuffle of slim turn rows.
+    """
+    sess = sessionize_batch(turns, gap_seconds, order_cols)
+    e = F.col("ts").cast("timestamp").cast("double")
+    return (sess.select("conv_id", "session_id", "ts", e.alias("_e"))
+            .groupBy("conv_id", "session_id")
+            .agg(F.count("*").cast("long").alias("n_turns"),
+                 F.min("ts").alias("session_start"),
+                 (F.round(F.max("_e") - F.min("_e"), 6)
+                  + F.lit(0.0)).alias("duration_s")))

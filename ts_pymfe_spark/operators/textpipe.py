@@ -1,7 +1,7 @@
 """Training-data pipeline operators over document corpora.
 
 Engine additions beyond the reference (task brief: dedup, similarity
-search, text analysis, multimodal plumbing are first-class at 100 TB).
+search and text analysis are first-class at 100 TB).
 Everything here is declarative DataFrame SQL — hash joins, explodes and
 aggregations Catalyst can reorder/prune; no Python in the hot path.
 

@@ -40,15 +40,6 @@ from ts_pymfe_spark.operators.rollup import (KEY, TierMap, compose_tiers,
 from ts_pymfe_spark.synth import TURNS_SCHEMA
 
 
-def stream_turns(spark: SparkSession, input_dir: str,
-                 max_files_per_trigger: int = 8) -> DataFrame:
-    return (
-        spark.readStream.schema(TURNS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-
 def run_partials_to_store(spark: SparkSession, input_dir: str,
                           store_dir: str, checkpoint_dir: str,
                           partial: Callable[[DataFrame], DataFrame],
