@@ -79,8 +79,12 @@ def main() -> None:
     # 1-minute buckets of per-turn data do not have.  The cascade
     # above 1m is storage-backed (plans/ingest.py): 1h/1d read the
     # committed finer tier, never raw, and nothing is persisted.
+    # The side outputs (--compress, --features) read the unpartitioned
+    # series: their grouped-map runner repartitions on its own keys, and
+    # that is their only raw-point exchange.
+    raw_series = derive_series(turns)
     if args.salted:
-        series = derive_series(turns)
+        series = raw_series
     else:
         par = spark.sparkContext.defaultParallelism * 4
         series = derive_series(
@@ -113,7 +117,7 @@ def main() -> None:
     if args.compress:
         from ts_pymfe_spark.operators.compression import compress_segments
 
-        segs = compress_segments(series.select("conv_id", "series", "ts", "value"), "1d")
+        segs = compress_segments(raw_series, "1d")
         segs.write.mode("overwrite").parquet(f"{args.output}/segments_1d")
         rows, nbytes = _footer_stats(f"{args.output}/segments_1d")
         all_metrics["segments_1d"] = [{"rows": rows, "bytes": nbytes}]
@@ -121,7 +125,7 @@ def main() -> None:
     if args.features:
         from ts_pymfe_spark.api import TSMFESpark
 
-        feats = TSMFESpark().extract(series)
+        feats = TSMFESpark().extract(raw_series)
         feats.write.mode("overwrite").parquet(f"{args.output}/features")
         rows, nbytes = _footer_stats(f"{args.output}/features")
         all_metrics["features"] = [{"rows": rows, "bytes": nbytes}]

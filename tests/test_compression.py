@@ -4,6 +4,8 @@ raw -> compressed -> decompressed equality under stable ordering)."""
 
 from __future__ import annotations
 
+import datetime
+
 import numpy as np
 import pandas as pd
 
@@ -52,3 +54,48 @@ def test_spark_compress_roundtrip(spark, turns):
     total_points = sizes["n"].sum()
     total_bytes = sizes["seg"].map(len).sum()
     assert total_bytes < 16 * total_points
+
+
+def _points(spark, rows):
+    return spark.createDataFrame(
+        rows, "conv_id string, series string, ts timestamp, value double")
+
+
+def test_decompress_keeps_nan_bits(spark):
+    """NaN and −0.0 keep their bits through compress → decompress →
+    collect(): decoding builds Arrow columns, not pandas ones, and
+    pandas→Arrow would turn NaN into NULL.  Gorilla has no null bitmap,
+    so a NULL input value comes back as NaN."""
+    t0 = datetime.datetime(2024, 1, 1, 12)
+    vals = [1.0, float("nan"), -0.0, 2.5, float("nan"), 3.0, None]
+    rows = [("c", "s", t0 + datetime.timedelta(seconds=i), v)
+            for i, v in enumerate(vals)]
+    back = decompress_segments(compress_segments(_points(spark, rows), "1d"))
+    got = back.orderBy("ts").collect()
+    assert [r.ts for r in got] == [r[2] for r in rows]
+    assert all(r.value is not None for r in got)
+    want = np.array([np.nan if v is None else v for v in vals])
+    np.testing.assert_array_equal(
+        np.array([r.value for r in got]).view(np.uint64),
+        want.view(np.uint64))
+
+
+def test_compress_duplicate_ts_partition_invariant(spark):
+    """Points sharing a timestamp are encoded in value order, so each
+    segment's bytes are the same under any partitioning or input row
+    order: 6 conversations × 40 points, 3 points per timestamp."""
+    rng = np.random.default_rng(1)
+    t0 = datetime.datetime(2024, 1, 1, 12)
+    rows = [(f"c{c}", "s", t0 + datetime.timedelta(seconds=i // 3),
+             float(rng.integers(0, 1000)))
+            for c in range(6) for i in range(40)]
+    pts = _points(spark, rows)
+
+    def segments(df):
+        return {(r.conv_id, r.series, r.bucket_start): bytes(r.seg)
+                for r in compress_segments(df, "1d").collect()}
+
+    one = segments(pts.repartition(1))
+    assert len(one) == 6
+    assert segments(pts.repartition(7, "value")) == one
+    assert segments(pts.orderBy(F.desc("value")).coalesce(1)) == one

@@ -1136,6 +1136,20 @@ def test_approx_entropy_short_series_is_nan_without_warning(n, m):
         assert len(K._MEMO) == 1
 
 
+@pytest.mark.parametrize("n, m", [(1, 2), (2, 2), (1, 3), (3, 3)])
+def test_sample_entropy_short_series_is_nan_without_pass(n, m):
+    """A cut series of at most m points has no (m+1)-window: SampEn is
+    NaN, returned before the match-count pass, so no memo entry is
+    added and no warning is raised."""
+    x = np.random.default_rng(n + m).standard_normal(n)
+    K._MEMO.clear()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = K.sample_entropy(x, m=m)
+    assert np.isnan(got)
+    assert not K._MEMO
+
+
 @pytest.mark.parametrize("n", [3, 5, 40, 300, 512, 700])
 @pytest.mark.parametrize("m", [1, 2, 3])
 def test_entropy_counts_equal_distance_matrix_counts(n, m):

@@ -541,3 +541,22 @@ def test_extract_with_confidence_is_exactly_one_shuffle(spark, turns):
     assert "FlatMapGroupsInPandas" not in p
     assert "percentile" not in p.lower()
     assert "ObjectHashAggregate" not in p
+
+
+def test_compress_is_one_exchange_one_map(spark, turns):
+    """Gorilla compression runs on the grouped-map runner: over an
+    unpartitioned input, one hash exchange on the segment key and one
+    mapInPandas, no per-group FlatMapGroupsInPandas.  Decompression is
+    one narrow mapInArrow: it adds no exchange."""
+    from ts_pymfe_spark.operators.compression import (compress_segments,
+                                                      decompress_segments)
+
+    series = derive_series(turns)
+    segs = compress_segments(series, "1d")
+    p = plan(segs)
+    assert p.count("Exchange hashpartitioning") == 1
+    assert p.count("MapInPandas") == plan(series).count("MapInPandas") + 1
+    assert "FlatMapGroupsInPandas" not in p
+    d = plan(decompress_segments(segs))
+    assert d.count("Exchange") == p.count("Exchange")
+    assert "MapInArrow" in d

@@ -721,7 +721,9 @@ def sample_entropy(ts: np.ndarray, m: int = 2, factor: float = 0.2,
     """SampEn — ``info_theory.py:840-914`` (nolds sampen semantics:
     r = factor·std, Chebyshev, self-matches excluded).  Reads the pair
     counts of the memoized pass shared with approx_entropy
-    (``_entropy_counts``)."""
+    (``_entropy_counts``); NaN without the pass on ≤ ``m`` points."""
+    if min(np.size(ts), max_n) <= m:
+        return np.nan
     counts = _entropy_counts(ts, m, factor, max_n)
     a, b = counts[m + 1][1], counts[m][1]
     if b == 0 or a == 0:

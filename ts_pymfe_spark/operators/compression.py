@@ -1,32 +1,31 @@
 """Columnar segment compression for tier storage: Gorilla XOR values +
-delta-of-delta timestamps inside vectorized Arrow UDFs (north rule; no
-per-row Python — each UDF call processes a whole Arrow batch of
-segments).
+delta-of-delta timestamps (``functions/gorilla.py``), encoded on the
+grouped-map runner and decoded per Arrow batch (north rule).
 
-Storage shape: one BinaryType segment per (conv_id, series,
-segment_bucket) holding all (ts, value) points of that bucket, ordered
-by ts.  At 100 TB this turns the raw-tier point table into a segment
-table ~10-100x smaller (real rollup series are slowly-varying, unlike
-the random-data worst case), and the segment key is the same
-(conv, bucket) key the tier cascade shuffles on — compression rides an
-existing exchange, adding none.
+One BinaryType segment per (conv_id, series, segment_bucket) holds all
+(ts, value) points of that bucket, so the raw-tier point table shrinks
+~10-100x (real rollup series vary slowly, unlike random data).
 
-Round-trip is bit-exact (IEEE bits preserved incl. NaN/-0.0), which is
-what lets the per-turn text-equality / value-equality invariant hold
-through storage (BASELINE.json input_hint).
+Round-trip is bit-exact through Spark (IEEE bits incl. NaN/-0.0), so
+the per-turn value-equality invariant holds through storage
+(BASELINE.json input_hint).  Gorilla has no null bitmap: a NULL value
+is encoded as NaN and decodes as NaN.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ts_pymfe_spark.functions.gorilla import decode_segment, encode_segment
+from ts_pymfe_spark.operators.grouped import map_sorted_groups
 
 SEGMENT_SCHEMA = (
     "conv_id string, series string, bucket_start timestamp, "
@@ -39,55 +38,52 @@ def compress_segments(series_df: DataFrame, tier: str = "1h") -> DataFrame:
     """(conv_id, series, ts, value) -> one Gorilla segment per
     (conv_id, series, date_trunc(tier) bucket).
 
-    groupBy+applyInPandas: the shuffle key equals the tier key, so when
-    chained after ``rollup_raw`` Catalyst reuses the exchange."""
+    ``grouped.map_sorted_groups``: one hash exchange on the segment key,
+    points in the total order (ts, value), so segment bytes do not depend
+    on input files or partitioning (values Spark sorts as equal, 0.0 and
+    −0.0 or two NaNs, keep input order).  ts is encoded as µs of the
+    session time zone's wall clock, as pyspark hands it to pandas."""
     from ts_pymfe_spark.operators.rollup import TIERS
 
-    bucketed = series_df.withColumn(
-        "bucket_start", F.date_trunc(TIERS[tier], "ts")
-    )
+    keys = ["conv_id", "series", "bucket_start"]
+    points = series_df.select(
+        "conv_id", "series",
+        F.date_trunc(TIERS[tier], "ts").alias("bucket_start"), "ts", "value")
 
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ts")
-        ts_us = pdf["ts"].astype("datetime64[us]").astype(np.int64).to_numpy()
+    def encode(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
+        ts_us = pdf["ts"].to_numpy("datetime64[us]").astype(np.int64)
         vals = pdf["value"].to_numpy(dtype=np.float64)
-        seg = encode_segment(ts_us, vals)
-        return pd.DataFrame(
-            {
-                "conv_id": [pdf["conv_id"].iloc[0]],
-                "series": [pdf["series"].iloc[0]],
-                "bucket_start": [pdf["bucket_start"].iloc[0]],
-                "n": [len(pdf)],
-                "seg": [seg],
-            }
-        )
+        out = pdf[keys].iloc[starts[:-1]].reset_index(drop=True)
+        out["n"] = np.diff(starts).astype(np.int32)
+        out["seg"] = [encode_segment(ts_us[a:b], vals[a:b])
+                      for a, b in zip(starts[:-1], starts[1:])]
+        return out
 
-    return bucketed.groupBy("conv_id", "series", "bucket_start").applyInPandas(
-        encode, SEGMENT_SCHEMA
-    )
+    return map_sorted_groups(points, keys, ["ts", "value"], encode,
+                             SEGMENT_SCHEMA)
 
 
 def decompress_segments(segments: DataFrame) -> DataFrame:
     """Segments -> points, bit-exact inverse of compress_segments.
-    mapInPandas (narrow — no shuffle): each batch of segments explodes
-    into its points."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for _, row in pdf.iterrows():
-                ts_us, vals = decode_segment(bytes(row["seg"]))
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "conv_id": row["conv_id"],
-                            "series": row["series"],
-                            "ts": ts_us.astype("datetime64[us]"),
-                            "value": vals,
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+    One narrow ``mapInArrow``: per batch, the decoded values become one
+    float64 Arrow column and the keys are repeated by one ``take``.  No
+    pandas step, so NaN stays NaN (pandas→Arrow would make it NULL).
+    ts is read back in the session time zone."""
+    arrow = to_arrow_schema(StructType.fromDDL(POINTS_SCHEMA))
+    tz = segments.sparkSession.conf.get("spark.sql.session.timeZone")
 
-    return segments.mapInPandas(decode, POINTS_SCHEMA)
+    def decode(batches):
+        for batch in batches:
+            segs = [decode_segment(s) for s in batch.column("seg").to_pylist()]
+            wall, vals = (np.concatenate(c) for c in zip(*segs))
+            keys = batch.select(["conv_id", "series"]).take(
+                np.repeat(np.arange(len(segs)), [len(t) for t, _ in segs]))
+            ts = pc.assume_timezone(pa.array(wall, pa.timestamp("us")), tz,
+                                    ambiguous="latest")
+            yield pa.RecordBatch.from_arrays(
+                [*keys.columns, ts.cast(arrow.field("ts").type),
+                 pa.array(vals, arrow.field("value").type)], names=arrow.names)
+
+    return segments.select("conv_id", "series", "seg").mapInArrow(
+        decode, POINTS_SCHEMA)

@@ -1,5 +1,7 @@
 """Partition-level grouped map: one ``mapInPandas`` over key-sorted
-partitions instead of ``groupBy().applyInPandas``.
+partitions instead of ``groupBy().applyInPandas``.  Every grouped Python
+UDF of the package runs on it: ``series_features`` and ``bootstrap_ci``
+(arrow_kernels), ``lttb_downsample`` and ``compress_segments``.
 
 ``applyInPandas`` (``FlatMapGroupsInPandas``) builds one pandas frame
 and makes one Python call per group.  Here each partition is hashed on
