@@ -99,3 +99,29 @@ def test_compress_duplicate_ts_partition_invariant(spark):
     assert len(one) == 6
     assert segments(pts.repartition(7, "value")) == one
     assert segments(pts.orderBy(F.desc("value")).coalesce(1)) == one
+
+
+def test_segments_portable_across_session_time_zones(spark, tmp_path):
+    """Segments store UTC µs taken in the JVM, so a store written under
+    one session time zone decodes to the same instants under another:
+    points compressed under America/New_York (across its 2024-03-10
+    DST change) and decompressed under UTC keep their epoch µs."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    micros = [1_710_000_000_000_000 + i * 3_600_000_000 + 17 for i in range(48)]
+    pts = spark.createDataFrame(
+        [("c", "s", m, float(i)) for i, m in enumerate(micros)],
+        "conv_id string, series string, us long, value double",
+    ).select("conv_id", "series", F.timestamp_micros("us").alias("ts"),
+             "value")
+    path = str(tmp_path / "segs")
+    try:
+        spark.conf.set(key, "America/New_York")
+        compress_segments(pts, "1d").write.parquet(path)
+        spark.conf.set(key, "UTC")
+        back = decompress_segments(spark.read.parquet(path))
+        got = back.select(F.unix_micros("ts").alias("us"), "value").collect()
+    finally:
+        spark.conf.set(key, old)
+    assert sorted((r.us, r.value) for r in got) == [
+        (m, float(i)) for i, m in enumerate(micros)]

@@ -300,70 +300,104 @@ def test_measure_time_constant_per_series_feature(spark, small_arrow_batches):
                                   m["value_b"].to_numpy())
 
 
-def _sine_fold_loop_reference(y):
-    """model_sine landmark scores as one np.linalg.lstsq per
-    Gauss-Newton step per fold, one series at a time: the per-fold
-    loop the stacked fit replaced, kept verbatim as the reference."""
+def _sine_vp_reference(y):
+    """model_sine landmark scores with the variable-projection fit
+    transcribed for one series and one fold at a time: scalar state,
+    1-D planes, one einsum per sum, in the stacked fit's order of
+    operations.  The reference the stacked fit must equal bit for
+    bit."""
     import math
 
-    def fit(Xtr, ytr, Xte):
-        n = ytr.size
-        if n < 8:
-            raise ValueError("too short for sine fit")
-        freqs = np.fft.fftfreq(n, Xtr[1] - Xtr[0])
-        fyy = np.abs(np.fft.rfft(ytr))[1:]
-        w0 = 2 * np.pi * abs(freqs[1 + int(np.argmax(fyy))])
-        theta = np.array([ytr.std() * math.sqrt(2), max(w0, 1e-6), 0.0,
-                          ytr.mean()])
-        for _ in range(50):
-            A, w, p, c = theta
-            s = np.sin(w * Xtr + p)
-            cc = np.cos(w * Xtr + p)
-            r = ytr - (A * s + c)
-            J = np.column_stack([s, A * Xtr * cc, A * cc, np.ones(n)])
-            try:
-                step, *_ = np.linalg.lstsq(J, r, rcond=None)
-            except np.linalg.LinAlgError:
-                break
-            theta = theta + step
-            if np.max(np.abs(step)) < 1e-10:
-                break
-        A, w, p, c = theta
-        if not np.all(np.isfinite(theta)):
-            raise ValueError("sine fit diverged")
-        return A * np.sin(w * Xte + p) + c
+    def project(t, w, y, sy):
+        m = t.size
+        e = np.einsum
+        s, co = np.sin(w * t), np.cos(w * t)
+        s1, c1 = e("j->", s), e("j->", co)
+        ss = e("j,j->", s, s) - s1 * s1 / m
+        sc = e("j,j->", s, co) - s1 * c1 / m
+        cc = e("j,j->", co, co) - c1 * c1 / m
+        qs = e("j,j->", s, y) - s1 * sy / m
+        qc = e("j,j->", co, y) - c1 * sy / m
+        det = ss * cc - sc * sc
+        ok = (ss > LM._SINE_MIN_PIVOT * m
+              and det > LM._SINE_MIN_PIVOT * m * ss)
+        a = (cc * qs - sc * qc) / det
+        b = (ss * qc - sc * qs) / det
+        c = (sy - a * s1 - b * c1) / m
+        r = y - c - a * s - b * co
+        u = (a * co - b * s) * t
+        u1 = e("j->", u)
+        us = e("j,j->", s, u) - s1 * u1 / m
+        uc = e("j,j->", co, u) - c1 * u1 / m
+        hn = (e("j,j->", u, u) - u1 * u1 / m
+              - (cc * us * us - 2.0 * sc * us * uc + ss * uc * uc) / det)
+        return (a, b, c), e("j,j->", r, r), -2.0 * e("j,j->", r, u), hn, ok
+
+    def fit(t, y):
+        """(a, b, c, w), or None for a failed fit."""
+        if not np.all(np.isfinite(y)):
+            return None
+        dt, t_end = t[1] - t[0], float(t[-1])
+        freqs = np.fft.fftfreq(y.size, dt)
+        k = 1 + int(np.argmax(np.abs(np.fft.rfft(y))[1:]))
+        w_hi = math.pi / dt - 1e-3 / t_end
+        d_max = math.pi / t_end
+        w = min(2 * np.pi * abs(freqs[k]), w_hi)
+        sy = np.einsum("j->", y)
+        coef, f, g, hn, ok = project(t, w, y, sy)
+        if not ok:
+            return None
+        wp = gp = d = math.nan
+        halving = False
+        for _ in range(LM._SINE_MAX_EVALS - 1):
+            if not halving:
+                h = (g - gp) / (w - wp)
+                step = -g / h if h > 0 else -g / (2.0 * hn)
+                if g == 0:
+                    step = 0.0
+                d = min(max(step, -d_max), d_max)
+            wt = min(max(w + d, 0.0), w_hi)
+            d = wt - w
+            if abs(d) <= LM._SINE_XTOL * w:
+                return (*coef, w)
+            if not math.isfinite(d):
+                return None
+            coef2, f2, g2, hn2, ok = project(t, wt, y, sy)
+            if not ok:
+                return None
+            halving = not f2 <= f
+            if halving:
+                d = d / 2
+            else:
+                wp, gp = w, g
+                w, coef, f, g, hn = wt, coef2, f2, g2, hn2
+        return None
 
     y = np.asarray(y, dtype=float)
     n = y.size
     X = np.linspace(0.0, 1.0, n)
     out = np.full(5, np.nan)
-    for fold, (tr_end, te_s, te_e) in enumerate(LM.ts_splits(n, 5)):
-        ytr, yte = y[:tr_end], y[te_s:te_e]
-        lo, hi = ytr.min(), ytr.max()
-        span = hi - lo
-        if span == 0:
-            span = 1.0
-        try:
-            pred = fit(X[:tr_end], (ytr - lo) / span, X[te_s:te_e])
-            out[fold] = LM.rmse(np.asarray(pred, float).ravel(),
-                                (yte - lo) / span)
-        except (ValueError, ZeroDivisionError, np.linalg.LinAlgError):
-            out[fold] = np.nan
+    with np.errstate(all="ignore"):
+        for fold, (tr_end, te_s, te_e) in enumerate(LM.ts_splits(n, 5)):
+            ytr, yte = y[:tr_end], y[te_s:te_e]
+            lo, hi = ytr.min(), ytr.max()
+            span = hi - lo
+            if span == 0:
+                span = 1.0
+            res = fit(X[:tr_end], (ytr - lo) / span) if tr_end >= 8 else None
+            if res is not None and np.all(np.isfinite(res)):
+                a, b, c, w = res
+                arg = w * X[te_s:te_e]
+                pred = a * np.sin(arg) + b * np.cos(arg) + c
+                out[fold] = LM.rmse(pred, (yte - lo) / span)
     return out
 
 
-@pytest.mark.parametrize("n", [5, 9, 40, 47, 48, 456, 512])
-def test_stacked_sine_equals_per_series_lstsq_loop(n):
-    """The stacked Gauss-Newton fit (one private gelsd gufunc call per
-    step for the whole stack) equals the public np.linalg.lstsq fold
-    loop bit for bit: per series (S = 1), as one stack, permuted and
-    split into uneven stacks.  A numpy whose gufunc no longer matches
-    lstsq fails here."""
-    rng = np.random.default_rng(n)
+def _sine_stack(n, rng):
     t = np.arange(n)
     nan_row = rng.standard_normal(n)
     nan_row[n // 2] = np.nan
-    X = np.stack([
+    return np.stack([
         rng.standard_normal(n),
         np.cumsum(rng.standard_normal(n)),
         3 * np.sin(2 * np.pi * t / 12) + rng.standard_normal(n),
@@ -372,23 +406,76 @@ def test_stacked_sine_equals_per_series_lstsq_loop(n):
         np.full(n, 7.0),
         nan_row,
         1e6 + rng.standard_normal(n),
+        (t % 2) + 0.1 * rng.standard_normal(n),
+        t * 0.5,
     ])
-    ref = np.stack([_sine_fold_loop_reference(x) for x in X])
+
+
+@pytest.mark.parametrize("n", [5, 9, 40, 47, 48, 456, 512])
+def test_stacked_sine_equals_per_series_lstsq_loop(n):
+    """The stacked variable-projection fit equals its one-series
+    reference loop (``_sine_vp_reference``) bit for bit: per series
+    (S = 1), as one stack, permuted and split into uneven stacks.  The
+    stack holds noise, a random walk, a noisy sine, lognormal counts,
+    a 0/1 flag, a constant, a NaN-holding series, a large offset, an
+    alternating series (FFT start at the Nyquist bin) and a ramp
+    (singular: w runs to 0)."""
+    rng = np.random.default_rng(n)
+    X = _sine_stack(n, rng)
+    ref = np.stack([_sine_vp_reference(x) for x in X])
     same = lambda a, b: np.array_equal(a, b, equal_nan=True)  # noqa: E731
     assert same(np.stack([LM.landmark_scores(x, "model_sine") for x in X]), ref)
     assert same(LM.landmark_scores(X, "model_sine"), ref)
     perm = rng.permutation(len(X))
     assert same(LM.landmark_scores(X[perm], "model_sine"), ref[perm])
     parts = [LM.landmark_scores(X[a:b], "model_sine")
-             for a, b in ((0, 3), (3, 4), (4, 8))]
+             for a, b in ((0, 3), (3, 4), (4, 10))]
     assert same(np.concatenate(parts), ref)
 
 
+def test_sine_fit_stable_under_relative_scaling():
+    """Scaling every series by (1 + 1e-12) moves no fold score by more
+    than 1e-8 and turns no fold to or from NaN: every fit converges to
+    its optimum, so rounding does not pick the fold's value."""
+    rng = np.random.default_rng(9)
+    n = 512
+    t = np.arange(n)
+    X = np.concatenate([
+        _sine_stack(n, rng),
+        rng.lognormal(3, 1, (8, n)),
+        (rng.random((8, n)) < 0.3) * 1.0,
+        50 + 20 * np.sin(2 * np.pi * t / 24) + rng.standard_normal((8, n)),
+    ])
+    base = LM.landmark_scores(X, "model_sine")
+    scaled = LM.landmark_scores(X * (1 + 1e-12), "model_sine")
+    assert np.array_equal(np.isnan(base), np.isnan(scaled))
+    assert np.nanmax(np.abs(scaled - base)) <= 1e-8
+    assert np.isfinite(base).sum() > 0.8 * base.size
+
+
+def test_sine_singular_item_fails_alone():
+    """A ramp runs its fit to w → 0, where the sin column is collinear
+    with the constant: a singular system, so every fold is NaN.  In a
+    stack it fails alone — its neighbours equal their one-series fits
+    and stay finite."""
+    rng = np.random.default_rng(4)
+    n = 300
+    t = np.arange(n)
+    X = np.stack([3 * np.sin(2 * np.pi * t / 24) + rng.standard_normal(n),
+                  t * 0.25,
+                  rng.lognormal(3, 1, n)])
+    got = LM.landmark_scores(X, "model_sine")
+    assert np.isnan(got[1]).all()
+    for i in (0, 2):
+        assert np.array_equal(got[i], LM.landmark_scores(X[i], "model_sine"))
+        assert np.isfinite(got[i]).all()
+
+
 def test_stacked_sine_skips_nan_series_without_blas_errors(capfd):
-    """A series holding a NaN starts from a non-finite θ and is never
-    solved: OpenBLAS writes no DLASCL error (at fd level, hence capfd),
-    its rows are NaN, and the finite series beside it still equal
-    their one-series (S = 1) fits bit for bit."""
+    """A series holding a NaN is never fitted: no DLASCL error is
+    written (at fd level, hence capfd), its rows are NaN, and the
+    finite series beside it still equal their one-series (S = 1) fits
+    bit for bit."""
     n = 512
     rng = np.random.default_rng(11)
     t = np.arange(n)

@@ -45,6 +45,38 @@ def test_extract_is_exactly_one_shuffle(spark, turns):
     assert p.count("MapInPandas") == plan(series).count("MapInPandas") + 1
     assert "FlatMapGroupsInPandas" not in p
     assert "rangepartitioning" not in p  # the dropped global orderBy
+    # the kernel emits the final named, ordered rows: the runner's sort
+    # is the only Sort, and nothing runs after the MapInPandas
+    assert p.count("Sort [") == 1
+    lines = p.splitlines()
+    top = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
+    assert not any("Project" in line or "Sort" in line for line in lines[:top])
+
+
+@pytest.mark.parametrize("with_series", [True, False])
+@pytest.mark.parametrize("measure_time", [False, True])
+def test_extract_partitions_ordered_by_conv_series_name(
+        spark, turns, with_series, measure_time):
+    """Every output partition of extract holds its rows in (conv_id,
+    series, name) order — names compared as code points, Spark's UTF-8
+    byte order — with or without a series column and wall_ms.  The
+    features are listed out of name order, and '.' sorts before '_'
+    ("acf.mean" < "acf_first_nonpos")."""
+    from ts_pymfe_spark.api import TSMFESpark
+
+    series = derive_series(turns.filter("conv_id < 'conv00000080'"))
+    if not with_series:
+        series = series.filter("series = 'text_len'").drop("series")
+    eng = TSMFESpark(features=["pacf", "dw", "acf_first_nonpos", "acf",
+                               "model_linear"],
+                     summaries=("mean", "sd", "max"))
+    parts = eng.extract(series, measure_time=measure_time).rdd.glom().collect()
+    assert sum(1 for part in parts if part) > 1
+    for part in parts:
+        keys = [(r.conv_id, r.series, r.name) for r in part]
+        assert keys == sorted(keys)
+    names = {r.name for part in parts for r in part}
+    assert {"acf.mean", "acf_first_nonpos", "dw", "pacf.max"} <= names
 
 
 def test_rollup_unsalted_single_shuffle_with_partial_agg(spark, turns):

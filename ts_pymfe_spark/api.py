@@ -19,11 +19,12 @@ Execution: the whole extraction is ONE Arrow stage — the
 ``series_features`` kernels (operators/arrow_kernels.py) on one
 partition-level ``mapInPandas`` runner over key-sorted partitions,
 with the per-feature summaries fused into the same kernel call (round
-7; the kernel holds each feature's full value array already) — so a
-1000-executor cluster extracts ~10^6 conversations concurrently with
-exactly one shuffle.  The bootstrap-CI path runs on the same runner
-(``arrow_kernels.bootstrap_ci``), reducing the resamples to CI rows in
-the worker: also one shuffle.
+7; the kernel holds each feature's full value array already), which
+emits the final named rows in name order, so no projection or sort
+runs after it — so a 1000-executor cluster extracts ~10^6
+conversations concurrently with exactly one shuffle.  The bootstrap-CI
+path runs on the same runner (``arrow_kernels.bootstrap_ci``),
+reducing the resamples to CI rows in the worker: also one shuffle.
 """
 
 from __future__ import annotations
@@ -31,7 +32,6 @@ from __future__ import annotations
 from typing import Iterable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ts_pymfe_spark.functions.summaries import DEFAULT_SUMMARIES
 from ts_pymfe_spark.operators.arrow_kernels import (
@@ -86,26 +86,16 @@ class TSMFESpark:
         (``BATCHED_FEATURE_KERNELS``) stamps each of them with the
         batch's wall divided by the batch size."""
         # The kernel holds each feature's complete value array for its
-        # group, so it emits the summary rows itself; wall_ms is
-        # constant per (conv, series, feature) and stamps every
-        # summary row.
-        summ = series_features(
+        # group, so it emits the named summary rows itself, already in
+        # (conv_id, series, name) order within each partition: the
+        # reference sorts a driver-local Python list (tsmfe.py:941-947),
+        # and a global orderBy here would be a full extra range-shuffle
+        # at 10^6 conversations; consumers key by (conv_id, name)
+        # anyway.  wall_ms is constant per (conv, series, feature) and
+        # stamps every summary row.
+        return series_features(
             series_df, features=self.features, max_points=self.max_points,
-            measure_time=measure_time, summaries=self.summaries,
-        )
-        name = F.when(F.col("summary") == "", F.col("feature")).otherwise(
-            F.concat_ws(".", "feature", "summary")
-        )
-        # The reference sorts a driver-local Python list (tsmfe.py:941-947);
-        # a global orderBy here would be a full extra range-shuffle at
-        # 10^6 conversations.  sortWithinPartitions preserves the naming
-        # contract per partition with zero exchanges; consumers key by
-        # (conv_id, name) anyway.
-        cols = ["conv_id", "series", name.alias("name"), "value"]
-        if measure_time:
-            cols.append("wall_ms")
-        return summ.select(*cols).sortWithinPartitions(
-            "conv_id", "series", "name"
+            measure_time=measure_time, summaries=self.summaries, named=True,
         )
 
     def extract_with_confidence(

@@ -84,10 +84,14 @@ _PACF_MIN_PIVOT = 1e-6
 #: bound: past sd ~1e8 lstsq drifts too (up to ~1e-5 at sd 1e12), but
 #: the equilibrated Cholesky does not, so it is the better answer there.
 _PACF_MIN_SCALE = 1e-6
-#: Element budget of one stacked Gram block (8 MB of float64): lags are
-#: factored in chunks of at most this many (k+2)² elements, so memory
-#: stays O(n·K) plus a fixed block instead of O(K³).
+#: Element budget of one stacked Gram block (8 MB of float64): a chunk
+#: holds at most this many (k+2)² elements, so memory stays O(n·K) plus
+#: a fixed block instead of O(K³).
 _PACF_CHUNK_ELEMS = 1 << 20
+#: Lags are factored in about this many chunks, each cut to the columns
+#: of its own highest lag: one chunk would pad every lag's Cholesky to
+#: the highest lag's (K+2)² block.
+_PACF_CHUNKS = 4
 
 
 def pacf_ols(ts: np.ndarray, nlags: int, adjusted: bool = True) -> np.ndarray:
@@ -104,8 +108,9 @@ def pacf_ols(ts: np.ndarray, nlags: int, adjusted: bool = True) -> np.ndarray:
     masked diagonal set to 1) and equilibrated by its diagonal, so
     pacf(k) = L[y,k]/L[k,k] · d_y/d_k: the last coefficient of the
     regression read off the Cholesky factor.  Lags are stacked in
-    chunks of at most ``_PACF_CHUNK_ELEMS`` elements (one chunk for
-    every K ≤ 100), each chunk cut to the columns its highest lag uses.
+    about ``_PACF_CHUNKS`` chunks of at most ``_PACF_CHUNK_ELEMS``
+    elements (4 chunks of 13 lags at K = 52; 26 chunks of 6 to 72 lags
+    at K = 410), each chunk cut to the columns its highest lag uses.
     Agrees with the per-lag loop to max |Δ| ≤ 1e-9, not bit for bit
     (for sd above ~1e8, with the loop on the standardised series).
 
@@ -132,7 +137,8 @@ def pacf_ols(ts: np.ndarray, nlags: int, adjusted: bool = True) -> np.ndarray:
     out = np.empty(nlags)
     k_hi = nlags
     while k_hi >= 1:
-        c = max(1, min(k_hi, _PACF_CHUNK_ELEMS // (k_hi + 2) ** 2))
+        c = max(1, min(k_hi, -(-nlags // _PACF_CHUNKS),
+                       _PACF_CHUNK_ELEMS // (k_hi + 2) ** 2))
         coef = _pacf_chunk(Z, G, k_hi, c)
         if coef is None:
             return _pacf_ols_loop(x, nlags, adjusted)

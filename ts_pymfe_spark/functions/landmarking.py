@@ -20,7 +20,6 @@ import math
 from typing import Callable
 
 import numpy as np
-from numpy.linalg import _umath_linalg
 
 # ---------------------------------------------------------------------------
 # scoring (reference scoring.py:7-63)
@@ -119,107 +118,152 @@ def _m_linear_seasonal(Xtr, ytr, Xte, period):
     return beta[poste]
 
 
-def _sine_func(t, A, w, p, c):
-    return A * np.sin(w * t + p) + c
+#: smallest pivot of the sine fit's normal equations, relative to the
+#: training length m (the norm² of the constant column, and the summed
+#: norm² of the sin and cos columns): below it the fit is singular
+_SINE_MIN_PIVOT = 1e-8
+#: the sine fit has converged when its next step in w is at most this
+#: times w
+_SINE_XTOL = 1e-10
+#: evaluations of the projected objective one sine fit may make
+_SINE_MAX_EVALS = 50
 
 
-#: the LAPACK gelsd gufunc behind ``np.linalg.lstsq`` (numpy 1.x picks
-#: lstsq_m or lstsq_n by shape, numpy 2 has one ``lstsq``)
-_LSTSQ = getattr(_umath_linalg, "lstsq", None)
+def _sine_project(t: np.ndarray, w: np.ndarray, ys: np.ndarray,
+                  sy: np.ndarray):
+    """The variable projection of ``a·sin(wt) + b·cos(wt) + c`` at one
+    frequency per item: for a stack ``ys`` (k, m) with row sums ``sy``
+    and frequencies ``w`` (k,), returns (k,) arrays ``(a, b, c, f, g,
+    hn, ok)``.
 
-
-def _gelsd(J: np.ndarray, r: np.ndarray, rcond: float):
-    """``np.linalg.lstsq(J[i], r[i], rcond)`` for every i of a stack in
-    one call of the LAPACK gelsd gufunc that lstsq itself wraps (same
-    gufunc choice, signature and rcond), so each item's solution is
-    bit-identical to its own lstsq call.  Returns (x, rank): an item
-    whose solve failed, where lstsq raises LinAlgError, has rank -1
-    and NaN x; its neighbours in the stack are unaffected.  Call it
-    under ``np.errstate(invalid="ignore")``: a failed item raises the
-    invalid flag."""
-    m, k = J.shape[-2:]
-    gufunc = _LSTSQ or (
-        _umath_linalg.lstsq_m if m <= k else _umath_linalg.lstsq_n)
-    x, _, rank, _ = gufunc(J, r[..., None], rcond, signature="ddd->ddid")
-    return x[..., 0], rank
+    ``(a, b, c)`` solve the 3×3 normal equations, with c eliminated
+    first (a centred 2×2 system).  ``f = rᵀr`` is the residual sum of
+    squares, ``g = df/dw = −2·rᵀu`` its exact derivative, with
+    ``u = t·(a·cos(wt) − b·sin(wt))``, and ``hn = |P⊥u|²`` the Kaufman
+    Gauss–Newton curvature (``f'' ≈ 2·hn``).  ``ok`` is False where a
+    pivot is below ``_SINE_MIN_PIVOT``·m.  Sums are einsum reductions
+    over the contiguous last axis and everything else is elementwise,
+    so row i does not depend on the other rows."""
+    m = t.size
+    P = np.empty((w.size, 2, m))
+    s, co = P[:, 0], P[:, 1]
+    arg = np.multiply(w[:, None], t)
+    np.sin(arg, out=s)
+    np.cos(arg, out=co)
+    G = np.einsum("kim,kjm->kij", P, P)
+    q = np.einsum("kim,km->ki", P, ys)
+    s1, c1 = np.einsum("kim->ik", P)
+    ss = G[:, 0, 0] - s1 * s1 / m
+    sc = G[:, 0, 1] - s1 * c1 / m
+    cc = G[:, 1, 1] - c1 * c1 / m
+    qs = q[:, 0] - s1 * sy / m
+    qc = q[:, 1] - c1 * sy / m
+    det = ss * cc - sc * sc
+    ok = (ss > _SINE_MIN_PIVOT * m) & (det > _SINE_MIN_PIVOT * m * ss)
+    a = (cc * qs - sc * qc) / det
+    b = (ss * qc - sc * qs) / det
+    c = (sy - a * s1 - b * c1) / m
+    r = ys - c[:, None]
+    r -= a[:, None] * s
+    r -= b[:, None] * co
+    u = a[:, None] * co
+    u -= b[:, None] * s
+    u *= t
+    f = np.einsum("km,km->k", r, r)
+    g = -2.0 * np.einsum("km,km->k", r, u)
+    us, uc = np.einsum("kim,km->ik", P, u)
+    u1 = np.einsum("km->k", u)
+    us -= s1 * u1 / m
+    uc -= c1 * u1 / m
+    hn = (np.einsum("km,km->k", u, u) - u1 * u1 / m
+          - (cc * us * us - 2.0 * sc * us * uc + ss * uc * uc) / det)
+    return a, b, c, f, g, hn, ok
 
 
 def _m_sine(Xtr, ytr, Xte, period):
-    """TSSine (``_models.py:267-345``): A·sin(wt+p)+c, FFT initial guess
-    then Gauss-Newton refinement (stand-in for scipy curve_fit's LM —
-    same objective, deterministic).
+    """TSSine (``_models.py:267-345``): the least-squares fit of
+    A·sin(wt+p)+c from an FFT start, written as a·sin(wt)+b·cos(wt)+c
+    and fitted by variable projection (Golub & Pereyra 1973): for each
+    w, (a, b, c) is linear least squares (``_sine_project``), so the
+    search runs over w alone.  Same objective as the reference's
+    curve_fit, deterministic.
+
+    The search takes safeguarded 1-D steps in w: a secant Newton step
+    on the exact projected gradient when the secant curvature is
+    positive, else the Kaufman Gauss–Newton step, each clipped to half
+    a cycle of phase at the window's end (π/t_end).  A step that raises
+    f is halved.  w stays in [0, w_hi]: sampled at spacing dt,
+    frequencies mirror about the Nyquist frequency π/dt, where the sin
+    column vanishes, so w_hi is 1e-3/t_end below it; an FFT start at
+    the Nyquist bin begins at w_hi.  A fit has converged at w when its
+    next step is at most ``_SINE_XTOL``·w.  A fit that does not
+    converge within ``_SINE_MAX_EVALS`` evaluations, meets a singular
+    system or has a non-finite training value is failed — ValueError
+    for one series, a NaN prediction row in a stack — as the reference
+    scores a failed fit NaN.
 
     ``ytr`` is one series (m,) or a stack (S, m) of same-length series,
-    fitted in lockstep: every Gauss-Newton step builds the residual and
-    Jacobian of all still-active items with the per-element expressions
-    of a one-series fit and solves them with one stacked gelsd call
-    (``_gelsd``).  An item stops when its step is below 1e-10 or its
-    solve fails (at its previous θ); a non-finite final θ is a failed
-    fit — ValueError for one series, a NaN prediction row in a stack.
-    Each row of a stack therefore equals that series fitted alone, bit
-    for bit, whatever else shares the stack.
-
-    The solves stay SVD least squares on purpose.  On the extract
-    benchmark's series (seed 903) 111 of the 320 fold fits hit the
-    50-step cap without converging, so their θ is wherever step 50
-    leaves it; evaluating one product, A·Xtr·cc as (A·cc)·Xtr, moved a
-    fold RMSE by up to 0.77.  Normal equations (or any solver with
-    different rounding) would move those folds as much, so batching
-    keeps gelsd and only removes the per-call overhead."""
+    fitted in lockstep: each iteration evaluates one trial w for every
+    still-active item with one ``_sine_project`` call, and an item
+    leaves the stack when it stops.  Every per-item operation is
+    elementwise or a row reduction, so each row of a stack equals that
+    series fitted alone, bit for bit, whatever else shares the
+    stack."""
     Y = np.asarray(ytr, dtype=float)
     Ys = Y.reshape(-1, Y.shape[-1])
     S, n = Ys.shape
     if n < 8:
         raise ValueError("too short for sine fit")
-    freqs = np.fft.fftfreq(n, Xtr[1] - Xtr[0])
-    theta = np.empty((S, 4))
-    for i, y in enumerate(Ys):
-        fyy = np.abs(np.fft.rfft(y))[1:]
-        w0 = 2 * np.pi * abs(freqs[1 + int(np.argmax(fyy))])
-        theta[i] = (y.std() * math.sqrt(2), max(w0, 1e-6), 0.0, y.mean())
-    rcond = np.finfo(float).eps * max(n, 4)
-    # the items still iterating (ia) with their θ (th) and series (ys),
-    # compacted only when an item stops; the Jacobian's column planes
-    # (the gufunc copies each item to Fortran order whatever the
-    # strides) are s, A·Xtr·cc, A·cc and the constant 1.  An item whose
-    # initial θ is not finite (a NaN or inf in its series) never starts:
-    # no step can make its θ finite, so it is a failed fit either way,
-    # and gelsd on NaN input makes OpenBLAS print a DLASCL error
-    ia = np.flatnonzero(np.all(np.isfinite(theta), axis=1))
-    th, ys = theta[ia], Ys[ia]
-    J = np.empty((ia.size, 4, n))
-    J[:, 3] = 1.0
+    dt = Xtr[1] - Xtr[0]
+    freqs = np.fft.fftfreq(n, dt)
+    w0 = 2 * np.pi * np.abs(
+        freqs[1 + np.argmax(np.abs(np.fft.rfft(Ys, axis=-1))[:, 1:], axis=1)])
+    t_end = float(Xtr[-1])
+    w_hi = math.pi / dt - 1e-3 / t_end
+    d_max = math.pi / t_end
+    fit = np.full((S, 4), np.nan)                  # (a, b, c, w)
+    # the active items (ia) and their state, compacted when one stops;
+    # a series with a NaN or inf never starts
+    ia = np.flatnonzero(np.all(np.isfinite(Ys), axis=1))
+    ys = Ys[ia]
+    sy = np.einsum("km->k", ys)
+    w = np.minimum(w0[ia], w_hi)
     with np.errstate(invalid="ignore", over="ignore", divide="ignore",
                      under="ignore"):
-        for _ in range(50 if ia.size else 0):
-            A, w, p, c = th[:, 0:1], th[:, 1:2], th[:, 2:3], th[:, 3:4]
-            s = J[:, 0]
-            arg = w * Xtr + p
-            np.sin(arg, out=s)
-            np.cos(arg, out=arg)                     # cc
-            np.multiply(A, Xtr, out=J[:, 1])
-            J[:, 1] *= arg
-            np.multiply(A, arg, out=J[:, 2])
-            np.multiply(A, s, out=arg)
-            arg += c
-            r = np.subtract(ys, arg, out=arg)
-            step, rank = _gelsd(J.transpose(0, 2, 1), r, rcond)
-            # a failed solve stops its item at the previous θ
-            go = rank >= 0
-            th[go] += step[go]
-            go &= ~(np.abs(step).max(axis=1) < 1e-10)
+        a, b, c, f, g, hn, alive = _sine_project(Xtr, w, ys, sy)
+        wp, gp, d = (np.full(ia.size, np.nan) for _ in range(3))
+        halving = np.zeros(ia.size, dtype=bool)
+        for _ in range(_SINE_MAX_EVALS - 1):
+            h = (g - gp) / (w - wp)
+            step = np.where(h > 0, -g / h, -g / (2.0 * hn))
+            step[g == 0] = 0.0          # e.g. a constant series: g = hn = 0
+            d = np.where(halving, d, np.clip(step, -d_max, d_max))
+            wt = np.clip(w + d, 0.0, w_hi)
+            d = wt - w
+            done = alive & (np.abs(d) <= _SINE_XTOL * w)
+            if done.any():
+                fit[ia[done]] = np.stack([a, b, c, w], axis=1)[done]
+            go = alive & np.isfinite(d) & ~done
             if not go.all():
-                theta[ia] = th
-                ia, th, ys, J = ia[go], th[go], ys[go], J[go]
+                ia, ys, sy, w, wt, a, b, c, f, g, hn, wp, gp, d, halving = (
+                    v[go] for v in (ia, ys, sy, w, wt, a, b, c, f, g, hn,
+                                    wp, gp, d, halving))
                 if not ia.size:
                     break
-    theta[ia] = th
-    ok = np.all(np.isfinite(theta), axis=1)
-    if Y.ndim == 1 and not ok[0]:
-        raise ValueError("sine fit diverged")
-    A, w, p, c = (theta[:, j, None] for j in range(4))
-    pred = _sine_func(Xte, A, w, p, c)
-    pred[~ok] = np.nan
+            a2, b2, c2, f2, g2, hn2, alive = _sine_project(Xtr, wt, ys, sy)
+            acc = alive & (f2 <= f)
+            halving = alive & ~acc
+            wp, gp = np.where(acc, w, wp), np.where(acc, g, gp)
+            w, a, b, c, f, g, hn = (
+                np.where(acc, new, old) for new, old in (
+                    (wt, w), (a2, a), (b2, b), (c2, c), (f2, f), (g2, g),
+                    (hn2, hn)))
+            d = np.where(halving, d / 2, d)
+    if Y.ndim == 1 and not np.all(np.isfinite(fit[0])):
+        raise ValueError("sine fit failed")
+    a, b, c, w = (fit[:, j, None] for j in range(4))
+    arg = w * Xte
+    pred = a * np.sin(arg) + b * np.cos(arg) + c
     return pred[0] if Y.ndim == 1 else pred
 
 

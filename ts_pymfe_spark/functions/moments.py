@@ -28,12 +28,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: moment-state column names, one set per tracked series value column
-MOMENT_COLS = [
-    "n", "s1", "s2", "s3", "s4", "mn", "mx",
-    "first_ts", "first_v", "last_ts", "last_v", "slog", "n_nonpos",
-]
-
 
 def moment_aggs(value: str = "value", ts: str = "ts") -> list[Column]:
     """Aggregate expressions building the moment vector from raw rows.

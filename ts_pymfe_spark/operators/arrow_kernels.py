@@ -44,9 +44,12 @@ from ts_pymfe_spark.functions.summaries import (DEFAULT_SUMMARIES,
                                                 summarize_array)
 from ts_pymfe_spark.operators.grouped import map_sorted_groups
 
-FEATURE_SCHEMA = (
-    "conv_id string, series string, feature string, idx int, value double"
-)
+#: Spark type of every column ``series_features`` emits
+_COLUMN_TYPES = {
+    "conv_id": "string", "series": "string", "feature": "string",
+    "idx": "int", "summary": "string", "name": "string", "value": "double",
+    "wall_ms": "double",
+}
 
 #: feature name -> callable(x: np.ndarray) -> float | np.ndarray
 #: (reference ft_* counterpart cited in each kernel's docstring)
@@ -529,6 +532,12 @@ def _summary_rows(arr: np.ndarray, summaries: tuple[str, ...]) -> list[tuple]:
     return summarize_array(arr, summaries)
 
 
+def feature_name(feature: str, summary: str) -> str:
+    """The reference's result name (tsmfe.py:427-438): ``feature`` for
+    an unsummarized value, else ``feature.summary``."""
+    return f"{feature}.{summary}" if summary else feature
+
+
 def _series_keys(df: DataFrame) -> tuple[bool, list[str]]:
     has_series = "series" in df.columns
     return has_series, ["conv_id", "series"] if has_series else ["conv_id"]
@@ -544,6 +553,7 @@ def series_features(
     parallelism: int | None = None,
     min_points: int = 0,
     summaries: Iterable[str] | None = None,
+    named: bool = False,
 ) -> DataFrame:
     """Long feature table over per-series Arrow kernels.
 
@@ -563,6 +573,14 @@ def series_features(
     (conv_id, series, feature, summary, value[, wall_ms]) itself
     (``_summary_rows``): it holds each feature's complete value array,
     so no second exchange over long feature rows is needed.
+
+    ``named`` (with ``summaries``): emit the rows as final
+    (conv_id, series, name, value[, wall_ms]) rows instead, ``name``
+    from ``feature_name``, each series' rows ordered by ``name`` (code
+    points, which is Spark's UTF-8 byte order).  The runner hands the
+    series over in (conv_id, series) order, so every output partition
+    is ordered by (conv_id, series, name) with no Spark projection or
+    sort after the kernel.
 
     ``min_points``: skip series shorter than this INSIDE the kernel
     (empty output for the group) — one scan + one shuffle, instead of
@@ -588,8 +606,15 @@ def series_features(
     names = _resolve_features(features)
     has_series, keys = _series_keys(df)
     summarized = summaries is not None
+    if named and not summarized:
+        raise ValueError("named rows need summaries")
     summ_names = tuple(summaries) if summarized else ()
-    mid_col = "summary" if summarized else "idx"
+    if named:
+        columns = ["conv_id", "series", "name", "value"]
+    else:
+        columns = ["conv_id", "series", "feature",
+                   "summary" if summarized else "idx", "value"]
+    columns += ["wall_ms"] if measure_time else []
 
     def kernel(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
         vals = pdf[value_col].to_numpy(dtype=float)
@@ -600,36 +625,29 @@ def series_features(
             if b - a >= min_points:
                 groups.append((convs[a], sers[a] if has_series else value_col,
                                vals[max(a, b - max_points): b].copy()))
-        cols: dict[str, list] = {c: [] for c in (
-            "conv_id", "series", "feature", mid_col, "value")}
-        if measure_time:
-            cols["wall_ms"] = []
-        for gi, name, arr, ms in _feature_arrays(
+        # (series index, conv_id, series, feature|name[, summary|idx],
+        # value[, wall_ms]) tuples, series by series
+        rows: list[tuple] = []
+        for gi, feat, arr, ms in _feature_arrays(
             names, [g[2] for g in groups],
             lambda gi, name: feature_seed(groups[gi][0], name), measure_time,
         ):
-            if summarized:
-                rows = _summary_rows(arr, summ_names)
-                cols[mid_col].extend(r[0] for r in rows)
-                cols["value"].extend(r[1] for r in rows)
-                n_rows = len(rows)
+            key = (gi, groups[gi][0], groups[gi][1])
+            tail = (ms,) if measure_time else ()
+            if named:
+                rows += [(*key, feature_name(feat, summ), v, *tail)
+                         for summ, v in _summary_rows(arr, summ_names)]
+            elif summarized:
+                rows += [(*key, feat, summ, v, *tail)
+                         for summ, v in _summary_rows(arr, summ_names)]
             else:
-                cols[mid_col].extend(range(arr.size))
-                cols["value"].extend(arr.tolist())
-                n_rows = arr.size
-            cols["conv_id"].extend([groups[gi][0]] * n_rows)
-            cols["series"].extend([groups[gi][1]] * n_rows)
-            cols["feature"].extend([name] * n_rows)
-            if measure_time:
-                cols["wall_ms"].extend([ms] * n_rows)
-        return pd.DataFrame(cols)
+                rows += [(*key, feat, i, v, *tail)
+                         for i, v in enumerate(arr.tolist())]
+        if named:
+            rows.sort(key=lambda r: (r[0], r[3]))
+        return pd.DataFrame([r[1:] for r in rows], columns=columns)
 
-    if summarized:
-        schema = ("conv_id string, series string, feature string, "
-                  "summary string, value double")
-    else:
-        schema = FEATURE_SCHEMA
-    schema += ", wall_ms double" if measure_time else ""
+    schema = ", ".join(f"{c} {_COLUMN_TYPES[c]}" for c in columns)
     return map_sorted_groups(df.select(*keys, order_col, value_col), keys,
                              [order_col, value_col], kernel, schema,
                              parallelism)
@@ -701,8 +719,7 @@ def bootstrap_ci(
                 lambda r, name: feature_seed(conv, f"{name}:{r}", base_seed),
             ):
                 for summ, v in _summary_rows(arr, summ_names):
-                    by_name.setdefault(f"{name}.{summ}" if summ else name,
-                                       []).append(v)
+                    by_name.setdefault(feature_name(name, summ), []).append(v)
             ser = sers[a] if has_series else value_col
             for name, got in by_name.items():
                 v = np.sort(got)

@@ -17,7 +17,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,17 +40,20 @@ def compress_segments(series_df: DataFrame, tier: str = "1h") -> DataFrame:
     ``grouped.map_sorted_groups``: one hash exchange on the segment key,
     points in the total order (ts, value), so segment bytes do not depend
     on input files or partitioning (values Spark sorts as equal, 0.0 and
-    −0.0 or two NaNs, keep input order).  ts is encoded as µs of the
-    session time zone's wall clock, as pyspark hands it to pandas."""
+    −0.0 or two NaNs, keep input order).  ts is encoded as UTC µs since
+    the epoch, taken in the JVM (``unix_micros``), so a segment reads
+    back as the same instants under any session time zone.
+    (``bucket_start`` stays the session-zone ``date_trunc``.)"""
     from ts_pymfe_spark.operators.rollup import TIERS
 
     keys = ["conv_id", "series", "bucket_start"]
     points = series_df.select(
         "conv_id", "series",
-        F.date_trunc(TIERS[tier], "ts").alias("bucket_start"), "ts", "value")
+        F.date_trunc(TIERS[tier], "ts").alias("bucket_start"),
+        F.unix_micros("ts").alias("ts_us"), "value")
 
     def encode(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
-        ts_us = pdf["ts"].to_numpy("datetime64[us]").astype(np.int64)
+        ts_us = pdf["ts_us"].to_numpy(dtype=np.int64)
         vals = pdf["value"].to_numpy(dtype=np.float64)
         out = pdf[keys].iloc[starts[:-1]].reset_index(drop=True)
         out["n"] = np.diff(starts).astype(np.int32)
@@ -59,7 +61,7 @@ def compress_segments(series_df: DataFrame, tier: str = "1h") -> DataFrame:
                       for a, b in zip(starts[:-1], starts[1:])]
         return out
 
-    return map_sorted_groups(points, keys, ["ts", "value"], encode,
+    return map_sorted_groups(points, keys, ["ts_us", "value"], encode,
                              SEGMENT_SCHEMA)
 
 
@@ -69,20 +71,17 @@ def decompress_segments(segments: DataFrame) -> DataFrame:
     One narrow ``mapInArrow``: per batch, the decoded values become one
     float64 Arrow column and the keys are repeated by one ``take``.  No
     pandas step, so NaN stays NaN (pandas→Arrow would make it NULL).
-    ts is read back in the session time zone."""
+    ts is decoded as UTC instants."""
     arrow = to_arrow_schema(StructType.fromDDL(POINTS_SCHEMA))
-    tz = segments.sparkSession.conf.get("spark.sql.session.timeZone")
 
     def decode(batches):
         for batch in batches:
             segs = [decode_segment(s) for s in batch.column("seg").to_pylist()]
-            wall, vals = (np.concatenate(c) for c in zip(*segs))
+            ts_us, vals = (np.concatenate(c) for c in zip(*segs))
             keys = batch.select(["conv_id", "series"]).take(
                 np.repeat(np.arange(len(segs)), [len(t) for t, _ in segs]))
-            ts = pc.assume_timezone(pa.array(wall, pa.timestamp("us")), tz,
-                                    ambiguous="latest")
             yield pa.RecordBatch.from_arrays(
-                [*keys.columns, ts.cast(arrow.field("ts").type),
+                [*keys.columns, pa.array(ts_us, arrow.field("ts").type),
                  pa.array(vals, arrow.field("value").type)], names=arrow.names)
 
     return segments.select("conv_id", "series", "seg").mapInArrow(

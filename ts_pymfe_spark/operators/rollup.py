@@ -49,8 +49,6 @@ from ts_pymfe_spark.functions.moments import moment_aggs, moment_merge_aggs
 
 #: tier -> date_trunc unit
 TIERS = {"1m": "minute", "1h": "hour", "1d": "day"}
-#: cascade order
-TIER_ORDER = ["1m", "1h", "1d"]
 
 KEY = ["conv_id", "series", "bucket_start"]
 
