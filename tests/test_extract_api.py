@@ -177,8 +177,10 @@ def _series_df(spark, series, shuffle_seed=0):
 
 
 def _reference_rows(x, conv, features, summaries):
-    """Driver-side twin of the fused kernel for one series."""
-    from ts_pymfe_spark.operators.arrow_kernels import FEATURE_KERNELS
+    """Driver-side twin of the fused kernel for one series, keyed by
+    result name."""
+    from ts_pymfe_spark.operators.arrow_kernels import (FEATURE_KERNELS,
+                                                        feature_name)
 
     out = {}
     for name in features:
@@ -190,10 +192,10 @@ def _reference_rows(x, conv, features, summaries):
             res = np.nan
         arr = np.atleast_1d(np.asarray(res, dtype=float))
         if arr.size == 1:
-            out[(name, "")] = float(arr[0])
+            out[name] = float(arr[0])
         elif arr.size > 1:
             for s, v in summarize_array(arr, summaries):
-                out[(name, s)] = v
+                out[feature_name(name, s)] = v
     return out
 
 
@@ -226,7 +228,7 @@ def test_runner_bitmatches_per_series_kernels(spark, small_arrow_batches):
     assert set(zip(got.conv_id, got.series)) == set(series)
     for (conv, ser), x in series.items():
         g = got[(got.conv_id == conv) & (got.series == ser)]
-        rows = dict(zip(zip(g.feature, g.summary), g.value))
+        rows = dict(zip(g.name, g.value))
         ref = _reference_rows(x[-512:], conv, BENCH_FEATURES, summaries)
         assert set(rows) == set(ref), conv
         bad = [k for k in ref if not (rows[k] == ref[k] or (
@@ -289,11 +291,12 @@ def test_measure_time_constant_per_series_feature(spark, small_arrow_batches):
                             parallelism=1, measure_time=True,
                             summaries=("mean", "sd")).toPandas()
     assert (timed["wall_ms"] >= 0).all()
-    assert (timed.groupby(["conv_id", "series", "feature"])["wall_ms"]
+    feature = timed["name"].str.split(".").str[0]
+    assert (timed.groupby(["conv_id", "series", feature])["wall_ms"]
             .nunique() == 1).all()
     plain = series_features(df, features=feats, max_points=512,
                             parallelism=1, summaries=("mean", "sd")).toPandas()
-    keys = ["conv_id", "series", "feature", "summary"]
+    keys = ["conv_id", "series", "name"]
     m = plain.merge(timed, on=keys, suffixes=("_a", "_b"))
     assert len(m) == len(plain) == len(timed)
     np.testing.assert_array_equal(m["value_a"].to_numpy(),
@@ -348,7 +351,7 @@ def _sine_vp_reference(y):
         if not ok:
             return None
         wp = gp = d = math.nan
-        halving = False
+        halving = singular = False
         for _ in range(LM._SINE_MAX_EVALS - 1):
             if not halving:
                 h = (g - gp) / (w - wp)
@@ -359,13 +362,12 @@ def _sine_vp_reference(y):
             wt = min(max(w + d, 0.0), w_hi)
             d = wt - w
             if abs(d) <= LM._SINE_XTOL * w:
-                return (*coef, w)
+                return None if singular else (*coef, w)
             if not math.isfinite(d):
                 return None
             coef2, f2, g2, hn2, ok = project(t, wt, y, sy)
-            if not ok:
-                return None
-            halving = not f2 <= f
+            singular = not ok
+            halving = singular or not f2 <= f
             if halving:
                 d = d / 2
             else:
@@ -469,6 +471,37 @@ def test_sine_singular_item_fails_alone():
     for i in (0, 2):
         assert np.array_equal(got[i], LM.landmark_scores(X[i], "model_sine"))
         assert np.isfinite(got[i]).all()
+
+
+def test_sine_singular_trial_is_a_rejected_step(monkeypatch):
+    """A singular trial w is rejected and its step halved, like a trial
+    that raises f, so a fit whose step lands in the singular band near
+    w = 0 goes on from its last w to its optimum instead of failing.
+    Here the first trial of every fold is made singular: every fold
+    stays finite and within 1e-8 of its unforced score."""
+    rng = np.random.default_rng(6)
+    n = 240
+    t = np.arange(n)
+    X = np.stack([3 * np.sin(2 * np.pi * t / 24) + rng.standard_normal(n),
+                  50 + 20 * np.sin(2 * np.pi * t / 40)
+                  + rng.standard_normal(n),
+                  np.sin(2 * np.pi * t / 60) + 0.1 * rng.standard_normal(n)])
+    want = LM.landmark_scores(X, "model_sine")
+    assert np.isfinite(want).all()
+    project, evals = LM._sine_project, {}
+
+    def first_trial_singular(t, w, ys, sy):
+        *out, ok = project(t, w, ys, sy)
+        evals[t.size] = evals.get(t.size, 0) + 1    # one fold per size
+        if evals[t.size] == 2:              # start, then the first trial
+            ok = np.zeros_like(ok)
+        return (*out, ok)
+
+    monkeypatch.setattr(LM, "_sine_project", first_trial_singular)
+    got = LM.landmark_scores(X, "model_sine")
+    assert len(evals) == 5 and min(evals.values()) > 2
+    assert np.isfinite(got).all()
+    assert np.abs(got - want).max() <= 1e-8
 
 
 def test_stacked_sine_skips_nan_series_without_blas_errors(capfd):

@@ -95,7 +95,7 @@ class TSMFESpark:
         # stamps every summary row.
         return series_features(
             series_df, features=self.features, max_points=self.max_points,
-            measure_time=measure_time, summaries=self.summaries, named=True,
+            measure_time=measure_time, summaries=self.summaries,
         )
 
     def extract_with_confidence(

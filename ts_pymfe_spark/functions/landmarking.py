@@ -192,15 +192,18 @@ def _m_sine(Xtr, ytr, Xte, period):
     on the exact projected gradient when the secant curvature is
     positive, else the Kaufman Gauss–Newton step, each clipped to half
     a cycle of phase at the window's end (π/t_end).  A step that raises
-    f is halved.  w stays in [0, w_hi]: sampled at spacing dt,
-    frequencies mirror about the Nyquist frequency π/dt, where the sin
-    column vanishes, so w_hi is 1e-3/t_end below it; an FFT start at
-    the Nyquist bin begins at w_hi.  A fit has converged at w when its
-    next step is at most ``_SINE_XTOL``·w.  A fit that does not
-    converge within ``_SINE_MAX_EVALS`` evaluations, meets a singular
-    system or has a non-finite training value is failed — ValueError
+    f, or whose system is singular, is halved.  w stays in [0, w_hi]:
+    sampled at spacing dt, frequencies mirror about the Nyquist
+    frequency π/dt, where the sin column vanishes, so w_hi is
+    1e-3/t_end below it; an FFT start at the Nyquist bin begins at
+    w_hi.  A fit has converged at w when its
+    next step is at most ``_SINE_XTOL``·w.  A fit is failed — ValueError
     for one series, a NaN prediction row in a stack — as the reference
-    scores a failed fit NaN.
+    scores a failed fit NaN, when a training value is not finite, its
+    start is singular, it does not converge within ``_SINE_MAX_EVALS``
+    evaluations, or its search ends halving away from a singular trial:
+    then f falls all the way into the band near w = 0 where the sin
+    column is collinear with the constant (a trend, such as a ramp).
 
     ``ytr`` is one series (m,) or a stack (S, m) of same-length series,
     fitted in lockstep: each iteration evaluates one trial w for every
@@ -230,29 +233,39 @@ def _m_sine(Xtr, ytr, Xte, period):
     w = np.minimum(w0[ia], w_hi)
     with np.errstate(invalid="ignore", over="ignore", divide="ignore",
                      under="ignore"):
-        a, b, c, f, g, hn, alive = _sine_project(Xtr, w, ys, sy)
+        a, b, c, f, g, hn, ok = _sine_project(Xtr, w, ys, sy)
+        # a singular start fails the fit
+        ia, ys, sy, w, a, b, c, f, g, hn = (
+            v[ok] for v in (ia, ys, sy, w, a, b, c, f, g, hn))
         wp, gp, d = (np.full(ia.size, np.nan) for _ in range(3))
+        # whether each item's last trial was rejected, and whether for
+        # a singular system
         halving = np.zeros(ia.size, dtype=bool)
+        singular = np.zeros(ia.size, dtype=bool)
         for _ in range(_SINE_MAX_EVALS - 1):
+            if not ia.size:
+                break
             h = (g - gp) / (w - wp)
             step = np.where(h > 0, -g / h, -g / (2.0 * hn))
             step[g == 0] = 0.0          # e.g. a constant series: g = hn = 0
             d = np.where(halving, d, np.clip(step, -d_max, d_max))
             wt = np.clip(w + d, 0.0, w_hi)
             d = wt - w
-            done = alive & (np.abs(d) <= _SINE_XTOL * w)
-            if done.any():
-                fit[ia[done]] = np.stack([a, b, c, w], axis=1)[done]
-            go = alive & np.isfinite(d) & ~done
+            done = np.abs(d) <= _SINE_XTOL * w
+            # a search that ends halving away from a singular trial
+            # fails: f falls into the singular band at w -> 0
+            conv = done & ~singular
+            if conv.any():
+                fit[ia[conv]] = np.stack([a, b, c, w], axis=1)[conv]
+            go = np.isfinite(d) & ~done
             if not go.all():
-                ia, ys, sy, w, wt, a, b, c, f, g, hn, wp, gp, d, halving = (
+                ia, ys, sy, w, wt, a, b, c, f, g, hn, wp, gp, d = (
                     v[go] for v in (ia, ys, sy, w, wt, a, b, c, f, g, hn,
-                                    wp, gp, d, halving))
-                if not ia.size:
-                    break
-            a2, b2, c2, f2, g2, hn2, alive = _sine_project(Xtr, wt, ys, sy)
-            acc = alive & (f2 <= f)
-            halving = alive & ~acc
+                                    wp, gp, d))
+            a2, b2, c2, f2, g2, hn2, ok = _sine_project(Xtr, wt, ys, sy)
+            # a singular trial is rejected like one that raises f
+            acc = ok & (f2 <= f)
+            halving, singular = ~acc, ~ok
             wp, gp = np.where(acc, w, wp), np.where(acc, g, gp)
             w, a, b, c, f, g, hn = (
                 np.where(acc, new, old) for new, old in (

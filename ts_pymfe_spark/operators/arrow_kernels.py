@@ -47,7 +47,7 @@ from ts_pymfe_spark.operators.grouped import map_sorted_groups
 #: Spark type of every column ``series_features`` emits
 _COLUMN_TYPES = {
     "conv_id": "string", "series": "string", "feature": "string",
-    "idx": "int", "summary": "string", "name": "string", "value": "double",
+    "idx": "int", "name": "string", "value": "double",
     "wall_ms": "double",
 }
 
@@ -553,7 +553,6 @@ def series_features(
     parallelism: int | None = None,
     min_points: int = 0,
     summaries: Iterable[str] | None = None,
-    named: bool = False,
 ) -> DataFrame:
     """Long feature table over per-series Arrow kernels.
 
@@ -569,27 +568,24 @@ def series_features(
     ``max_points`` cut) does not depend on input splits, partition
     count or shuffle order.
 
-    ``summaries``: when given, the kernel emits summary rows
-    (conv_id, series, feature, summary, value[, wall_ms]) itself
-    (``_summary_rows``): it holds each feature's complete value array,
-    so no second exchange over long feature rows is needed.
-
-    ``named`` (with ``summaries``): emit the rows as final
-    (conv_id, series, name, value[, wall_ms]) rows instead, ``name``
-    from ``feature_name``, each series' rows ordered by ``name`` (code
-    points, which is Spark's UTF-8 byte order).  The runner hands the
-    series over in (conv_id, series) order, so every output partition
-    is ordered by (conv_id, series, name) with no Spark projection or
-    sort after the kernel.
+    ``summaries``: when given, the kernel emits the final summary rows
+    (conv_id, series, name, value[, wall_ms]) itself (``_summary_rows``,
+    ``name`` from ``feature_name``): it holds each feature's complete
+    value array, so no second exchange over long feature rows is
+    needed.  Each series' rows are ordered by ``name`` (code points,
+    which is Spark's UTF-8 byte order), and the runner hands the series
+    over in (conv_id, series) order, so every output partition is
+    ordered by (conv_id, series, name) with no Spark projection or sort
+    after the kernel.
 
     ``min_points``: skip series shorter than this INSIDE the kernel
     (empty output for the group) — one scan + one shuffle, instead of
     the aggregate + broadcast-semi-join pre-filter pattern which costs
     an extra full pass over the input.
 
-    Input: (conv_id[, series], turn_idx, value).  Output rows
-    (conv_id, series, feature, idx, value); scalar features have
-    idx=0; array features one row per element.
+    Input: (conv_id[, series], turn_idx, value).  Output rows without
+    ``summaries``: (conv_id, series, feature, idx, value); scalar
+    features have idx=0; array features one row per element.
 
     ``max_points``: quadratic-kernel cap — each group is truncated to
     its most-recent ``max_points`` observations after sorting (the
@@ -606,14 +602,9 @@ def series_features(
     names = _resolve_features(features)
     has_series, keys = _series_keys(df)
     summarized = summaries is not None
-    if named and not summarized:
-        raise ValueError("named rows need summaries")
     summ_names = tuple(summaries) if summarized else ()
-    if named:
-        columns = ["conv_id", "series", "name", "value"]
-    else:
-        columns = ["conv_id", "series", "feature",
-                   "summary" if summarized else "idx", "value"]
+    columns = (["conv_id", "series", "name", "value"] if summarized else
+               ["conv_id", "series", "feature", "idx", "value"])
     columns += ["wall_ms"] if measure_time else []
 
     def kernel(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
@@ -625,27 +616,32 @@ def series_features(
             if b - a >= min_points:
                 groups.append((convs[a], sers[a] if has_series else value_col,
                                vals[max(a, b - max_points): b].copy()))
-        # (series index, conv_id, series, feature|name[, summary|idx],
-        # value[, wall_ms]) tuples, series by series
-        rows: list[tuple] = []
+        cols: dict[str, list] = {c: [] for c in columns}
+        gis: list[int] = []     # each summary row's series index
         for gi, feat, arr, ms in _feature_arrays(
             names, [g[2] for g in groups],
             lambda gi, name: feature_seed(groups[gi][0], name), measure_time,
         ):
-            key = (gi, groups[gi][0], groups[gi][1])
-            tail = (ms,) if measure_time else ()
-            if named:
-                rows += [(*key, feature_name(feat, summ), v, *tail)
-                         for summ, v in _summary_rows(arr, summ_names)]
-            elif summarized:
-                rows += [(*key, feat, summ, v, *tail)
-                         for summ, v in _summary_rows(arr, summ_names)]
+            if summarized:
+                rows = _summary_rows(arr, summ_names)
+                cols["name"].extend(feature_name(feat, s) for s, _ in rows)
+                cols["value"].extend(v for _, v in rows)
+                n_rows = len(rows)
+                gis.extend([gi] * n_rows)
             else:
-                rows += [(*key, feat, i, v, *tail)
-                         for i, v in enumerate(arr.tolist())]
-        if named:
-            rows.sort(key=lambda r: (r[0], r[3]))
-        return pd.DataFrame([r[1:] for r in rows], columns=columns)
+                cols["feature"].extend([feat] * arr.size)
+                cols["idx"].extend(range(arr.size))
+                cols["value"].extend(arr.tolist())
+                n_rows = arr.size
+            cols["conv_id"].extend([groups[gi][0]] * n_rows)
+            cols["series"].extend([groups[gi][1]] * n_rows)
+            if measure_time:
+                cols["wall_ms"].extend([ms] * n_rows)
+        if summarized:      # each series' rows in name order
+            order = np.lexsort((np.array(cols["name"]), gis))
+            cols = {c: np.array(v, dtype=object if _COLUMN_TYPES[c] == "string"
+                                else float)[order] for c, v in cols.items()}
+        return pd.DataFrame(cols)
 
     schema = ", ".join(f"{c} {_COLUMN_TYPES[c]}" for c in columns)
     return map_sorted_groups(df.select(*keys, order_col, value_col), keys,
