@@ -74,8 +74,11 @@ def test_moving_skew_matches_reference_formula(spark, text_len, text_len_pdf):
 
 
 def test_tiled_stats_match_array_split(spark, text_len, text_len_pdf):
+    v = F.col("value")
     got = (
-        LS.tiled_stats(text_len, 16)
+        LS.with_tile(text_len, 16)
+        .groupBy("conv_id", "tile")
+        .agg(F.var_samp(v).alias("tile_var"), F.avg(v).alias("tile_mean"))
         .orderBy("conv_id", "tile")
         .toPandas()
     )

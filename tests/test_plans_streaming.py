@@ -593,54 +593,76 @@ def test_stream_readers_ignore_old_layout_tier_dirs(spark, turns, tmp_path):
         pd.testing.assert_frame_equal(got[t], exp[t], check_exact=True)
 
 
-def test_stream_store_retention_expires_batches_crash_safe(
-        spark, turns, tmp_path):
-    """Round-5 streaming retention (VERDICT r4 #6): the streamed
-    partial store must expire old batch dirs tombstone-first (footer
-    max(bucket_start) strictly older than the cutoff), read_tier must
-    exclude tombstoned orphans a crash left behind, and the next pass
-    must sweep them — mirroring
-    test_retention_expires_partitions_crash_safe."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ts_pymfe_spark.streaming.rollup_stream import (
-        apply_stream_retention,
-        read_tier,
-        run_stream_to_store,
-    )
-
-    in_dir = str(tmp_path / "ret_stream_in")
-    store = str(tmp_path / "ret_stream_store")
-    ckpt = str(tmp_path / "ret_stream_ckpt")
-    # one input FILE per day -> with maxFilesPerTrigger=1, one batch
-    # per day, so batch expiry aligns with day expiry
+def _day_per_batch_store(spark, turns, root, straddle=False):
+    """A 1m partial store streamed one input file per day, so one batch
+    per day; with ``straddle`` one more batch holds a slice of the first
+    and of the last day (whose rows are one conversation's few turns, so
+    it is cut by row).  Returns (store, days)."""
     days = sorted(
         r["d"].isoformat()
-        for r in turns.select(
-            F.to_date("ts").alias("d")
-        ).distinct().collect()
+        for r in turns.select(F.to_date("ts").alias("d")).distinct().collect()
     )
     assert len(days) >= 3
-    for d in days:
-        (
-            turns.filter(F.to_date("ts") == d)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(in_dir)
+    rest = turns
+    if straddle:
+        day = F.to_date("ts")
+        straddle = turns.filter(
+            (day == days[0]) & (F.pmod(F.hash("conv_id"), F.lit(7)) == 0)
+            | (day == days[-1])
+            & (F.pmod(F.hash("conv_id", "turn_idx"), F.lit(2)) == 0)
         )
-    run_stream_to_store(spark, in_dir, store, ckpt,
-                        max_files_per_trigger=1)
+        n_last = straddle.filter(day == days[-1]).count()
+        assert 0 < n_last < turns.filter(day == days[-1]).count()
+        rest = turns.join(
+            straddle.select("conv_id", "turn_idx"),
+            ["conv_id", "turn_idx"],
+            "left_anti",
+        )
+    in_dir, store, ckpt = (str(root / d) for d in ("in", "store", "ckpt"))
+    for d in days:
+        (rest.filter(F.to_date("ts") == d)
+         .coalesce(1).write.mode("append").parquet(in_dir))
+    if straddle:
+        straddle.coalesce(1).write.mode("append").parquet(in_dir)
+    from ts_pymfe_spark.streaming.rollup_stream import run_stream_to_store
 
+    run_stream_to_store(spark, in_dir, store, ckpt, max_files_per_trigger=1)
+    return store, days
+
+
+def test_stream_store_retention_expires_batches_crash_safe(
+        spark, turns, tmp_path):
+    """A stream store's one retention ladder: compaction moves old days
+    into the checkpointed store, and the batch ladder's
+    ``manifest.apply_retention`` expires them there tombstone-first.
+    read_tier drops the expired days, still excludes an expired day
+    whose directory a crash left behind, and the next pass sweeps it —
+    mirroring test_retention_expires_partitions_crash_safe."""
+    import datetime
+    import os
+
+    from ts_pymfe_spark.plans.manifest import apply_retention
+    from ts_pymfe_spark.streaming.rollup_stream import (
+        compact_stream_store,
+        read_tier,
+    )
+
+    store, days = _day_per_batch_store(spark, turns, tmp_path)
     pre = read_tier(spark, store, "1m").orderBy(*KEY).toPandas()
     cutoff = days[2]
+    compact_stream_store(spark, store, cutoff)
+    root = f"{store}/compacted/tier=1m"
+    kept = str(tmp_path / "kept_day")
+    shutil.copytree(f"{root}/part={days[0]}", kept)
 
-    expired = apply_stream_retention(store, "1m", cutoff)
-    assert len(expired) == 2  # exactly the two all-older-than-cutoff days
-    for b in expired:
-        assert not os.path.exists(f"{store}/tier=1m/{b}")
-        assert os.path.exists(f"{store}/tier=1m/_retention/{b}.json")
+    keep_days = 30
+    now = (datetime.date.fromisoformat(cutoff)
+           + datetime.timedelta(days=keep_days)).isoformat()
+    expired = apply_retention(spark, f"{store}/compacted",
+                              {"1m": keep_days}, now)
+    assert expired == {"1m": days[:2]}
+    for d in days[:2]:
+        assert not os.path.exists(f"{root}/part={d}")
 
     got = read_tier(spark, store, "1m").orderBy(*KEY).toPandas()
     exp = pre[
@@ -652,112 +674,78 @@ def test_stream_store_retention_expires_batches_crash_safe(
         got["s1"].to_numpy(), exp["s1"].to_numpy(), rtol=1e-12
     )
 
-    # idempotent
-    assert apply_stream_retention(store, "1m", cutoff, dry_run=True) == []
-
-    # crash simulation: a tombstoned dir resurfaces -> read_tier still
-    # excludes it, and the next pass sweeps it
-    orphan = expired[0]
-    os.makedirs(f"{store}/tier=1m/{orphan}", exist_ok=True)
+    # crash simulation: an expired day's data resurfaces -> read_tier
+    # still excludes it, and the next pass sweeps it
+    shutil.copytree(kept, f"{root}/part={days[0]}")
     got2 = read_tier(spark, store, "1m").orderBy(*KEY).toPandas()
     assert len(got2) == len(exp)
-    assert apply_stream_retention(store, "1m", cutoff) == []
-    assert not os.path.exists(f"{store}/tier=1m/{orphan}")
+    assert apply_retention(spark, f"{store}/compacted",
+                           {"1m": keep_days}, now) == {"1m": []}
+    assert not os.path.exists(f"{root}/part={days[0]}")
 
 
 def test_stream_store_compaction_exactly_once(spark, turns, tmp_path):
     """Round-5 compaction: partials older than the watermark move into
     the day-partitioned checkpointed layout; the marker atomically
     switches reads so straddling batches are never double-counted;
-    fully-old batch dirs are swept; the union view equals the pure
-    partial read exactly; a marker can never move backwards."""
-    import os
-
-    import pytest as _pytest
-
-    from pyspark.sql import functions as F
-
+    fully-old batch dirs are swept; read_tier and read_all_tiers over
+    the compacted store equal the pure partial read (turn_rate
+    included); a marker can never move backwards."""
     from ts_pymfe_spark.streaming.rollup_stream import (
         compact_stream_store,
+        read_all_tiers,
         read_tier,
-        read_tier_compacted,
-        run_stream_to_store,
     )
 
-    in_dir = str(tmp_path / "cmp_in")
-    store = str(tmp_path / "cmp_store")
-    compact = str(tmp_path / "cmp_compact")
-    ckpt = str(tmp_path / "cmp_ckpt")
-    days = sorted(
-        r["d"].isoformat()
-        for r in turns.select(
-            F.to_date("ts").alias("d")
-        ).distinct().collect()
-    )
-    assert len(days) >= 3
-    # one file per day, PLUS one file straddling days[0] and days[-1]
-    straddle = turns.filter(
-        F.to_date("ts").isin(days[0], days[-1])
-        & (F.pmod(F.hash("conv_id"), F.lit(7)) == 0)
-    )
-    rest = turns.join(
-        straddle.select("conv_id", "turn_idx"),
-        ["conv_id", "turn_idx"],
-        "left_anti",
-    )
-    for d in days:
-        (
-            rest.filter(F.to_date("ts") == d)
-            .coalesce(1).write.mode("append").parquet(in_dir)
-        )
-    straddle.coalesce(1).write.mode("append").parquet(in_dir)
-    run_stream_to_store(spark, in_dir, store, ckpt,
-                        max_files_per_trigger=1)
-
+    store, days = _day_per_batch_store(spark, turns, tmp_path, straddle=True)
     pre = read_tier(spark, store, "1m").orderBy(*KEY).toPandas()
-    pre_1h = read_tier(spark, store, "1h").orderBy(*KEY).toPandas()
-    n_batches = len(os.listdir(f"{store}/tier=1m"))
+    pre_tiers = _tiers_pdf(read_all_tiers(spark, store))
+    n_batches = len(_batch_dirs(store))
 
     cutoff = days[2]
-    committed = compact_stream_store(
-        spark, store, compact, "1m", cutoff, run_id="c1"
-    )
-    assert sorted(e["partition"] for e in committed) == days[:2]
-    # day-aligned old batches swept; the straddling batch survives
-    remaining = [
-        d for d in os.listdir(f"{store}/tier=1m") if d.startswith("batch=")
-    ]
-    assert len(remaining) == n_batches - 1 - 2  # -_compacted marker +2 swept
+    committed = compact_stream_store(spark, store, days[1], run_id="c0")
+    assert [e["partition"] for e in committed] == days[:1]
+    # a crash between the commit and the marker advance: the compacted
+    # store already holds days[1], the marker and partials predate it
+    before = str(tmp_path / "before")
+    shutil.copytree(f"{store}/tier=1m", before)
+    committed = compact_stream_store(spark, store, cutoff, run_id="c1")
+    assert [e["partition"] for e in committed] == days[1:2]
+    shutil.rmtree(f"{store}/tier=1m")
+    shutil.copytree(before, f"{store}/tier=1m")
+    assert read_tier(spark, store, "1m").count() == len(pre)
+    # the re-run commits nothing, advances the marker and sweeps: the
+    # day-aligned old batches go; the last day's and the straddling
+    # batch survive
+    assert compact_stream_store(spark, store, cutoff, run_id="c2") == []
+    assert len(_batch_dirs(store)) == n_batches - 2 == 2
 
-    got = read_tier_compacted(spark, store, compact, "1m").orderBy(
-        *KEY
-    ).toPandas()
+    got = read_tier(spark, store, "1m").orderBy(*KEY).toPandas()
     assert len(got) == len(pre)
     np.testing.assert_array_equal(got["n"].to_numpy(), pre["n"].to_numpy())
     np.testing.assert_allclose(
         got["s1"].to_numpy(), pre["s1"].to_numpy(), rtol=1e-12
     )
-    # coarser tiers compose from the compacted 1m view
-    got_1h = read_tier_compacted(spark, store, compact, "1h").orderBy(
-        *KEY
-    ).toPandas()
-    assert len(got_1h) == len(pre_1h)
-    np.testing.assert_array_equal(
-        got_1h["n"].to_numpy(), pre_1h["n"].to_numpy())
-    np.testing.assert_allclose(
-        got_1h["s1"].to_numpy(), pre_1h["s1"].to_numpy(), rtol=1e-12
-    )
+    # the full cascade, turn_rate included, composes from the
+    # compacted 1m as it did from the partials
+    got_tiers = _tiers_pdf(read_all_tiers(spark, store))
+    for t in ("1m", "1h", "1d"):
+        g, e = got_tiers[t], pre_tiers[t]
+        assert len(g) == len(e) > 0, t
+        assert (g["series"] == "turn_rate").any(), t
+        np.testing.assert_array_equal(g["n"].to_numpy(), e["n"].to_numpy())
+        for c in ("s1", "s2", "s3", "s4", "slog"):
+            np.testing.assert_allclose(
+                g[c].to_numpy(), e[c].to_numpy(), rtol=1e-12, err_msg=c
+            )
 
     # idempotent re-run: nothing new to commit, view unchanged
-    assert compact_stream_store(
-        spark, store, compact, "1m", cutoff, run_id="c2"
-    ) == []
-    got2 = read_tier_compacted(spark, store, compact, "1m").count()
-    assert got2 == len(pre)
+    assert compact_stream_store(spark, store, cutoff, run_id="c3") == []
+    assert read_tier(spark, store, "1m").count() == len(pre)
 
     # the marker is monotone
-    with _pytest.raises(ValueError):
-        compact_stream_store(spark, store, compact, "1m", days[0])
+    with pytest.raises(ValueError):
+        compact_stream_store(spark, store, days[0])
 
 
 def test_streaming_hll_matches_batch(spark, turns, tmp_path):

@@ -153,9 +153,9 @@ def test_chunked_hot_key_splits_tasks(spark, counter_df):
 
 
 def test_read_tier_raises_on_compacted_store(spark, tmp_path):
-    """ADVICE r5: after compaction sweeps batch dirs, read_tier on the
-    partial store alone would silently return truncated history — it
-    must fail loudly and point at read_tier_compacted."""
+    """ADVICE r5: after compaction sweeps batch dirs, the partials
+    alone are truncated history — a marker with no compacted store
+    beside it must fail loudly rather than return them."""
     import json
     import os
 
@@ -165,7 +165,7 @@ def test_read_tier_raises_on_compacted_store(spark, tmp_path):
     os.makedirs(root)
     with open(root / "_compacted_until.json", "w") as f:
         json.dump({"older_than": "2025-01-01"}, f)
-    with pytest.raises(RuntimeError, match="read_tier_compacted"):
+    with pytest.raises(RuntimeError, match="truncated history"):
         read_tier(spark, str(tmp_path / "store"), "1m")
 
 

@@ -327,12 +327,6 @@ def _loess_apply(plan, Y: np.ndarray) -> np.ndarray:
     return np.where(ok, fit, swy / sw_safe)
 
 
-def _loess(y: np.ndarray, q: int, xeval: np.ndarray | None = None) -> np.ndarray:
-    """One-series degree-1 loess (see ``_loess_plan``)."""
-    y = np.asarray(y, dtype=float)
-    return _loess_apply(_loess_plan(y.size, q, xeval), y)
-
-
 def _band_operator(n: int, q: int) -> np.ndarray:
     """The q-nearest loess on the full integer grid 0..n-1 as a linear
     operator, stored as its distinct coefficient rows only.

@@ -200,25 +200,6 @@ def with_tile(df: DataFrame, num_tiles: int = 16, out: str = "tile") -> DataFram
     return df.withColumn(out, F.ntile(num_tiles).over(_w()) - 1)
 
 
-def tiled_stats(df: DataFrame, num_tiles: int = 16, value: str = "value") -> DataFrame:
-    """Per-tile stats powering ft_lumpiness (tile variances,
-    local_stats.py:1624-1681), ft_stability (tile means, :1684-1733),
-    ft_local_extrema (max-|v| value, :1736-1788), ft_local_range (ptp,
-    :1791-1836).  Returns one row per (conv_id, tile)."""
-    v = F.col(value)
-    return (
-        with_tile(df, num_tiles)
-        .groupBy("conv_id", "tile")
-        .agg(
-            F.var_samp(v).alias("tile_var"),
-            F.avg(v).alias("tile_mean"),
-            F.max_by(v, F.abs(v)).alias("tile_extreme"),
-            (F.max(v) - F.min(v)).alias("tile_range"),
-            F.count(v).alias("tile_n"),
-        )
-    )
-
-
 def rolling_anomalies(df: DataFrame, k: int = 20, z: float = 3.0,
                       value: str = "value",
                       min_n: int = 10) -> DataFrame:

@@ -47,11 +47,7 @@ def spread(df: DataFrame, *key: str) -> DataFrame:
     left alone rather than collapsed."""
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
-    try:
-        cur = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    if cur >= n:
+    if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n, *key) if key else df.repartition(n)
 
@@ -308,9 +304,13 @@ def jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.3,
     join work) if the corpus exceeds ``max_docs``, unless ``force=True``.
     Returns (doc_a, doc_b, jaccard) with doc_a<doc_b, jaccard >=
     threshold."""
+    sh = shingles(df, n, id_col)
     if not force:
         # plan-level guard: a broadcast 1-row bound check joined on a
-        # constant — no driver action, fails the job lazily if oversize
+        # constant — no driver action, fails the job lazily if oversize.
+        # It joins the shingles, not the input: spread() inside
+        # shingles() builds its input's RDD, which would run the
+        # broadcast at plan-build time
         from pyspark.sql.utils import AnalysisException  # noqa: F401
 
         bound = (
@@ -335,12 +335,11 @@ def jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.3,
         )
         # referencing _guard in the filter keeps Catalyst from pruning
         # the assertion away (it is NULL on success, throws otherwise)
-        df = (
-            df.crossJoin(F.broadcast(bound))
+        sh = (
+            sh.crossJoin(F.broadcast(bound))
             .where(F.col("_guard").isNull())
             .drop("_guard")
         )
-    sh = shingles(df, n, id_col)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
     b = sh.select(F.col(id_col).alias("doc_b"), "shingle")

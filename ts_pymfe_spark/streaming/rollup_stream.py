@@ -19,14 +19,30 @@ directories; readers ignore them.  ``run_partials_to_store`` and
 ``read_partials`` carry the same contract for any mergeable partial
 (HLL registers, histogram/count-min counters, health, drift cells).
 
-At production scale the source is Kafka/Iceberg CDC and the partial
-store is an Iceberg table compacted periodically (merge partials into
-one row per bucket — same aggregation, run as maintenance); here a file
-source with ``availableNow`` triggers serves tests.
+Maintenance has one route: ``compact_stream_store`` merges partials
+older than a watermark into day partitions of a checkpointed store at
+``{store_dir}/compacted/tier=1m`` and records the watermark in
+``tier=1m/_compacted_until.json``; ``read_tier`` then reads old buckets
+from there and new ones from the partials.  Retention is the batch
+ladder's own::
+
+    manifest.apply_retention(spark, f"{store_dir}/compacted",
+                             {"1m": keep_days}, now)
+
+so only compacted days can expire; partials at or after the marker
+are kept until a compaction moves them.
+
+At production scale the source is Kafka/Iceberg CDC and both stores
+are Iceberg tables; here a file source with ``availableNow`` triggers
+serves tests.
 """
 
 from __future__ import annotations
 
+import datetime
+import json
+import os
+import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,7 +53,13 @@ from ts_pymfe_spark.functions.moments import moment_merge_aggs
 from ts_pymfe_spark.operators.derive import derive_series
 from ts_pymfe_spark.operators.rollup import (KEY, TierMap, compose_tiers,
                                              rollup_raw)
+from ts_pymfe_spark.plans.manifest import CheckpointedWriter
 from ts_pymfe_spark.synth import TURNS_SCHEMA
+
+# where a compacted store keeps its final 1m vectors, and the marker
+# that splits reads between them and the partials (both under store_dir)
+_COMPACTED_1M = "compacted/tier=1m"
+_MARKER = "tier=1m/_compacted_until.json"
 
 
 def run_partials_to_store(spark: SparkSession, input_dir: str,
@@ -85,52 +107,61 @@ def run_stream_to_store(spark: SparkSession, input_dir: str, store_dir: str,
     )
 
 
-def _live_batch_dirs(store_dir: str, tier: str) -> list[str]:
-    """Batch partial dirs that are not retention-tombstoned."""
-    import os
+def _live_batch_dirs(store_dir: str) -> list[str]:
+    """The store's 1m batch partial dirs."""
+    root = f"{store_dir}/tier=1m"
+    return [f"{root}/{d}" for d in sorted(os.listdir(root))
+            if d.startswith("batch=")]
 
-    root = f"{store_dir}/tier={tier}"
-    dead = set()
-    ret = f"{root}/_retention"
-    if os.path.isdir(ret):
-        dead = {f[: -len(".json")] for f in os.listdir(ret)
-                if f.endswith(".json")}
-    return [
-        f"{root}/{d}" for d in sorted(os.listdir(root))
-        if d.startswith("batch=") and d not in dead
-    ]
+
+def _compaction_marker(store_dir: str) -> str | None:
+    """The compaction watermark: 1m buckets strictly older than this
+    YYYY-MM-DD live in the compacted store, not the partials."""
+    try:
+        with open(f"{store_dir}/{_MARKER}") as f:
+            return json.load(f)["older_than"]
+    except FileNotFoundError:
+        return None
 
 
 def read_tier(spark: SparkSession, store_dir: str, tier: str) -> DataFrame:
     """Merge-on-read: combine the per-batch 1m partial vectors into
     final bucket vectors — identical algebra to the batch cascade, so
     streaming output == batch output exactly; 1h and 1d are the main
-    branch of ``compose_tiers`` over them.  Retention-tombstoned batch
-    dirs are excluded even if a crash left them on disk.
+    branch of ``compose_tiers`` over them.
 
-    Fails loudly on a compacted store (ADVICE r5): once
-    ``compact_stream_store`` has swept batch dirs behind the
-    ``_compacted_until`` marker, the partials alone are TRUNCATED
-    history — a stale caller must switch to ``read_tier_compacted``
-    rather than silently get only the newest buckets."""
-    marker = _compaction_marker(store_dir, "1m")
+    On a compacted store the marker splits the 1m rows: buckets
+    strictly older than it come from the compacted store's live
+    (retention-unexpired) day partitions as final vectors, buckets at
+    or after it still merge from the partials.  The two sides' keys are
+    disjoint, so the union needs no further aggregation.  A marker with
+    no compacted store beside it raises (ADVICE r5): the partials alone
+    would be truncated history."""
+    marker = _compaction_marker(store_dir)
+    paths = _live_batch_dirs(store_dir)
+    parts = []
     if marker is not None:
-        raise RuntimeError(
-            f"tier {tier!r} under {store_dir} is compacted up to "
-            f"{marker}: read_tier would return truncated history — "
-            "use read_tier_compacted(spark, store_dir, compact_dir, "
-            "tier) instead"
-        )
-    paths = _live_batch_dirs(store_dir, "1m")
-    if not paths:
-        raise FileNotFoundError(
-            f"no live batch partials under {store_dir}/tier=1m"
-        )
-    t1m = (
-        spark.read.parquet(*paths)
-        .groupBy(*KEY)
-        .agg(*moment_merge_aggs())
-    )
+        root = f"{store_dir}/{_COMPACTED_1M}"
+        if not os.path.isdir(root):
+            raise RuntimeError(
+                f"{store_dir} is compacted up to {marker} but {root} "
+                "does not exist: read_tier would return truncated history"
+            )
+        try:
+            # the filter hides days a crashed compaction committed
+            # before it could advance the marker
+            parts.append(CheckpointedWriter(spark, root).read()
+                         .filter(F.col("bucket_start") < F.lit(marker)))
+        except FileNotFoundError:  # nothing compacted or all expired
+            pass
+    if paths:
+        fresh = spark.read.parquet(*paths)
+        if marker is not None:
+            fresh = fresh.filter(F.col("bucket_start") >= F.lit(marker))
+        parts.append(fresh.groupBy(*KEY).agg(*moment_merge_aggs()))
+    if not parts:
+        raise FileNotFoundError(f"no live 1m rows under {store_dir}")
+    t1m = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
     if tier == "1m":
         return t1m
     return compose_tiers(t1m, include_turn_rate=False)[tier]
@@ -140,8 +171,6 @@ def _batch_max_bucket(batch_dir: str):
     """Max ``bucket_start`` across a batch dir, from parquet FOOTER
     row-group statistics — no data read (same principle as
     plans/manifest._footer_stats)."""
-    import os
-
     import pyarrow.parquet as pq
 
     mx = None
@@ -161,40 +190,27 @@ def _batch_max_bucket(batch_dir: str):
     return mx
 
 
-def _compaction_marker(store_dir: str, tier: str) -> str | None:
-    """The compaction watermark: buckets strictly older than this
-    YYYY-MM-DD live in the compacted store, not the partials."""
-    import json as _json
-    import os
-
-    path = f"{store_dir}/tier={tier}/_compacted_until.json"
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return _json.load(f)["older_than"]
-
-
 def compact_stream_store(spark: SparkSession, store_dir: str,
-                         compact_dir: str, tier: str, older_than: str,
+                         older_than: str,
                          run_id: str | None = None) -> list[dict]:
-    """Compact streamed partials older than ``older_than`` into the
-    day-partitioned checkpointed layout (round 5) — the production
-    maintenance pass the partial store's design assumes: without it
-    merge-on-read degrades as O(#batches) and retention can only drop
-    whole batches.
+    """Compact streamed 1m partials older than ``older_than`` into the
+    day-partitioned checkpointed layout at
+    ``{store_dir}/compacted/tier=1m`` — the maintenance pass the
+    partial store's design assumes: without it merge-on-read degrades
+    as O(#batches), and it is the store's only route to retention.
 
     Mechanics (exactly-once via the marker as the atomic switch):
 
-      1. live partials are filtered to ``bucket_start < older_than``,
+      1. partials are filtered to ``bucket_start < older_than``,
          merged with the same associative ``moment_merge_aggs`` a
          read would apply, and committed day-partitioned through
-         ``CheckpointedWriter`` (resume-safe: already-committed days
-         are skipped on a re-run);
+         ``CheckpointedWriter`` (resume-safe: already-committed days,
+         expired ones included, are skipped on a re-run);
       2. the ``_compacted_until.json`` marker is advanced (atomic
-         rename) — from this instant ``read_tier_compacted`` takes
-         old buckets from the compacted store and keeps reading the
-         partials only for buckets >= the marker, so a batch that
-         straddles the cutoff is never double-counted;
+         rename) — from this instant ``read_tier`` takes old buckets
+         from the compacted store and keeps reading the partials only
+         for buckets >= the marker, so a batch that straddles the
+         cutoff is never double-counted;
       3. batch dirs whose footer max(bucket_start) is strictly older
          than the marker are deleted — every row they held is in the
          compacted store.  A crash before this step leaves garbage
@@ -204,21 +220,13 @@ def compact_stream_store(spark: SparkSession, store_dir: str,
     already-advanced marker must not arrive in later batches (a real
     deployment routes such stragglers through a late lane).  Returns
     the manifest entries committed by this call."""
-    import datetime as _dt
-    import json as _json
-    import os
-    import shutil
-
-    from ts_pymfe_spark.plans.manifest import CheckpointedWriter
-
-    prev = _compaction_marker(store_dir, tier)
+    prev = _compaction_marker(store_dir)
     if prev is not None and older_than < prev:
         raise ValueError(
             f"compaction marker cannot move backwards: {older_than} < {prev}"
         )
-    paths = _live_batch_dirs(store_dir, tier)
-    w = CheckpointedWriter(spark, f"{compact_dir}/tier={tier}",
-                           run_id=run_id)
+    paths = _live_batch_dirs(store_dir)
+    root = f"{store_dir}/{_COMPACTED_1M}"
     committed: list[dict] = []
     if paths:
         merged_old = (
@@ -227,120 +235,27 @@ def compact_stream_store(spark: SparkSession, store_dir: str,
             .groupBy(*KEY)
             .agg(*moment_merge_aggs())
         )
-        committed = w.run(merged_old, "bucket_start", "day")
+        committed = CheckpointedWriter(spark, root, run_id=run_id).run(
+            merged_old, "bucket_start", "day")
+    os.makedirs(root, exist_ok=True)
     # advance the marker (atomic commit point of the read switch)
-    marker = f"{store_dir}/tier={tier}/_compacted_until.json"
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(_json.dumps({"older_than": older_than}) + "\n")
-    os.rename(tmp, marker)
+    marker = f"{store_dir}/{_MARKER}"
+    with open(marker + ".tmp", "w") as f:
+        f.write(json.dumps({"older_than": older_than}) + "\n")
+    os.rename(marker + ".tmp", marker)
     # sweep batch dirs now fully represented in the compacted store
-    cutoff = _dt.date.fromisoformat(older_than)
-    for path in _live_batch_dirs(store_dir, tier):
+    cutoff = datetime.date.fromisoformat(older_than)
+    for path in paths:
         mx = _batch_max_bucket(path)
         if mx is not None and mx.date() < cutoff:
             shutil.rmtree(path, ignore_errors=True)
     return committed
 
 
-def read_tier_compacted(spark: SparkSession, store_dir: str,
-                        compact_dir: str, tier: str) -> DataFrame:
-    """Union view over the compacted store and the live partials —
-    the reader for a compacted streaming tier.  The marker decides
-    the split: compacted rows are final vectors for buckets strictly
-    older than it; partial rows at or after it still merge on read.
-    The two sides' keys are disjoint by construction, so the union
-    needs no further aggregation.  Marker, partials and compacted rows
-    are the 1m tier's; 1h and 1d are composed from this view as in
-    ``read_tier``."""
-    from ts_pymfe_spark.plans.manifest import CheckpointedWriter
-
-    marker = _compaction_marker(store_dir, "1m")
-    if marker is None:
-        return read_tier(spark, store_dir, tier)
-    paths = _live_batch_dirs(store_dir, "1m")
-    fresh = None
-    if paths:
-        fresh = (
-            spark.read.parquet(*paths)
-            .filter(F.col("bucket_start") >= F.lit(marker))
-            .groupBy(*KEY)
-            .agg(*moment_merge_aggs())
-        )
-    try:
-        old = CheckpointedWriter(
-            spark, f"{compact_dir}/tier=1m"
-        ).read().filter(F.col("bucket_start") < F.lit(marker))
-    except FileNotFoundError:
-        # marker advanced but nothing was old enough to compact yet
-        old = None
-    if old is None and fresh is None:
-        raise FileNotFoundError(
-            f"no data in either store for tier={tier}"
-        )
-    t1m = fresh if old is None else (
-        old if fresh is None else old.unionByName(fresh))
-    if tier == "1m":
-        return t1m
-    return compose_tiers(t1m, include_turn_rate=False)[tier]
-
-
-def apply_stream_retention(store_dir: str, tier: str,
-                           older_than: str,
-                           dry_run: bool = False) -> list[str]:
-    """Retention for the streamed partial store (round 5 — the batch
-    ladder's ``manifest.apply_retention`` counterpart; without it the
-    partial store grows unboundedly).
-
-    A ``batch=N`` partial dir is expired when EVERY row in it is
-    strictly older than ``older_than`` (YYYY-MM-DD) — decided from the
-    parquet footer max of ``bucket_start``, no data read.  Batches
-    that straddle the cutoff are conservatively kept (partial vectors
-    cannot be row-filtered without rewriting the batch; periodic
-    compaction into day partitions is the production path for those).
-
-    Crash-safe ordering mirrors the batch ladder: the tombstone
-    (``_retention/batch=N.json``) commits FIRST via atomic rename,
-    then the directory is deleted.  A crash in between leaves a
-    tombstoned-but-present orphan: ``read_tier`` already excludes it,
-    and the next retention pass sweeps it.  Returns newly expired
-    batch dir names."""
-    import datetime as _dt
-    import json as _json
-    import os
-    import shutil
-
-    cutoff = _dt.date.fromisoformat(older_than)
-    root = f"{store_dir}/tier={tier}"
-    ret = f"{root}/_retention"
-    victims = []
-    for path in _live_batch_dirs(store_dir, tier):
-        mx = _batch_max_bucket(path)
-        if mx is not None and mx.date() < cutoff:
-            victims.append(os.path.basename(path))
-    if dry_run:
-        return victims
-    os.makedirs(ret, exist_ok=True)
-    for b in victims:
-        fname = f"{ret}/{b}.json"
-        tmp = fname + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(_json.dumps(
-                {"batch": b, "expired": True, "older_than": older_than}
-            ) + "\n")
-        os.rename(tmp, fname)  # atomic tombstone commit point
-    # sweep: newly expired dirs AND orphans from a crashed prior pass
-    dead = {f[: -len(".json")] for f in os.listdir(ret)
-            if f.endswith(".json")}
-    for b in sorted(dead):
-        shutil.rmtree(f"{root}/{b}", ignore_errors=True)
-    return victims
-
-
 def read_all_tiers(spark: SparkSession, store_dir: str,
                    include_turn_rate: bool = True) -> TierMap:
-    """The FULL cascade over a streaming partial store: the merged 1m
-    (``read_tier``) through ``compose_tiers``, as ``build_all_tiers``
+    """The FULL cascade over a streaming store, compacted or not: the
+    merged 1m (``read_tier``) through ``compose_tiers``, as ``build_all_tiers``
     composes its raw 1m rollup — so streaming output == batch output
     exactly (test_streaming_full_cascade_matches_batch).
 
