@@ -27,9 +27,13 @@ Writes under ``--output``:
                             estimates without re-scanning events)
 * ``heavy_hitters/``        top user_ids by count-min estimate
 
-Scan economics: ks/psi/daily share one raw projection each (one
-exchange per table); the CMS pass is one more scan whose shuffle is
-O(d*w) regardless of row count.  Report tables never read each other.
+Scan economics: ks is one exchange of its raw projection; psi and
+daily health are reductions of mergeable stores (drift cells, health
+partials), so their shuffles carry (key, cell) counts and (day,
+column) partials, never raw rows — psi's extra scan is the tiny
+baseline-bounds aggregate it broadcasts.  The CMS pass is one more
+scan whose shuffle is O(d*w) regardless of row count.  Report tables
+never read each other.
 """
 
 from __future__ import annotations

@@ -754,3 +754,39 @@ class TestDailyDistDrift:
         df = self._days(spark, {1: [1.0, 2.0], 3: [1.0, 2.0]})
         out = daily_dist_drift(df).collect()
         assert out == []  # day 3's literal predecessor (day 2) absent
+
+
+def test_null_key_cells_match_oracles(spark, tmp_path):
+    """A NULL key is a group of its own in the psi_drift and
+    drift_cells_ks oracles (window / GROUP BY semantics) and is dropped
+    by ks_drift_binned's (JOIN ... USING): the drift-cell path must
+    bin a NULL key against its own bounds, exactly as each oracle
+    scores it."""
+    import duckdb
+
+    import __spark_entry__ as e
+
+    rows = ([("a", float(v), 2 * v) for v in range(1, 9)]
+            + [("a", float(v + 3), 2 * v + 1) for v in range(1, 9)]
+            + [(None, float(v), 2 * i)
+               for i, v in enumerate((10, 20, 30, 40))]
+            + [(None, float(v), 2 * i + 1)
+               for i, v in enumerate((30, 40, 50, 60))]
+            + [(None, None, 0)])
+    path = tmp_path / "events.parquet"
+    spark.createDataFrame(
+        rows, "event_type string, value double, user_id long") \
+        .write.parquet(str(path))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}/*.parquet'")
+    for name in ("psi_drift", "ks_drift_binned", "drift_cells_ks"):
+        got = sorted((tuple(r) for r in
+                      e.queries()[name](spark, str(tmp_path)).collect()),
+                     key=repr)
+        exp = sorted(con.execute(e.oracle_sql()[name]).fetchall(), key=repr)
+        assert got == exp, (name, got, exp)
+        null_rows = [r for r in got if r[0] is None]
+        if name == "ks_drift_binned":
+            assert null_rows == []
+        else:
+            assert len(null_rows) == 1 and null_rows[0][3] is not None

@@ -474,7 +474,8 @@ def test_drift_family_scans_are_column_pruned(spark):
     2x the bytes at 100 TB."""
     from ts_pymfe_spark.operators.drift import (benford_deviation,
                                                 daily_quantile_drift,
-                                                ks_drift, psi_drift)
+                                                ks_drift, ks_drift_binned,
+                                                psi_drift)
     from ts_pymfe_spark.operators.trend import key_ols
 
     ev = _events(spark)
@@ -482,6 +483,8 @@ def test_drift_family_scans_are_column_pruned(spark):
     for df, cols in [
         (ks_drift(ev, grp), "user_id:bigint,event_type:string,value:double"),
         (psi_drift(ev, grp), "user_id:bigint,event_type:string,value:double"),
+        (ks_drift_binned(ev, grp),
+         "user_id:bigint,event_type:string,value:double"),
         (benford_deviation(ev), "event_type:string,value:double"),
         (daily_quantile_drift(ev), "ts:timestamp_ntz,value:double"),
         (key_ols(ev), "ts:timestamp_ntz,user_id:bigint,value:double"),

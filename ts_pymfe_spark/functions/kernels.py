@@ -264,9 +264,9 @@ def first_local_min(arr: np.ndarray) -> float:
 
 
 # ---------------------------------------------------------------------------
-# Decomposition (reference: _detrend.py — STL/SuperSmoother; here a
-# deterministic classical decomposition, documented divergence since
-# statsmodels/supersmoother are unavailable in this environment)
+# Decomposition (reference: _detrend.py — STL/SuperSmoother; here STL
+# re-derived in numpy, and a centered MA where the reference uses
+# SuperSmoother: statsmodels/supersmoother are not dependencies)
 # ---------------------------------------------------------------------------
 
 def _loess_plan(n: int, q: int, xeval: np.ndarray | None = None):
@@ -483,30 +483,6 @@ def stl_decompose(ts: np.ndarray, period: int, seasonal: int = 7,
         S = C[period: period + n] - L
         T = _band_apply(tl_op, x - S)
     return T, S, x - T - S
-
-
-def classical_decompose(ts: np.ndarray, period: int | None = None
-                        ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Classical MA + per-phase-means decomposition (the round-1
-    substitute, kept as the cheap fallback and as the comparison
-    baseline for the STL divergence test)."""
-    x = np.asarray(ts, dtype=float)
-    n = x.size
-    if period is None:
-        period = ts_period(x)
-    w = period if period and period > 1 else max(3, n // 10)
-    trend = _trend_ma(x, w)
-    det = x - trend
-    if period and period > 1:
-        phases = np.arange(n) % period
-        means = np.array([det[phases == p].mean() if np.any(phases == p) else 0.0
-                          for p in range(period)])
-        means = means - means.mean()
-        season = means[phases]
-    else:
-        season = np.zeros(n)
-    resid = x - trend - season
-    return trend, season, resid
 
 
 def _decompose_raw(ts: np.ndarray, period: int | None = None) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -24,8 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: value series derived 1:1 from turns (turn_rate is rollup-emergent)
-TURN_SERIES = ("text_len", "tool_flag")
+#: value series derived 1:1 from turns (turn_rate is rollup-emergent):
+#: name -> its Column (built on call: a Column needs an active session)
+_SERIES = {
+    "text_len": lambda: F.length("text").cast("double"),
+    "tool_flag": lambda: F.when(F.col("tool").isNotNull(), 1.0).otherwise(0.0),
+}
+TURN_SERIES = tuple(_SERIES)
 
 
 def derive_series(turns: DataFrame,
@@ -58,8 +63,7 @@ def derive_series(turns: DataFrame,
         "conv_id",
         "turn_idx",
         "ts",
-        F.length("text").cast("double").alias("text_len"),
-        F.when(F.col("tool").isNotNull(), 1.0).otherwise(0.0).alias("tool_flag"),
+        *[col().alias(name) for name, col in _SERIES.items()],
     )
     if partition_by:
         if partitions:
@@ -78,10 +82,7 @@ def derive_series(turns: DataFrame,
 
 def series_of(turns: DataFrame, series: str) -> DataFrame:
     """Single derived series as (conv_id, turn_idx, ts, value)."""
-    if series == "text_len":
-        v = F.length("text").cast("double")
-    elif series == "tool_flag":
-        v = F.when(F.col("tool").isNotNull(), 1.0).otherwise(0.0)
-    else:
+    if series not in _SERIES:
         raise ValueError(f"unknown turn-level series: {series}")
-    return turns.select("conv_id", "turn_idx", "ts", v.alias("value"))
+    return turns.select("conv_id", "turn_idx", "ts",
+                        _SERIES[series]().alias("value"))

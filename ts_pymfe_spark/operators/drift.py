@@ -2,14 +2,16 @@
 
 Engine additions (no reference counterpart — the reference computes
 whole-series meta-features over ONE population; production pipelines
-also need to compare TWO populations of the same metric): the three
-standard ML-monitoring drift screens, each as pure SQL so the DuckDB
-oracle reproduces every value bit-for-bit.
+also need to compare TWO populations of the same metric): the standard
+ML-monitoring drift screens, each as pure SQL so the DuckDB oracle
+reproduces every value bit-for-bit.
 
-* ``ks_drift``        — two-sample Kolmogorov-Smirnov D per key
+* ``ks_drift``        — exact two-sample Kolmogorov-Smirnov D per key
                         (Smirnov 1939; 5% two-sample gate c = 1.358,
                         the same Brownian-bridge constant as
                         ``cusum_changepoint``).
+* ``ks_drift_binned`` — the same screen over equal-width cells of each
+                        key's pooled range (the 100 TB default).
 * ``psi_drift``       — Population Stability Index over equal-width
                         bins anchored on the BASELINE population's
                         min/max (the industry scorecard-monitoring
@@ -19,15 +21,17 @@ oracle reproduces every value bit-for-bit.
                         the long-format companion to
                         ``profile.profile_table``.
 
-Scale shape: ``ks_drift``/``psi_drift`` are ONE exchange — every
-baseline statistic comes back as an UNBOUNDED per-key window over the
-already-partitioned rows, never an aggregate-plus-join-back (a
-self-join makes Spark re-derive the subplan — a second scan and a
-second shuffle of the raw rows — and puts per-key baseline tables on
-the broadcast side, which cannot broadcast at corpus-scale key
-domains; the same lesson as counters.mad_anomaly).  The group split is
-an arbitrary caller expression, so "last 7 days vs before" or "cohort
-A vs B" are both just a different ``grp`` column.
+Batch screens are reductions of ``drift_cells`` and the health
+partials: ``ks_drift_binned`` is ``ks_from_cells(drift_cells(...))``
+over the pooled per-key range, ``psi_drift`` is
+``psi_from_cells(drift_cells(...))`` over the baseline range, and
+``daily_drift`` is ``daily_health_from_partials(daily_health_partials
+(...))``.  The batch screen and the stored / streamed store share one
+binning, one aggregation and one verdict, so batch == stream holds by
+construction.  Only the exact ``ks_drift`` keeps its own per-row ECDF;
+its verdict is the shared ``_ks_verdict``.  The group split is an
+arbitrary caller expression, so "last 7 days vs before" or "cohort A
+vs B" are both just a different ``grp`` column.
 
 Numerics: counts are exact integers; every ratio is one IEEE-double
 division of exact integers, identical on any engine; outputs round to
@@ -127,7 +131,13 @@ def ks_drift(df: DataFrame, grp: Column, key: str = "event_type",
     agg = staged.groupBy(key).agg(
         F.max("_n0").alias("_n0"), F.max("_n1").alias("_n1"),
         F.max(gap).alias("_d"))
-    ok = (F.col("_n0") > 0) & (F.col("_n1") > 0)
+    return _ks_verdict(agg, key, (F.col("_n0") > 0) & (F.col("_n1") > 0))
+
+
+def _ks_verdict(agg: DataFrame, key: str, ok: Column) -> DataFrame:
+    """Per-key (_n0, _n1, _d) -> (key, n0, n1, ks_d, ks_crit, drifted):
+    D against the 5% large-sample critical value; keys failing ``ok``
+    (an empty side, a degenerate range) emit NULL verdicts."""
     n0d, n1d = F.col("_n0").cast("double"), F.col("_n1").cast("double")
     crit = F.lit(KS_C_5PCT) * F.sqrt((n0d + n1d) / (n0d * n1d))
     return agg.select(
@@ -190,7 +200,8 @@ def psi_drift(df: DataFrame, grp: Column, key: str = "event_type",
     populations contributes exactly 0 and is skipped).
 
     -> (key, n0, n1, psi); keys with an empty side or a degenerate
-    baseline range (min0 = max0) emit NULL psi.
+    baseline range (min0 = max0) emit NULL psi; a NULL key is scored
+    like any other.
 
     Binning convention: cell = floor((v - min0) / width), clamped to
     [0, bins-1]; values outside the baseline range land in the edge
@@ -198,61 +209,25 @@ def psi_drift(df: DataFrame, grp: Column, key: str = "event_type",
     floor of one IEEE division of identical doubles is identical on
     any engine, so the oracle reproduces every cell assignment.
 
-    Scale shape: raw rows NEVER shuffle — baseline min/max come from a
-    tiny separate aggregate broadcast back onto the stream (a per-key
-    window would serialize a hot key's rows through one task — the
-    ks_drift(buckets=) lesson, applied here late round 6), and the
+    Scale shape: ``drift_cells``' — raw rows NEVER shuffle; baseline
+    min/max come from a tiny separate aggregate broadcast back onto
+    the stream (a per-key window would serialize a hot key's rows
+    through one task — the ks_drift(buckets=) lesson), and the
     (key, cell) histogram partial-aggregates map-side, so every
     exchange carries O(bins) cells per key per map task.
     """
+    baseline = df.where(grp.cast("int") == 0)
+    cells = drift_cells(df, grp, _value_bounds(baseline, key, value_col),
+                        key, value_col, bins)
+    return psi_from_cells(cells, key, eps)
+
+
+def _value_bounds(df: DataFrame, key: str, value_col: str) -> DataFrame:
+    """(key, lo, hi): each key's non-NULL value range — the ``bounds``
+    relation ``drift_cells`` bins against."""
     v = F.col(value_col).cast("double")
-    rows = (df.where(v.isNotNull())
-            .select(F.col(key), v.alias("_v"),
-                    grp.cast("int").alias("_g")))
-    bounds = (rows.where(F.col("_g") == 0)
-              .groupBy(key).agg(F.min("_v").alias("_mn"),
-                                F.max("_v").alias("_mx")))
-    # LEFT join: a key with no baseline rows must still emit its
-    # (NULL-psi, n0 = 0) row, exactly as the window form did
-    staged = rows.join(F.broadcast(bounds), key, "left")
-    width = (F.col("_mx") - F.col("_mn")) / F.lit(float(bins))
-    cell = F.least(
-        F.lit(bins - 1),
-        F.greatest(F.lit(0),
-                   F.floor((F.col("_v") - F.col("_mn")) / width)
-                   .cast("int")))
-    per_cell = (staged
-                .withColumn("_cell", F.when(F.col("_mx") > F.col("_mn"),
-                                            cell))
-                .groupBy(key, "_cell")
-                .agg(F.sum(F.when(F.col("_g") == 0, 1).otherwise(0))
-                     .alias("_k0"),
-                     F.sum(F.when(F.col("_g") == 1, 1).otherwise(0))
-                     .alias("_k1")))
-    wk2 = Window.partitionBy(key)
-    tot = (per_cell
-           .withColumn("_n0", F.sum("_k0").over(wk2))
-           .withColumn("_n1", F.sum("_k1").over(wk2)))
-    # try_divide for the same ANSI empty-side reason as ks_drift;
-    # greatest() skips the NULL, and the ok guard nulls the key anyway
-    p0 = F.greatest(F.try_divide(F.col("_k0"), F.col("_n0")),
-                    F.lit(float(eps)))
-    p1 = F.greatest(F.try_divide(F.col("_k1"), F.col("_n1")),
-                    F.lit(float(eps)))
-    term = F.when(F.col("_cell").isNotNull()
-                  & ((F.col("_k0") > 0) | (F.col("_k1") > 0)),
-                  (p1 - p0) * F.log(p1 / p0)).otherwise(F.lit(0.0))
-    agg = tot.groupBy(key).agg(
-        F.max("_n0").alias("_n0"), F.max("_n1").alias("_n1"),
-        F.max(F.col("_cell").isNull().cast("int")).alias("_degen"),
-        F.sum(term).alias("_psi"))
-    ok = ((F.col("_n0") > 0) & (F.col("_n1") > 0)
-          & (F.col("_degen") == 0))
-    return agg.select(
-        F.col(key),
-        F.col("_n0").cast("long").alias("n0"),
-        F.col("_n1").cast("long").alias("n1"),
-        (F.round(F.when(ok, F.col("_psi")), 6) + F.lit(0.0)).alias("psi"))
+    return (df.where(v.isNotNull())
+            .groupBy(key).agg(F.min(v).alias("lo"), F.max(v).alias("hi")))
 
 
 def daily_drift(df: DataFrame, ts_col: str = "ts",
@@ -267,38 +242,11 @@ def daily_drift(df: DataFrame, ts_col: str = "ts",
     window runs over O(days x columns) rows, not raw events.
 
     Scale shape: the unpivot is a narrow Expand-free stack; one
-    exchange aggregates raw rows by (day, column); the day-over-day
+    exchange aggregates raw rows by (day, column) into the health
+    partials, whose merge reuses that partitioning; the day-over-day
     window is a second exchange over the tiny aggregate only.
     """
-    day = F.date_trunc("day", F.col(ts_col)).cast("date").alias("_day")
-    stacked = df.select(
-        day,
-        F.explode(F.array(*[
-            F.struct(F.lit(c).alias("_col"),
-                     F.col(c).cast("double").alias("_v"))
-            for c in cols])).alias("_s"),
-    ).select("_day", "_s._col", "_s._v")
-    agg = stacked.groupBy("_day", "_col").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("_v").isNull().cast("long")).alias("n_null"),
-        F.round(F.avg("_v"), 6).alias("_mean"),
-        F.min("_v").alias("min_v"),
-        F.max("_v").alias("max_v"))
-    wd = Window.partitionBy("_col").orderBy("_day")
-    return (agg
-            .withColumn("_prev", F.lag("_mean").over(wd))
-            .select(
-                F.col("_day").cast("string").alias("day"),
-                F.col("_col").alias("col_name"),
-                "n",
-                "n_null",
-                (F.round(F.col("n_null") / F.col("n"), 6)
-                 + F.lit(0.0)).alias("null_frac"),
-                (F.col("_mean") + F.lit(0.0)).alias("mean_v"),
-                "min_v",
-                "max_v",
-                (F.round(F.col("_mean") - F.col("_prev"), 6)
-                 + F.lit(0.0)).alias("dod_mean_delta")))
+    return daily_health_from_partials(daily_health_partials(df, ts_col, cols))
 
 
 #: Benford first-digit probabilities log10(1 + 1/d), embedded as
@@ -479,12 +427,11 @@ def daily_quantile_drift(df: DataFrame, ts_col: str = "ts",
 def ks_drift_binned(df: DataFrame, grp: Column, key: str = "event_type",
                     value_col: str = "value",
                     bins: int = 256) -> DataFrame:
-    """Binned two-sample KS — the 100 TB-default member of the KS
-    trilogy (exact single-window ks_drift; exact distributed
-    ks_drift(buckets=B); THIS, the sketch-shaped approximation): both
-    populations histogram into ``bins`` equal-width cells over the
-    key's pooled range, and D is the max gap of the binned ECDFs at
-    cell boundaries.
+    """Binned two-sample KS over each key's pooled range — the 100
+    TB-default KS (the exact screens are ks_drift and its distributed
+    ks_drift(buckets=B) form): ``ks_from_cells`` over ``drift_cells``
+    with ``bins`` equal-width cells spanning the key's pooled min/max,
+    so D is the max gap of the binned ECDFs at cell boundaries.
 
     Approximation contract: D_binned <= D_exact, and the gap is at
     most the largest single-cell probability mass — at 256 cells a
@@ -496,59 +443,17 @@ def ks_drift_binned(df: DataFrame, grp: Column, key: str = "event_type",
 
     -> (key, n0, n1, ks_d, ks_crit, drifted) — same schema as
     ks_drift; keys with an empty side or a degenerate pooled range
-    emit NULL verdicts.
+    emit NULL verdicts; NULL keys emit no row.
 
-    Scale shape: pooled per-key bounds via a tiny broadcast aggregate
-    (never a per-key window — the bucketed-ks lesson); the (key, cell)
-    histogram partial-aggregates map-side; the cumulative runs over
-    the O(bins)-row ledger per key.
+    Scale shape: ``drift_cells``' — pooled per-key bounds via a tiny
+    broadcast aggregate (never a per-key window — the bucketed-ks
+    lesson); the (key, cell) histogram partial-aggregates map-side;
+    the cumulative runs over the O(bins)-row ledger per key.
     """
-    v = F.col(value_col).cast("double")
-    rows = (df.where(v.isNotNull())
-            .select(F.col(key), v.alias("_v"),
-                    grp.cast("int").alias("_g")))
-    bounds = rows.groupBy(key).agg(F.min("_v").alias("_bmn"),
-                                   F.max("_v").alias("_bmx"))
-    r = rows.join(F.broadcast(bounds), key)
-    width = (F.col("_bmx") - F.col("_bmn")) / F.lit(float(bins))
-    cell = F.when(
-        F.col("_bmx") > F.col("_bmn"),
-        F.least(F.lit(bins - 1),
-                F.floor((F.col("_v") - F.col("_bmn")) / width)
-                .cast("int")))
-    cells = (r.withColumn("_cell", cell)
-             .groupBy(key, "_cell")
-             .agg(F.sum(F.when(F.col("_g") == 0, 1).otherwise(0))
-                  .alias("_k0"),
-                  F.sum(F.when(F.col("_g") == 1, 1).otherwise(0))
-                  .alias("_k1")))
-    wcum = (Window.partitionBy(key).orderBy("_cell")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    wk = Window.partitionBy(key)
-    staged = (cells
-              .withColumn("_c0", F.sum("_k0").over(wcum))
-              .withColumn("_c1", F.sum("_k1").over(wcum))
-              .withColumn("_n0", F.sum("_k0").over(wk))
-              .withColumn("_n1", F.sum("_k1").over(wk)))
-    gap = F.when(
-        F.col("_cell").isNotNull(),
-        F.abs(F.try_divide(F.col("_c0"), F.col("_n0"))
-              - F.try_divide(F.col("_c1"), F.col("_n1"))))
-    agg = staged.groupBy(key).agg(
-        F.max("_n0").alias("_n0"), F.max("_n1").alias("_n1"),
-        F.max(F.col("_cell").isNull().cast("int")).alias("_degen"),
-        F.max(gap).alias("_d"))
-    ok = ((F.col("_n0") > 0) & (F.col("_n1") > 0)
-          & (F.col("_degen") == 0))
-    n0d, n1d = F.col("_n0").cast("double"), F.col("_n1").cast("double")
-    crit = F.lit(KS_C_5PCT) * F.sqrt((n0d + n1d) / (n0d * n1d))
-    return agg.select(
-        F.col(key),
-        F.col("_n0").cast("long").alias("n0"),
-        F.col("_n1").cast("long").alias("n1"),
-        (F.round(F.when(ok, F.col("_d")), 6) + F.lit(0.0)).alias("ks_d"),
-        (F.round(F.when(ok, crit), 6) + F.lit(0.0)).alias("ks_crit"),
-        F.when(ok, F.col("_d") > crit).alias("drifted"))
+    df = df.where(F.col(key).isNotNull())
+    cells = drift_cells(df, grp, _value_bounds(df, key, value_col),
+                        key, value_col, bins)
+    return ks_from_cells(cells, key)
 
 
 # ---------------------------------------------------------------------------
@@ -567,7 +472,8 @@ def drift_cells(df: DataFrame, grp: Column, bounds: DataFrame,
 
     Out-of-range values clamp into the edge cells (shifted mass is
     exactly what drift must see); keys absent from ``bounds`` or with
-    lo >= hi emit cell NULL (degenerate, surfaced by the reducers).
+    lo >= hi emit cell NULL (degenerate, surfaced by the reducers).  A
+    NULL key matches a NULL-keyed bounds row (null-safe join).
 
     Scale shape: bounds broadcast; the (key, cell) count
     partial-aggregates map-side — O(bins) cells per key per map task,
@@ -577,9 +483,12 @@ def drift_cells(df: DataFrame, grp: Column, bounds: DataFrame,
     rows = (df.where(v.isNotNull())
             .select(F.col(key), v.alias("_v"),
                     grp.cast("int").alias("_g")))
-    b = bounds.select(F.col(key), F.col("lo").cast("double").alias("_lo"),
+    b = bounds.select(F.col(key).alias("_bkey"),
+                      F.col("lo").cast("double").alias("_lo"),
                       F.col("hi").cast("double").alias("_hi"))
-    r = rows.join(F.broadcast(b), key, "left")
+    # null-safe: a NULL key bins against its own (NULL-keyed) bounds
+    r = rows.join(F.broadcast(b), F.col(key).eqNullSafe(F.col("_bkey")),
+                  "left")
     width = (F.col("_hi") - F.col("_lo")) / F.lit(float(bins))
     cell = F.when(
         F.col("_hi") > F.col("_lo"),
@@ -608,8 +517,8 @@ def drift_cells_merge(*cells: DataFrame) -> DataFrame:
 
 def ks_from_cells(cells: DataFrame, key: str = "event_type") -> DataFrame:
     """Binned two-sample KS verdicts from a (merged) cell table —
-    identical output schema and semantics to ``ks_drift_binned`` given
-    the same cells.  All arithmetic over the O(bins) ledger."""
+    ``ks_drift_binned``'s reduction, with ks_drift's output schema.
+    All arithmetic over the O(bins) ledger."""
     wcum = (Window.partitionBy(key).orderBy("cell")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     wk = Window.partitionBy(key)
@@ -626,24 +535,15 @@ def ks_from_cells(cells: DataFrame, key: str = "event_type") -> DataFrame:
         F.max("_n0").alias("_n0"), F.max("_n1").alias("_n1"),
         F.max(F.col("cell").isNull().cast("int")).alias("_degen"),
         F.max(gap).alias("_d"))
-    ok = ((F.col("_n0") > 0) & (F.col("_n1") > 0)
-          & (F.col("_degen") == 0))
-    n0d, n1d = F.col("_n0").cast("double"), F.col("_n1").cast("double")
-    crit = F.lit(KS_C_5PCT) * F.sqrt((n0d + n1d) / (n0d * n1d))
-    return agg.select(
-        F.col(key),
-        F.col("_n0").cast("long").alias("n0"),
-        F.col("_n1").cast("long").alias("n1"),
-        (F.round(F.when(ok, F.col("_d")), 6) + F.lit(0.0)).alias("ks_d"),
-        (F.round(F.when(ok, crit), 6) + F.lit(0.0)).alias("ks_crit"),
-        F.when(ok, F.col("_d") > crit).alias("drifted"))
+    return _ks_verdict(agg, key, (F.col("_n0") > 0) & (F.col("_n1") > 0)
+                       & (F.col("_degen") == 0))
 
 
 def psi_from_cells(cells: DataFrame, key: str = "event_type",
                    eps: float = 1e-6) -> DataFrame:
     """PSI verdicts from a (merged) cell table — psi_drift's
-    reduction over stored cells (fixed-bounds binning instead of
-    baseline-anchored, the streaming-compatible convention)."""
+    reduction (there over baseline-anchored bounds; over stored cells,
+    the fixed bounds are the streaming-compatible convention)."""
     wk = Window.partitionBy(key)
     tot = (cells
            .withColumn("_n0", F.sum("k0").over(wk))
